@@ -20,7 +20,7 @@ Layout on disk (the WAL/checkpoint state machine of
 src/datanode/handler.py:156-219, as immutable Parquet):
 
     <root>/changelog/   append-only op rows (op, key, vector, metadata, ts, seq)
-    <root>/snapshot/v=N versioned compacted snapshots
+    <root>/snapshot/v=N compacted snapshot versions (versioned.py)
 
 Reads resolve snapshot ∪ compacted-changelog-tail — exactly the
 reference's checkpoint + incremental WAL replay (SURVEY §3.4). At
@@ -52,7 +52,10 @@ from distributed_vector_database_spark.operators.changelog import (
     apply_changelog,
 )
 from distributed_vector_database_spark.operators.knn import knn_exact
-from distributed_vector_database_spark.streaming.compaction import latest_version
+from distributed_vector_database_spark import versioned
+
+# a module-level name, so a tracer can rebind this module's lookups
+from distributed_vector_database_spark.versioned import latest_version
 
 STATE_COLS = ["key", "vector", "metadata", "ts"]
 LOG_SCHEMA = (
@@ -369,17 +372,11 @@ class VectorStore:
             return apply_changelog(
                 base, log.select("op", *STATE_COLS, "seq"), seq_col="seq"
             ).select(*STATE_COLS)
-        v = latest_version(self._snap_dir) - 1
-        while v >= 0:
-            try:
-                cand = self.spark.read.parquet(f"{self._snap_dir}/v={v}")
-            except Exception:  # vacuumed version — keep walking back
-                v -= 1
-                continue
+        for v in reversed(versioned.committed_versions(self._snap_dir)[:-1]):
+            cand = self.spark.read.parquet(f"{self._snap_dir}/v={v}")
             mx = cand.agg(F.max("ts").alias("m")).first()["m"]
             if mx is None or mx <= ts:
                 return cand.select(*STATE_COLS)
-            v -= 1
         return self.spark.createDataFrame(
             [],
             "key string, vector array<double>, "
@@ -517,18 +514,16 @@ class VectorStore:
         v = latest_version(data_dir)
         if v < 0:
             return 0
-        try:
-            row = self.spark.read.parquet(f"{meta_dir}/v={v}").collect()[0]
-            return int(row["log_ops_at_build"])
-        except Exception:
-            return 0
+        row = self.spark.read.parquet(f"{meta_dir}/v={v}").collect()[0]
+        return int(row["log_ops_at_build"])
 
     def rebuild_index(
         self, n_centroids: int | str = 16, seed: int = 42
     ) -> int:
         """Full index rebuild from compacted state (O14 analog for the
-        ANN side). Writes version v+1 of the centroid-partitioned layout
-        + the centroid table; returns the new version.
+        ANN side). Writes version v+1 of the centroid-partitioned layout,
+        the centroid table and the build meta, and commits v+1 only once
+        all three are written; returns the new version.
 
         n_centroids="auto" sizes the quantizer from the corpus
         (ivf_build_auto: sqrt-n cells, sampled training, fat-cell
@@ -564,6 +559,7 @@ class VectorStore:
             [(log_ops, int(time.time() * 1000))],
             "log_ops_at_build long, built_at_ms long",
         ).coalesce(1).write.mode("overwrite").parquet(f"{meta_dir}/v={v}")
+        versioned.commit(data_dir, v)
         return v
 
     def _index_centroids(self) -> tuple[int, list[tuple[int, list[float]]]]:
@@ -710,6 +706,7 @@ class VectorStore:
             m=m,
             ef_construction=ef_construction,
         )
+        versioned.commit(hnsw_dir, v)
         return v
 
     def hnsw_search(
@@ -830,34 +827,22 @@ class VectorStore:
 
     def vacuum(self, keep_last: int = 2) -> int:
         """Retention GC: drop snapshot and index versions older than
-        the newest `keep_last` of each. Old versions exist only to
-        serve time travel (diff_versions) — at 100 TB they are the
-        dominant storage cost, and the reference keeps exactly ONE
-        checkpoint (src/datanode/handler.py:160-176 overwrites the
-        checkpoint path in place); `keep_last` generalizes that to a
-        bounded history. Serving reads only the newest version, so
+        the newest `keep_last` committed ones of each. Old versions
+        exist only to serve time travel (diff_versions) — at 100 TB
+        they are the dominant storage cost, and the reference keeps
+        exactly ONE checkpoint (src/datanode/handler.py:160-176
+        overwrites the checkpoint path in place); `keep_last`
+        generalizes that to a bounded history. Serving reads only the newest version, so
         vacuum never affects query results (pinned in tests). Returns
         the number of version directories removed."""
-        import re as _re
-        import shutil as _shutil
-
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1")
-        removed = 0
         data_dir, cent_dir, meta_dir = self._index_dirs()
-        hnsw_dir = os.path.join(self.root, "hnsw_index")
-        for d in (self._snap_dir, data_dir, cent_dir, meta_dir, hnsw_dir):
-            if not os.path.isdir(d):
-                continue
-            versions = sorted(
-                int(m.group(1))
-                for f in os.listdir(d)
-                if (m := _re.fullmatch(r"v=(\d+)", f))
-            )
-            for v in versions[:-keep_last]:
-                _shutil.rmtree(os.path.join(d, f"v={v}"), ignore_errors=True)
-                removed += 1
-        return removed
+        return (
+            versioned.vacuum(self._snap_dir, keep_last)
+            + versioned.vacuum(data_dir, keep_last, siblings=(cent_dir, meta_dir))
+            + versioned.vacuum(os.path.join(self.root, "hnsw_index"), keep_last)
+        )
 
     def compact(self) -> int:
         """Fold the change-log into the next snapshot version
@@ -897,6 +882,7 @@ class VectorStore:
             .write.mode("overwrite")
             .parquet(f"{self._snap_dir}/v={v}")
         )
+        versioned.commit(self._snap_dir, v)
         # truncate the applied log (the WAL GC of src/utils/wal_manager.py:22-23)
         import shutil
 

@@ -10,7 +10,8 @@ Spark flow: readStream over the change-log directory (the WAL), and
 foreachBatch applies each micro-batch onto the compacted snapshot via
 the SAME `apply_changelog` used in batch — exactly-once via the
 streaming checkpointLocation (the WAL-position file, wal_pos.txt at
-src/datanode/handler.py:170, for free).
+src/datanode/handler.py:170, for free) plus the versioned fold
+(versioned.py).
 
 Scale: the snapshot rewrite per micro-batch is the simple-and-correct
 form; at 100 TB you swap the sink for a merge-on-read table format —
@@ -21,30 +22,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from distributed_vector_database_spark import versioned
 from distributed_vector_database_spark.operators.changelog import apply_changelog
 
 CHANGELOG_SCHEMA = "op string, key string, value double, ts long, seq long"
 
 
-def latest_version(path: str) -> int:
-    """Newest snapshot version under a versioned snapshot dir (-1 if
-    none) — the analog of picking the newest checkpoint_<ts> dir
-    (src/datanode/handler.py:185-190)."""
-    import os
-
-    try:
-        versions = [int(d.split("=")[1]) for d in os.listdir(path) if d.startswith("v=")]
-        return max(versions) if versions else -1
-    except FileNotFoundError:
-        return -1
-
-
 def read_latest_snapshot(spark: SparkSession, snapshot_dir: str) -> DataFrame:
-    """Load the newest compacted snapshot."""
-    v = latest_version(snapshot_dir)
-    if v < 0:
-        raise FileNotFoundError(f"no snapshot versions under {snapshot_dir}")
-    return spark.read.parquet(f"{snapshot_dir}/v={v}")
+    """Load the newest committed compacted snapshot."""
+    return versioned.read_latest(spark, snapshot_dir)
 
 
 def read_changelog_stream(
@@ -70,23 +56,17 @@ def run_compaction_stream(
         # src/datanode/handler.py:156-179): write v=N+1 from v=N + batch,
         # never read and overwrite the same files. Fully distributed —
         # nothing is collected to the driver.
-        spark_ = batch.sparkSession
-        v = latest_version(snapshot_dir)
-        if v >= 0:
-            base = spark_.read.parquet(f"{snapshot_dir}/v={v}")
-        else:
-            base = spark_.createDataFrame(
-                [], "key string, value double, ts long, seq long"
-            )
-        new_state = apply_changelog(
-            base, batch, key_col="key", ts_col="ts", op_col="op", seq_col="seq"
-        )
-        new_state.write.mode("overwrite").parquet(f"{snapshot_dir}/v={v + 1}")
+        def step(v: int, new_v: int) -> None:
+            if v >= 0:
+                base = batch.sparkSession.read.parquet(f"{snapshot_dir}/v={v}")
+            else:
+                base = batch.sparkSession.createDataFrame(
+                    [], "key string, value double, ts long, seq long"
+                )
+            apply_changelog(
+                base, batch, key_col="key", ts_col="ts", op_col="op", seq_col="seq"
+            ).write.mode("overwrite").parquet(f"{snapshot_dir}/v={new_v}")
 
-    stream = read_changelog_stream(spark, log_dir, schema)
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+        versioned.fold(snapshot_dir, batch_id, step)
+
+    return versioned.run_file_stream(spark, log_dir, schema, fold, checkpoint_dir)

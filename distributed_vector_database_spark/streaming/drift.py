@@ -22,6 +22,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from distributed_vector_database_spark import versioned
+
 VECS_SCHEMA = "vec_id long, embedding array<double>"
 _EPS = 1e-12
 
@@ -158,13 +160,6 @@ def run_drift_stream(
     {state_dir}/reports/batch=N. Replayed batch_ids overwrite their
     own file and report idempotently (same data, same moments)."""
     fold = build_drift_fold(state_dir, vec_col=vec_col, z_alert=z_alert)
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.json(vecs_dir)
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return versioned.run_file_stream(
+        spark, vecs_dir, schema, fold, checkpoint_dir, max_files_per_trigger
     )

@@ -11,12 +11,11 @@ Additivity decides the state per expectation kind:
   shape, |keys|-sized, merged additively per key — and derives
   violations = Σ(count-1) at read time.
 
-Same replay-safe write-audit-publish versioned fold as the other
-maintained states (streaming/lexical_stats.py): the batch_id marker
-makes at-least-once foreachBatch delivery exactly-once. Folding N
-batches then reading the snapshot is hash-equal to the one-shot
-data_quality_report over the union — pinned by the `dq_served`
-contract query and tests/test_expectations_stream.py.
+The replay-safe versioned fold (versioned.py) makes at-least-once
+foreachBatch delivery exactly-once. Folding N batches then reading the
+snapshot is hash-equal to the one-shot data_quality_report over the
+union — pinned by the `dq_served` contract query and
+tests/test_expectations_stream.py.
 """
 
 from __future__ import annotations
@@ -24,11 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from distributed_vector_database_spark.streaming.compaction import latest_version
-from distributed_vector_database_spark.streaming.lexical_stats import (
-    _applied_batch,
-    _write_marker,
-)
+from distributed_vector_database_spark import versioned
 
 
 def _batch_rule_counts(
@@ -87,40 +82,37 @@ def build_dq_fold(
     """foreachBatch body maintaining {state_dir}/counts/v=N (additive
     rule violations) and, when unique_cols is set,
     {state_dir}/keys/v=N (per-key row counts). fk =
-    (child_col, parent_df, parent_col, rule_name)."""
+    (child_col, parent_df, parent_col, rule_name). Both are published
+    under the counts directory's marker."""
+    cdir, kdir = f"{state_dir}/counts", f"{state_dir}/keys"
 
     def fold(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
             return
         spark_ = batch.sparkSession
-        cdir, kdir = f"{state_dir}/counts", f"{state_dir}/keys"
-        v = latest_version(cdir)
-        if v >= 0:
-            applied = _applied_batch(cdir, v)
-            if applied == batch_id:
-                return
-            if applied is None:
-                v -= 1
-        counts = _batch_rule_counts(batch, rules, fk)
-        if v >= 0:
-            counts = (
-                counts.unionByName(spark_.read.parquet(f"{cdir}/v={v}"))
-                .groupBy("rule")
-                .agg(F.sum("violations").alias("violations"))
-            )
-        if unique_cols:
-            keys = batch.groupBy(*unique_cols).agg(
-                F.count(F.lit(1)).alias("kn")
-            )
+
+        def step(v: int, new_v: int) -> None:
+            counts = _batch_rule_counts(batch, rules, fk)
             if v >= 0:
-                keys = (
-                    keys.unionByName(spark_.read.parquet(f"{kdir}/v={v}"))
-                    .groupBy(*unique_cols)
-                    .agg(F.sum("kn").alias("kn"))
+                counts = (
+                    counts.unionByName(spark_.read.parquet(f"{cdir}/v={v}"))
+                    .groupBy("rule")
+                    .agg(F.sum("violations").alias("violations"))
                 )
-            keys.write.mode("overwrite").parquet(f"{kdir}/v={v + 1}")
-        counts.write.mode("overwrite").parquet(f"{cdir}/v={v + 1}")
-        _write_marker(cdir, v + 1, batch_id)
+            if unique_cols:
+                keys = batch.groupBy(*unique_cols).agg(
+                    F.count(F.lit(1)).alias("kn")
+                )
+                if v >= 0:
+                    keys = (
+                        keys.unionByName(spark_.read.parquet(f"{kdir}/v={v}"))
+                        .groupBy(*unique_cols)
+                        .agg(F.sum("kn").alias("kn"))
+                    )
+                keys.write.mode("overwrite").parquet(f"{kdir}/v={new_v}")
+            counts.write.mode("overwrite").parquet(f"{cdir}/v={new_v}")
+
+        versioned.fold(cdir, batch_id, step)
 
     return fold
 
@@ -131,12 +123,10 @@ def read_dq_report(
     unique_cols: list[str] | None = None,
     unique_rule: str = "unique",
 ) -> DataFrame:
-    """Serve (rule, violations, passed) from the newest fully-published
+    """Serve (rule, violations, passed) from the newest committed
     snapshot; uniqueness derived from the key-count state at read time."""
     cdir, kdir = f"{state_dir}/counts", f"{state_dir}/keys"
-    v = latest_version(cdir)
-    if v >= 0 and _applied_batch(cdir, v) is None:
-        v -= 1
+    v = versioned.latest_version(cdir)
     if v < 0:
         raise FileNotFoundError(f"no dq state under {state_dir}")
     out = spark.read.parquet(f"{cdir}/v={v}")

@@ -5,12 +5,8 @@ A 100 TB event store cannot re-walk every user's history per batch to
 answer "how far is each user through view -> click -> purchase"; it
 maintains TWO fields of state per user — (current step, timestamp of
 its last match) — and folds each micro-batch of new events on top.
-The fold is the same replay-safe versioned pattern as the BM25 term
-stats and the windowed rollup (streaming/lexical_stats.py,
-streaming/rollup.py): each version carries a batch_id marker, so
-at-least-once foreachBatch delivery becomes exactly-once state, and
-an interrupted write (version dir present, marker absent) is ignored
-by readers and safely overwritten on replay.
+The fold is the replay-safe versioned fold (versioned.py), so
+at-least-once foreachBatch delivery becomes exactly-once state.
 
 Unlike the additive rollup, the funnel walk is ORDER-SENSITIVE:
 fold(b1); fold(b2) equals the one-shot batch funnel precisely when
@@ -34,11 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from distributed_vector_database_spark.streaming.compaction import latest_version
-from distributed_vector_database_spark.streaming.lexical_stats import (
-    _applied_batch,
-    _write_marker,
-)
+from distributed_vector_database_spark import versioned
 
 _EPOCH = "1900-01-01 00:00:00"
 
@@ -105,14 +97,8 @@ def funnel_state_delta(
 
 
 def read_latest_funnel_state(spark: SparkSession, state_dir: str) -> DataFrame:
-    """Newest PUBLISHED state version (marker present); a version dir
-    whose marker is missing is an interrupted write and is skipped."""
-    v = latest_version(state_dir)
-    if v >= 0 and _applied_batch(state_dir, v) is None:
-        v -= 1
-    if v < 0:
-        raise FileNotFoundError(f"no funnel state versions under {state_dir}")
-    return spark.read.parquet(f"{state_dir}/v={v}")
+    """Newest committed state version."""
+    return versioned.read_latest(spark, state_dir)
 
 
 def build_funnel_fold(
@@ -124,28 +110,24 @@ def build_funnel_fold(
 ):
     """foreachBatch body: fold one micro-batch into a new state
     version, skipping at-least-once replays via the batch_id marker
-    (a replayed or interrupted batch overwrites the same next version,
-    so recovery state is bit-identical to the one-shot fold)."""
+    (an interrupted batch overwrites the same next version, so
+    recovery state is bit-identical to the one-shot fold)."""
 
     def fold(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
             return
-        spark_ = batch.sparkSession
-        v = latest_version(state_dir)
-        if v >= 0:
-            applied = _applied_batch(state_dir, v)
-            if applied == batch_id:
-                return
-            if applied is None:
-                v -= 1
-        prior = (
-            spark_.read.parquet(f"{state_dir}/v={v}") if v >= 0 else None
-        )
-        new_state = funnel_state_delta(
-            batch, prior, steps, user_col, ts_col, type_col
-        )
-        new_state.write.mode("overwrite").parquet(f"{state_dir}/v={v + 1}")
-        _write_marker(state_dir, v + 1, batch_id)
+
+        def step(v: int, new_v: int) -> None:
+            prior = (
+                batch.sparkSession.read.parquet(f"{state_dir}/v={v}")
+                if v >= 0
+                else None
+            )
+            funnel_state_delta(
+                batch, prior, steps, user_col, ts_col, type_col
+            ).write.mode("overwrite").parquet(f"{state_dir}/v={new_v}")
+
+        versioned.fold(state_dir, batch_id, step)
 
     return fold
 
@@ -183,13 +165,6 @@ def run_funnel_stream(
     """Continuously maintain funnel state over arriving JSON events.
     Returns the StreamingQuery."""
     fold = build_funnel_fold(state_dir, steps)
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.json(events_dir)
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return versioned.run_file_stream(
+        spark, events_dir, schema, fold, checkpoint_dir, max_files_per_trigger
     )

@@ -6,10 +6,8 @@ sketch union is register-wise MAX (operators/sketch.hll_merge). MAX is
 associative, commutative, and IDEMPOTENT — unlike the additive folds
 (streaming/lexical_stats.py term counts, streaming/expectations.py
 violation counts), replaying a micro-batch cannot corrupt this state.
-The versioned write-audit-publish shape and the `_applied_batch_id`
-marker are kept anyway: the marker skips wasted re-merges on replay,
-the versioning keeps readers off half-written snapshots, and the whole
-family stays one discipline (same crash-recovery tests apply).
+It still uses the versioned fold (versioned.py): replays skip a wasted
+re-merge and readers never see a half-written snapshot.
 
 At 100 TB this is the distinct-count story: per-batch register tables
 are m-bounded regardless of batch size, the fold is O(m) per batch,
@@ -23,14 +21,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from distributed_vector_database_spark import versioned
 from distributed_vector_database_spark.operators.sketch import (
     hll_merge,
     hll_registers,
-)
-from distributed_vector_database_spark.streaming.compaction import latest_version
-from distributed_vector_database_spark.streaming.lexical_stats import (
-    _applied_batch,
-    _write_marker,
 )
 
 EVENTS_SCHEMA = "event_id long, ts timestamp, user_id long, event_type string"
@@ -43,37 +37,23 @@ def build_hll_fold(state_dir: str, key_col: str, p: int = 6):
     def fold(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
             return
-        spark_ = batch.sparkSession
-        v = latest_version(state_dir)
-        if v >= 0:
-            applied = _applied_batch(state_dir, v)
-            if applied == batch_id:
-                # replay after a crash between marker and checkpoint
-                # commit: merging again would be CORRECT (max is
-                # idempotent) but wasted — skip like the family does
-                return
-            if applied is None:
-                # interrupted write: base on the last complete version
-                v -= 1
-        fresh = hll_registers(batch, key_col, p)
-        if v >= 0:
-            base = spark_.read.parquet(f"{state_dir}/v={v}")
-            fresh = hll_merge(base, fresh)
-        fresh.write.mode("overwrite").parquet(f"{state_dir}/v={v + 1}")
-        _write_marker(state_dir, v + 1, batch_id)
+
+        def step(v: int, new_v: int) -> None:
+            fresh = hll_registers(batch, key_col, p)
+            if v >= 0:
+                base = batch.sparkSession.read.parquet(f"{state_dir}/v={v}")
+                fresh = hll_merge(base, fresh)
+            fresh.write.mode("overwrite").parquet(f"{state_dir}/v={new_v}")
+
+        versioned.fold(state_dir, batch_id, step)
 
     return fold
 
 
 def read_latest_registers(spark: SparkSession, state_dir: str) -> DataFrame:
-    """Newest COMPLETE maintained register snapshot, (bucket, register)
+    """Newest committed maintained register snapshot, (bucket, register)
     sorted by bucket."""
-    v = latest_version(state_dir)
-    if v >= 0 and _applied_batch(state_dir, v) is None:
-        v -= 1
-    if v < 0:
-        raise FileNotFoundError(f"no register versions under {state_dir}")
-    return spark.read.parquet(f"{state_dir}/v={v}").orderBy("bucket")
+    return versioned.read_latest(spark, state_dir).orderBy("bucket")
 
 
 def run_hll_stream(
@@ -89,15 +69,6 @@ def run_hll_stream(
     """Continuously fold arriving events' keys into the maintained
     register snapshot. Returns the StreamingQuery."""
     fold = build_hll_fold(state_dir, key_col, p)
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option(
-            "maxFilesPerTrigger", str(max_files_per_trigger)
-        )
-    stream = reader.json(events_dir)
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return versioned.run_file_stream(
+        spark, events_dir, schema, fold, checkpoint_dir, max_files_per_trigger
     )

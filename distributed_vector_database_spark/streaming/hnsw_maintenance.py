@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from distributed_vector_database_spark import versioned
 from distributed_vector_database_spark.operators.hnsw import (
     _read_tombstones,
     hnsw_append,
@@ -65,15 +66,8 @@ def run_hnsw_stream(
             batch_id=batch_id,
         )
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.json(vecs_dir)
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return versioned.run_file_stream(
+        spark, vecs_dir, schema, fold, checkpoint_dir, max_files_per_trigger
     )
 
 
@@ -156,13 +150,6 @@ def run_hnsw_changelog_stream(
         index_dir, key_col=key_col, vec_col=vec_col,
         compact_threshold=compact_threshold,
     )
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.json(changelog_dir)
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return versioned.run_file_stream(
+        spark, changelog_dir, schema, fold, checkpoint_dir, max_files_per_trigger
     )

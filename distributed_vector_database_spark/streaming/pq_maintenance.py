@@ -18,6 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from distributed_vector_database_spark import versioned
 from distributed_vector_database_spark.operators.quantization import pq_append
 
 VECS_SCHEMA = "vec_id long, embedding array<double>"
@@ -44,13 +45,6 @@ def run_pq_stream(
             batch_id=batch_id,
         )
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.json(vecs_dir)
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return versioned.run_file_stream(
+        spark, vecs_dir, schema, fold, checkpoint_dir, max_files_per_trigger
     )

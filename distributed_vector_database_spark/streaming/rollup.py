@@ -3,8 +3,7 @@
 A 100 TB event store cannot re-scan history to answer "events per
 hour by type"; it maintains the answer. The rollup table
 (window_start, key..., n, sum_value) is ADDITIVE and mergeable, so
-maintenance is the same replay-safe versioned fold as the BM25
-term-stats and span-gram states (streaming/lexical_stats.py — the
+maintenance is the replay-safe versioned fold (versioned.py — the
 batch_id marker makes at-least-once foreachBatch exactly-once);
 serving reads the tiny newest snapshot instead of the event history.
 
@@ -17,11 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from distributed_vector_database_spark.streaming.compaction import latest_version
-from distributed_vector_database_spark.streaming.lexical_stats import (
-    _applied_batch,
-    _write_marker,
-)
+from distributed_vector_database_spark import versioned
 
 EVENTS_SCHEMA = "event_id long, ts timestamp, user_id long, event_type string, value double"
 
@@ -57,12 +52,7 @@ def merge_rollup(base: DataFrame, delta: DataFrame) -> DataFrame:
 
 
 def read_latest_rollup(spark: SparkSession, rollup_dir: str) -> DataFrame:
-    v = latest_version(rollup_dir)
-    if v >= 0 and _applied_batch(rollup_dir, v) is None:
-        v -= 1
-    if v < 0:
-        raise FileNotFoundError(f"no rollup versions under {rollup_dir}")
-    return spark.read.parquet(f"{rollup_dir}/v={v}")
+    return versioned.read_latest(spark, rollup_dir)
 
 
 def build_rollup_fold(
@@ -77,21 +67,16 @@ def build_rollup_fold(
     def fold(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
             return
-        spark_ = batch.sparkSession
-        v = latest_version(rollup_dir)
-        if v >= 0:
-            applied = _applied_batch(rollup_dir, v)
-            if applied == batch_id:
-                return
-            if applied is None:
-                v -= 1
-        fresh = window_rollup(batch, granularity, ts_col, keys)
-        if v >= 0:
-            fresh = merge_rollup(
-                spark_.read.parquet(f"{rollup_dir}/v={v}"), fresh
-            )
-        fresh.write.mode("overwrite").parquet(f"{rollup_dir}/v={v + 1}")
-        _write_marker(rollup_dir, v + 1, batch_id)
+
+        def step(v: int, new_v: int) -> None:
+            fresh = window_rollup(batch, granularity, ts_col, keys)
+            if v >= 0:
+                fresh = merge_rollup(
+                    batch.sparkSession.read.parquet(f"{rollup_dir}/v={v}"), fresh
+                )
+            fresh.write.mode("overwrite").parquet(f"{rollup_dir}/v={new_v}")
+
+        versioned.fold(rollup_dir, batch_id, step)
 
     return fold
 
@@ -109,13 +94,6 @@ def run_rollup_stream(
     """Continuously maintain the rollup over arriving JSON events.
     Returns the StreamingQuery."""
     fold = build_rollup_fold(rollup_dir, granularity, keys=keys)
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.json(events_dir)
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return versioned.run_file_stream(
+        spark, events_dir, schema, fold, checkpoint_dir, max_files_per_trigger
     )

@@ -106,6 +106,7 @@ def test_fold_recovers_from_crash_between_write_and_marker(
     # kill the fold after the state parquet lands but BEFORE the
     # batch_id marker: the replayed batch must rebuild on the last
     # GOOD base and end bit-identical to the clean two-fold run
+    from distributed_vector_database_spark import versioned
     from distributed_vector_database_spark.streaming import funnel_state as fs
 
     _, b1, b2 = _batches(spark)
@@ -119,21 +120,19 @@ def test_fold_recovers_from_crash_between_write_and_marker(
     fold(b1, 0)
     after_b1 = _state_rows(spark, crashy)
 
-    real_marker = fs._write_marker
-
     def boom(*a, **k):
         raise RuntimeError("simulated crash before marker")
 
-    monkeypatch.setattr(fs, "_write_marker", boom)
-    try:
-        fold(b2, 1)
-    except RuntimeError:
-        pass
+    with monkeypatch.context() as m:
+        m.setattr(versioned, "commit", boom)
+        try:
+            fold(b2, 1)
+        except RuntimeError:
+            pass
     # v=1 parquet exists but carries no marker -> readers still serve
     # the last published version (the b1 state)
     assert _state_rows(spark, crashy) == after_b1
 
-    monkeypatch.setattr(fs, "_write_marker", real_marker)
     fold(b2, 1)  # stream replay after restart
     assert _state_rows(spark, crashy) == _state_rows(spark, clean)
 

@@ -8,6 +8,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from distributed_vector_database_spark import versioned
 from distributed_vector_database_spark.operators.sketch import hll_registers
 from distributed_vector_database_spark.streaming.hll_state import (
     build_hll_fold,
@@ -63,7 +64,7 @@ def test_interrupted_write_recovers_from_last_complete_version(
     hll_registers(broken, "user_id").write.mode("overwrite").parquet(
         f"{state}/v=1"
     )
-    assert not os.path.exists(f"{state}/v=1/_applied_batch_id")
+    assert not os.path.exists(f"{state}/v=1/{versioned.MARKER}")
     # the read skips the incomplete version...
     served = read_latest_registers(spark, state)
     assert _rows(served) == _rows(hll_registers(_users(spark, 0, 300), "user_id"))

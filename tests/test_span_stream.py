@@ -69,7 +69,7 @@ def test_fold_recovers_from_crash_between_write_and_marker(
     # restart must rebuild on the last GOOD base and end identical to
     # the clean two-fold run (VERDICT r6 item #4 — the lexical_stats
     # recovery shape applied to span state)
-    from distributed_vector_database_spark.streaming import span_state as ss
+    from distributed_vector_database_spark import versioned
 
     def state_rows(d):
         return sorted(
@@ -88,20 +88,18 @@ def test_fold_recovers_from_crash_between_write_and_marker(
     fold(spark.createDataFrame(B1, DOCS), 0)
     after_b1 = state_rows(st)
 
-    real_marker = ss._write_marker
-
     def boom(*a, **k):
         raise RuntimeError("simulated crash before marker")
 
-    monkeypatch.setattr(ss, "_write_marker", boom)
-    try:
-        fold(spark.createDataFrame(B2, DOCS), 1)
-    except RuntimeError:
-        pass
+    with monkeypatch.context() as m:
+        m.setattr(versioned, "commit", boom)
+        try:
+            fold(spark.createDataFrame(B2, DOCS), 1)
+        except RuntimeError:
+            pass
     # marker-less v=1 is invisible: readers still serve the b1 state
     assert state_rows(st) == after_b1
 
-    monkeypatch.setattr(ss, "_write_marker", real_marker)
     fold(spark.createDataFrame(B2, DOCS), 1)  # stream replay
     assert state_rows(st) == state_rows(clean_st)
     assert _cleaned(spark, out) == _cleaned(spark, clean_out)
