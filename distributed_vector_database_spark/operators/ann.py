@@ -29,6 +29,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from distributed_vector_database_spark import versioned
 from distributed_vector_database_spark.functions.localrel import (
     local_df,
 )
@@ -742,10 +743,7 @@ def ivf_append(
     the affected cells twice per batch)."""
     import os as _os
 
-    marker_dir = _os.path.join(path, "_applied_batches")
-    if batch_id is not None and _os.path.exists(
-        _os.path.join(marker_dir, f"b={batch_id}")
-    ):
+    if versioned.batch_applied(path, batch_id):
         return
     # a null vector has no cell — appending it would crash ivf_assign's
     # np.stack on the executors, so drop such rows up front
@@ -795,10 +793,7 @@ def ivf_append(
     # without a stats file). Deletes never widen, so the pre-delete
     # above needs no counterpart.
     ivf_widen_cell_stats(path, assigned, centroids, vec_col)
-    if batch_id is not None:
-        _os.makedirs(marker_dir, exist_ok=True)
-        with open(_os.path.join(marker_dir, f"b={batch_id}"), "w") as fh:
-            fh.write("")
+    versioned.mark_batch_applied(path, batch_id)
 
 
 def ivf_delete(
@@ -1262,6 +1257,45 @@ def ivf_range_join(
     return scored.orderBy("id_a", "id_b")
 
 
+def ivf_probe(
+    centroids: list[tuple[int, list[float]]],
+    query_vec: Sequence[float],
+    nprobe: int,
+    selectivity: float | None = None,
+) -> list[int]:
+    """The cell ids an IVF query reads: centroids ranked by squared L2
+    to the query (driver-side — the centroid count is tiny by
+    construction), nearest first, the first `nprobe` kept. Every IVF
+    search (flat, PQ, BQ, MRL, the store's index) probes through here.
+
+    `selectivity` (the fraction of rows a filter keeps) widens a
+    FILTERED probe to min(cells, max(2·nprobe, ceil(nprobe / sel))),
+    with sel floored at 1/cells: the 2x floor is the reference's
+    over-fetch factor (src/datanode/handler.py:364), and the 1/sel
+    factor restores the candidate depth the filter removes."""
+    import math as _math
+
+    import numpy as np
+
+    q = np.asarray([float(v) for v in query_vec], dtype=np.float64)
+    cmat = np.asarray([c for _, c in centroids], dtype=np.float64)
+    d = ((cmat - q) ** 2).sum(axis=1)
+    width = nprobe
+    if selectivity is not None:
+        sel = max(float(selectivity), 1.0 / max(len(centroids), 1))
+        width = min(
+            len(centroids), max(2 * nprobe, _math.ceil(nprobe / sel))
+        )
+    return [int(centroids[i][0]) for i in np.argsort(d)[:width]]
+
+
+def predicate_selectivity(df: DataFrame, predicate) -> float:
+    """Fraction of `df`'s rows `predicate` keeps (1.0 for an empty
+    frame): two counts, for the filtered-probe width of ivf_probe."""
+    total = df.count()
+    return df.filter(predicate).count() / total if total else 1.0
+
+
 def ivf_search(
     spark: SparkSession,
     centroids: list[tuple[int, list[float]]],
@@ -1285,34 +1319,19 @@ def ivf_search(
     `predicate` (a Column) supports FILTERED ANN: the metadata filter
     is applied INSIDE the probed partitions (pushed to the scan — never
     filter-after-search), and the probe width SCALES WITH THE FILTER'S
-    SELECTIVITY: probing ceil(nprobe / selectivity) cells (floor 2x —
-    the reference's over-fetch factor, src/datanode/handler.py:364, as
-    the minimum) restores the candidate depth a selective filter
-    removes, while total scanned rows stay ~ nprobe x cell_size because
-    the pushed predicate prunes each probed cell by the same factor —
-    the filtered probe costs what the unfiltered one does. Pass
+    SELECTIVITY (ivf_probe): the wider probe restores the candidate
+    depth a selective filter removes, while total scanned rows stay
+    ~ nprobe x cell_size because the pushed predicate prunes each
+    probed cell by the same factor. Pass
     `selectivity` when known (at 100 TB, from table stats); when None
     it is estimated with a metadata-only count (cheap: no vector column
     is read, parquet column stats carry most predicates)."""
-    import math as _math
-
-    import numpy as np
-
-    q = np.asarray([float(v) for v in query_vec])
-    cmat = np.asarray([c for _, c in centroids])
-    d = ((cmat - q) ** 2).sum(axis=1)
-    if predicate is not None:
-        if selectivity is None:
-            total = assigned.count()
-            kept = assigned.filter(predicate).count()
-            selectivity = (kept / total) if total else 1.0
-        sel = max(float(selectivity), 1.0 / max(len(centroids), 1))
-        width = min(
-            len(centroids), max(2 * nprobe, _math.ceil(nprobe / sel))
-        )
-    else:
-        width = nprobe
-    probe_ids = [int(centroids[i][0]) for i in np.argsort(d)[:width]]
+    if predicate is not None and selectivity is None:
+        selectivity = predicate_selectivity(assigned, predicate)
+    probe_ids = ivf_probe(
+        centroids, query_vec, nprobe,
+        selectivity=selectivity if predicate is not None else None,
+    )
     pruned = assigned.filter(F.col("centroid_id").isin(probe_ids))
     if predicate is not None:
         pruned = pruned.filter(predicate)

@@ -25,6 +25,7 @@ cluster, a plain aggregation.
 from __future__ import annotations
 
 from distributed_vector_database_spark.functions.localrel import local_df
+from distributed_vector_database_spark.plans.explain import plan_size_bytes
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -54,18 +55,16 @@ def ensure_parallelism(df: DataFrame, id_col: str) -> DataFrame:
     catalog/plan metadata, no job, no RDD materialization — a df.rdd
     probe would build the whole RDD lineage on every dedup call just to
     read a number): scan partitions ~ sizeInBytes / maxPartitionBytes.
-    Unknown-size inputs (default 8-EB sentinel) count as wide, which is
-    the no-op side — never an extra shuffle of a big input."""
+    Unknown-size inputs (the 8-EB sentinel, or a failed probe) count as
+    wide, which is the no-op side — never an extra shuffle of a big input."""
+    size = plan_size_bytes(df)
+    if size is None:
+        return df
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
-    try:
-        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        raw = str(spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b"))
-        max_bytes = int(raw.lower().rstrip("b")) if raw.lower().rstrip("b").isdigit() else 128 * 1024 * 1024
-        estimated = max(1, -(-size // max_bytes))
-    except Exception:
-        estimated = df.rdd.getNumPartitions()  # fallback: the old probe
-    if estimated < target:
+    raw = str(spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b"))
+    max_bytes = int(raw.lower().rstrip("b")) if raw.lower().rstrip("b").isdigit() else 128 * 1024 * 1024
+    if max(1, -(-size // max_bytes)) < target:
         return df.repartition(target, id_col)
     return df
 

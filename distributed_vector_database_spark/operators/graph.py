@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from distributed_vector_database_spark.functions.localrel import local_df
+from distributed_vector_database_spark.plans.explain import plan_size_bytes
 from distributed_vector_database_spark.operators.mining import (
     DEFAULT_MAX_BROADCAST_ITEMS,
     _basket_pairs,
@@ -72,13 +73,8 @@ def _iter_partitions(edges: DataFrame, explicit: int | None) -> int:
     default = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     if explicit:
         return int(explicit)
-    try:
-        size = int(
-            edges._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:  # noqa: BLE001 - estimate is best-effort
-        return default
-    if size <= 0 or size >= (1 << 59):
+    size = plan_size_bytes(edges)
+    if size is None or size <= 0:
         return default
     return max(1, min(default, -(-size // (16 << 20))))
 

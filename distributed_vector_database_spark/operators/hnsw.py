@@ -41,6 +41,7 @@ from collections.abc import Iterator, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from distributed_vector_database_spark import versioned
 from distributed_vector_database_spark.config import DEFAULT_TOP_K, OVERFETCH
 from distributed_vector_database_spark.operators.knn import (
     SCORE_DECIMALS,
@@ -697,16 +698,12 @@ def hnsw_append(
     to the best row per key (duplicate nodes carry the same vector →
     the same score), only storage carries the duplicate until the next
     rebuild."""
-    import os as _os
-
     import numpy as np
     import pandas as pd
     from pyspark import TaskContext
 
-    marker_dir = _os.path.join(path, "_applied_batches")
-    if batch_id is not None:
-        if _os.path.exists(_os.path.join(marker_dir, f"b={batch_id}")):
-            return
+    if versioned.batch_applied(path, batch_id):
+        return
 
     nodes = spark.read.parquet(path)
     key_type = dict(nodes.dtypes)[key_col]
@@ -877,10 +874,7 @@ def hnsw_append(
         }
         if hit:
             _append_tombstone_record(path, {"remove": sorted(hit)})
-    if batch_id is not None:
-        _os.makedirs(marker_dir, exist_ok=True)
-        with open(_os.path.join(marker_dir, f"b={batch_id}"), "w") as fh:
-            fh.write("")
+    versioned.mark_batch_applied(path, batch_id)
 
 
 def hnsw_tune_ef(

@@ -26,6 +26,12 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from distributed_vector_database_spark.operators.ann import (
+    ivf_probe,
+    ivf_read_quantizer,
+    ivf_write,
+)
+
 
 # -- scalar quantization ----------------------------------------------------
 
@@ -299,10 +305,7 @@ def ivf_pq_search(
     `encoded` = pq_encode(assigned) where assigned carries centroid_id
     from ann.ivf_build. Recall-tested, not hash-matched (SURVEY §5.2).
     """
-    q = np.asarray([float(v) for v in query_vec], dtype=np.float64)
-    cmat = np.asarray([c for _, c in centroids], dtype=np.float64)
-    order = ((cmat - q) ** 2).sum(axis=1).argsort()
-    probe_ids = [int(centroids[i][0]) for i in order[:nprobe]]
+    probe_ids = ivf_probe(centroids, query_vec, nprobe)
     pruned = encoded.filter(F.col("centroid_id").isin(probe_ids))
     return pq_search(
         pruned, codebooks, query_vec, k=k, key_col=key_col, rerank=rerank, vec_col=vec_col
@@ -442,10 +445,7 @@ def ivf_bq_search(
     from ann.ivf_build. nprobe >= n_centroids + pool >= corpus
     degenerates to knn_exact (hash-anchorable); serving mode is
     recall-tested like the other compositions."""
-    q = np.asarray([float(v) for v in query_vec], dtype=np.float64)
-    cmat = np.asarray([c for _, c in centroids], dtype=np.float64)
-    order = ((cmat - q) ** 2).sum(axis=1).argsort()
-    probe_ids = [int(centroids[i][0]) for i in order[:nprobe]]
+    probe_ids = ivf_probe(centroids, query_vec, nprobe)
     pruned = encoded.filter(F.col("centroid_id").isin(probe_ids))
     return bq_search(
         pruned, means, query_vec, k=k, key_col=key_col, rerank=rerank, vec_col=vec_col
@@ -690,10 +690,7 @@ def ivf_mrl_search(
     the layout; within probed cells the rank pass touches
     prefix_dim/dim of the vector bytes (column-pruned when served from
     an mrl_write layout partitioned by centroid)."""
-    q = np.asarray([float(v) for v in query_vec], dtype=np.float64)
-    cmat = np.asarray([c for _, c in centroids], dtype=np.float64)
-    order = ((cmat - q) ** 2).sum(axis=1).argsort()
-    probe_ids = [int(centroids[i][0]) for i in order[:nprobe]]
+    probe_ids = ivf_probe(centroids, query_vec, nprobe)
     pruned = assigned.filter(F.col("centroid_id").isin(probe_ids))
     return mrl_search(
         pruned,
@@ -721,8 +718,6 @@ def ivf_mrl_write(
     corpus vector bytes — the two pruning axes multiply, which is the
     whole point of composing the layouts. Quantizer persisted alongside
     for the restart path (ivf_write(centroids=))."""
-    from distributed_vector_database_spark.operators.ann import ivf_write
-
     with_prefix = assigned.filter(F.col(vec_col).isNotNull()).withColumn(
         "mrl_prefix",
         F.slice(F.col(vec_col).cast("array<double>"), 1, int(prefix_dim)),
@@ -755,17 +750,9 @@ def ivf_mrl_read_search(
     nprobe ≥ n_centroids + a corpus pool ⟹ knn_exact bit-for-bit
     (the layout-path anchor, same contract as every composition)."""
     from distributed_vector_database_spark.functions.vector import squared_l2
-    from distributed_vector_database_spark.operators.ann import (
-        ivf_read_quantizer,
-    )
 
     q = [float(v) for v in query_vec]
-    centroids = ivf_read_quantizer(path)
-    qa = np.asarray(q, dtype=np.float64)
-    cmat = np.asarray([c for _, c in centroids], dtype=np.float64)
-    order = ((cmat - qa) ** 2).sum(axis=1).argsort()
-    probe_ids = [int(centroids[i][0]) for i in order[:nprobe]]
-
+    probe_ids = ivf_probe(ivf_read_quantizer(path), q, nprobe)
     cells = spark.read.parquet(path).filter(
         F.col("centroid_id").isin(probe_ids)
     )
@@ -957,8 +944,6 @@ def ivf_pq_write(
     The two pruning axes multiply exactly as in ivf_mrl_write —
     (nprobe/n_centroids) × (M·1B / dim·8B) of the corpus bytes per
     probe — but with trained codes instead of a dimension prefix."""
-    from distributed_vector_database_spark.operators.ann import ivf_write
-
     codebooks = pq_train(
         assigned, m=m, k_codebook=k_codebook, vec_col=vec_col, seed=seed
     )
@@ -991,16 +976,8 @@ def ivf_pq_read_search(
     nprobe ≥ n_centroids + a corpus-covering pool ⟹ knn_exact
     bit-for-bit (the layout-path anchor, same contract as the MRL and
     flat-PQ compositions)."""
-    from distributed_vector_database_spark.operators.ann import (
-        ivf_read_quantizer,
-    )
-
     q = [float(v) for v in query_vec]
-    centroids = ivf_read_quantizer(path)
-    qa = np.asarray(q, dtype=np.float64)
-    cmat = np.asarray([c for _, c in centroids], dtype=np.float64)
-    order = ((cmat - qa) ** 2).sum(axis=1).argsort()
-    probe_ids = [int(centroids[i][0]) for i in order[:nprobe]]
+    probe_ids = ivf_probe(ivf_read_quantizer(path), q, nprobe)
 
     codebooks = pq_read_codebooks(path)
     cells = spark.read.parquet(path).filter(

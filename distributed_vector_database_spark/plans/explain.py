@@ -16,6 +16,19 @@ import re
 from pyspark.sql import DataFrame
 
 
+def plan_size_bytes(df: DataFrame) -> int | None:
+    """The optimizer's size estimate of `df` in bytes: driver-side plan
+    metadata, no job. None when the size is unknown: the probe failed,
+    or the plan carries Catalyst's no-statistics sentinel (Long.MaxValue
+    by default; anything >= 2^59 counts as the sentinel). Each caller
+    decides what an unknown size means for it."""
+    try:
+        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception:  # noqa: BLE001 - the estimate is best-effort
+        return None
+    return None if size >= 1 << 59 else size
+
+
 def formatted_plan(df: DataFrame) -> str:
     """The formatted physical plan as a string."""
     spark = df.sparkSession

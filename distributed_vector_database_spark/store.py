@@ -19,8 +19,15 @@ change-log-structured Parquet store:
 Layout on disk (the WAL/checkpoint state machine of
 src/datanode/handler.py:156-219, as immutable Parquet):
 
-    <root>/changelog/   append-only op rows (op, key, vector, metadata, ts, seq)
-    <root>/snapshot/v=N compacted snapshot versions (versioned.py)
+    <root>/changelog/         append-only op rows (op, key, vector,
+                              metadata, ts, seq)
+    <root>/snapshot/v=N       compacted snapshot versions (versioned.py)
+    <root>/index/data/v=N     IVF layout (operators/ann.ivf_write):
+                              partitioned by centroid_id, with its
+                              quantizer in _quantizer.json
+    <root>/index/meta/v=N     build meta of index version N
+                              (changelog op count at build)
+    <root>/hnsw_index/v=N     HNSW graph layout (operators/hnsw.py)
 
 Reads resolve snapshot ∪ compacted-changelog-tail — exactly the
 reference's checkpoint + incremental WAL replay (SURVEY §3.4). At
@@ -52,6 +59,7 @@ from distributed_vector_database_spark.operators.changelog import (
     apply_changelog,
 )
 from distributed_vector_database_spark.operators.knn import knn_exact
+from distributed_vector_database_spark.plans.explain import plan_size_bytes
 from distributed_vector_database_spark import versioned
 
 # a module-level name, so a tracer can rebind this module's lookups
@@ -238,7 +246,7 @@ class VectorStore:
         log.write.mode("append").parquet(self._log_dir)
         self._maybe_auto_compact()
         if auto_index:
-            data_dir, _, _ = self._index_dirs()
+            data_dir, _ = self._index_dirs()
             if latest_version(data_dir) >= 0:
                 self.index_append(records.select("key", "vector"))
             hnsw_dir = os.path.join(self.root, "hnsw_index")
@@ -330,10 +338,12 @@ class VectorStore:
 
     def _log(self) -> DataFrame:
         self.flush()
-        try:
-            return self.spark.read.parquet(self._log_dir)
-        except Exception:
+        # only an absent (or emptied) log reads as empty: any other read
+        # error must raise, or get() would serve the snapshot without the
+        # unread writes and the next compact() would drop them for good
+        if self._log_file_count() == 0:
             return self.spark.createDataFrame([], LOG_SCHEMA)
+        return self.spark.read.parquet(self._log_dir)
 
     def state(self) -> DataFrame:
         """Current state = snapshot ∪ compacted change-log tail
@@ -449,7 +459,7 @@ class VectorStore:
         cadence (the engine-side analog of a serving node's health
         endpoint): live key count, changelog fragmentation, snapshot /
         index versions, pending buffered ops."""
-        data_dir, _, _ = self._index_dirs()
+        data_dir, _ = self._index_dirs()
         return {
             "n_keys": self.count(),
             "log_files": self._log_file_count(),
@@ -466,15 +476,16 @@ class VectorStore:
     # (every 200k puts, src/datanode/handler.py:91-120,313-314), with
     # deleted ids filtered out of every search (handler.py:378-380).
     # Here the index is the IVF centroid-partitioned parquet layout
-    # (ann.ivf_write): rebuild_index() retrains the coarse quantizer
-    # from compacted state and rewrites the layout; index_append()
-    # assigns a new batch to the EXISTING centroids (no retrain, cost
-    # O(batch) — the incremental path, same contract as
-    # minhash_lsh_pairs_incremental); index_search() probes the pruned
-    # partitions and semi-joins live state so tombstoned keys never
-    # surface. A key re-put after indexing returns its indexed vector
-    # until the next index_append/rebuild — the same staleness window
-    # the reference's rebuild cadence accepts.
+    # (ann.ivf_write, quantizer included): rebuild_index() retrains the
+    # coarse quantizer from compacted state and rewrites the layout;
+    # index_append() assigns a new batch to the EXISTING centroids
+    # with ann.ivf_assign (no retrain, cost O(batch) — the incremental
+    # path, same contract as minhash_lsh_pairs_incremental);
+    # index_search() probes the pruned partitions and semi-joins live
+    # state so tombstoned keys never surface. A key re-put after
+    # indexing returns its indexed vector until the next
+    # index_append/rebuild — the same staleness window the reference's
+    # rebuild cadence accepts.
 
     REBUILD_EVERY = 200_000  # reference cadence (src/datanode/handler.py:313)
 
@@ -498,10 +509,9 @@ class VectorStore:
             return None
         return self.rebuild_index(n_centroids=n_centroids)
 
-    def _index_dirs(self) -> tuple[str, str, str]:
+    def _index_dirs(self) -> tuple[str, str]:
         return (
             os.path.join(self.root, "index", "data"),
-            os.path.join(self.root, "index", "centroids"),
             os.path.join(self.root, "index", "meta"),
         )
 
@@ -510,7 +520,7 @@ class VectorStore:
         baseline for the rebuild cadence. 0 when no index exists or the
         log was compacted away since (compaction resets the log, so a
         fresh count correctly measures new ops only)."""
-        data_dir, _, meta_dir = self._index_dirs()
+        data_dir, meta_dir = self._index_dirs()
         v = latest_version(data_dir)
         if v < 0:
             return 0
@@ -521,9 +531,9 @@ class VectorStore:
         self, n_centroids: int | str = 16, seed: int = 42
     ) -> int:
         """Full index rebuild from compacted state (O14 analog for the
-        ANN side). Writes version v+1 of the centroid-partitioned layout,
-        the centroid table and the build meta, and commits v+1 only once
-        all three are written; returns the new version.
+        ANN side). Writes version v+1 of the centroid-partitioned layout
+        with its quantizer, then the build meta, and commits v+1 only
+        once both are written; returns the new version.
 
         n_centroids="auto" sizes the quantizer from the corpus
         (ivf_build_auto: sqrt-n cells, sampled training, fat-cell
@@ -534,7 +544,7 @@ class VectorStore:
             ivf_write,
         )
 
-        data_dir, cent_dir, meta_dir = self._index_dirs()
+        data_dir, meta_dir = self._index_dirs()
         log = self._log()
         log_ops = 0 if log.isEmpty() else log.count()
         state = self.state().filter(F.col("vector").isNotNull())
@@ -548,12 +558,11 @@ class VectorStore:
         v = latest_version(data_dir) + 1
         # igen = index generation (epoch ms at write): lets index_search
         # deterministically prefer the newest row when appends re-wrote a key
-        ivf_write(assigned.withColumn("igen", F.lit(int(time.time() * 1000))), f"{data_dir}/v={v}")
-        local_df(
-            self.spark,
-            [(int(i), c) for i, c in centroids],
-            "centroid_id int, centroid array<double>",
-        ).coalesce(1).write.mode("overwrite").parquet(f"{cent_dir}/v={v}")
+        ivf_write(
+            assigned.withColumn("igen", F.lit(int(time.time() * 1000))),
+            f"{data_dir}/v={v}",
+            centroids=centroids,
+        )
         local_df(
             self.spark,
             [(log_ops, int(time.time() * 1000))],
@@ -562,13 +571,17 @@ class VectorStore:
         versioned.commit(data_dir, v)
         return v
 
-    def _index_centroids(self) -> tuple[int, list[tuple[int, list[float]]]]:
-        data_dir, cent_dir, _ = self._index_dirs()
+    def _index_layout(self) -> tuple[str, list[tuple[int, list[float]]]]:
+        """(path, quantizer) of the newest committed IVF layout."""
+        from distributed_vector_database_spark.operators.ann import (
+            ivf_read_quantizer,
+        )
+
+        data_dir, _ = self._index_dirs()
         v = latest_version(data_dir)
         if v < 0:
             raise ValueError("no index built; call rebuild_index() first")
-        rows = self.spark.read.parquet(f"{cent_dir}/v={v}").collect()
-        return v, [(r["centroid_id"], list(r["centroid"])) for r in rows]
+        return f"{data_dir}/v={v}", ivf_read_quantizer(f"{data_dir}/v={v}")
 
     def index_append(self, records: DataFrame) -> None:
         """Incremental index maintenance: route a (key, vector) batch to
@@ -577,37 +590,17 @@ class VectorStore:
         batch is searchable immediately; centroid quality degrades only
         as the corpus distribution drifts, which the rebuild cadence
         absorbs (the reference's insert-then-rebuild-at-200k shape)."""
-        import numpy as np
-        import pandas as pd
+        from distributed_vector_database_spark.operators.ann import ivf_assign
 
-        v, centroids = self._index_centroids()
-        data_dir, _, _ = self._index_dirs()
-        cent_list = [c for _, c in centroids]
-        cent_ids = [i for i, _ in centroids]
-
-        def assign(batches):
-            cmat = np.asarray(cent_list, dtype=np.float64)
-            ids = np.asarray(cent_ids, dtype=np.int64)
-            csq = (cmat**2).sum(1)
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                mat = np.stack([np.asarray(x) for x in pdf["embedding"].to_numpy()])
-                d2 = (mat**2).sum(1, keepdims=True) - 2.0 * (mat @ cmat.T) + csq
-                out = pdf.copy()
-                out["centroid_id"] = ids[np.argmin(d2, axis=1)].astype("int32")
-                yield out
-
+        path, centroids = self._index_layout()
         batch = records.select(
             F.col("key").cast("string").alias("key"),
             F.col("vector").cast("array<double>").alias("embedding"),
         ).filter(F.col("embedding").isNotNull())
-        assigned = batch.mapInPandas(
-            assign, schema="key string, embedding array<double>, centroid_id int"
-        ).withColumn("igen", F.lit(int(time.time() * 1000)))
-        assigned.write.mode("append").partitionBy("centroid_id").parquet(
-            f"{data_dir}/v={v}"
+        assigned = ivf_assign(batch, centroids).withColumn(
+            "igen", F.lit(int(time.time() * 1000))
         )
+        assigned.write.mode("append").partitionBy("centroid_id").parquet(path)
 
     def index_search(
         self,
@@ -618,45 +611,28 @@ class VectorStore:
         selectivity: float | None = None,
     ) -> DataFrame:
         """ANN search over the persisted IVF layout: driver ranks the
-        (tiny) centroid table, the scan is partition-PRUNED to nprobe
+        (tiny) quantizer, the scan is partition-PRUNED to nprobe
         directories, and candidates are semi-joined against live state
         so deleted keys are excluded (src/datanode/handler.py:378-380)
         — never a full-corpus scan.
 
         `predicate` (Column over state's key/metadata) = FILTERED ANN:
         the live-state semi-join carries the filter, and the probe
-        width scales with the filter's selectivity (floor 2x — the
-        reference's over-fetch factor, src/datanode/handler.py:364):
-        ceil(nprobe / selectivity) cells keep candidate depth while
-        scanned-row cost stays ~ nprobe x cell_size, because the filter
-        prunes each probed cell by the same factor. Pass `selectivity`
-        when known; None estimates it with one metadata-only count of
-        the resolved state."""
-        import math as _math
+        widens with the filter's selectivity (ann.ivf_probe), so the
+        candidate depth survives while scanned-row cost stays ~ nprobe
+        x cell_size, because the filter prunes each probed cell by the
+        same factor. Pass `selectivity` when known; None estimates it
+        with two counts of the resolved state."""
+        from distributed_vector_database_spark.operators import ann
 
-        import numpy as np
-
-        from distributed_vector_database_spark.operators.ann import ivf_read_probe
-
-        v, centroids = self._index_centroids()
-        data_dir, _, _ = self._index_dirs()
-        q = np.asarray([float(x) for x in query_vector], dtype=np.float64)
-        cmat = np.asarray([c for _, c in centroids], dtype=np.float64)
-        d = ((cmat - q) ** 2).sum(axis=1)
-        if predicate is not None:
-            if selectivity is None:
-                st = self.state()
-                total = st.count()
-                kept = st.filter(predicate).count()
-                selectivity = (kept / total) if total else 1.0
-            sel = max(float(selectivity), 1.0 / max(len(centroids), 1))
-            width = min(
-                len(centroids), max(2 * nprobe, _math.ceil(nprobe / sel))
-            )
-        else:
-            width = nprobe
-        probe_ids = [int(centroids[i][0]) for i in np.argsort(d)[:width]]
-        cand = ivf_read_probe(self.spark, f"{data_dir}/v={v}", probe_ids)
+        path, centroids = self._index_layout()
+        if predicate is not None and selectivity is None:
+            selectivity = ann.predicate_selectivity(self.state(), predicate)
+        probe_ids = ann.ivf_probe(
+            centroids, query_vector, nprobe,
+            selectivity=selectivity if predicate is not None else None,
+        )
+        cand = ann.ivf_read_probe(self.spark, path, probe_ids)
         # a re-put key can sit in several index writes: keep the row from
         # the newest index generation (igen); exact vector freshness for
         # keys re-put WITHOUT an index_append is restored at rebuild
@@ -837,10 +813,10 @@ class VectorStore:
         the number of version directories removed."""
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1")
-        data_dir, cent_dir, meta_dir = self._index_dirs()
+        data_dir, meta_dir = self._index_dirs()
         return (
             versioned.vacuum(self._snap_dir, keep_last)
-            + versioned.vacuum(data_dir, keep_last, siblings=(cent_dir, meta_dir))
+            + versioned.vacuum(data_dir, keep_last, siblings=(meta_dir,))
             + versioned.vacuum(os.path.join(self.root, "hnsw_index"), keep_last)
         )
 
@@ -865,17 +841,12 @@ class VectorStore:
         new_state = self.state()
         v = latest_version(self._snap_dir) + 1
         # snapshot file count from the optimizer's size estimate (one
-        # file per ~maxPartitionBytes), not an RDD-lineage probe; floor 1
-        try:
-            size = int(
-                new_state._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            )
-        except Exception:
-            size = 0
-        # cap scales with the cluster (4 waves), so a join-inflated or
-        # sentinel (8 EB) estimate can't explode into tiny-file spray
+        # file per ~maxPartitionBytes), not an RDD-lineage probe; floor 1.
+        # The cap scales with the cluster (4 waves), so a join-inflated
+        # or unknown estimate can't explode into tiny-file spray
+        size = plan_size_bytes(new_state)
         cap = self.spark.sparkContext.defaultParallelism * 4
-        n_parts = max(1, min(size // (128 * 1024 * 1024) + 1, cap))
+        n_parts = cap if size is None else max(1, min(size // (128 * 1024 * 1024) + 1, cap))
         (
             new_state.repartitionByRange(n_parts, "key")
             .sortWithinPartitions("key")

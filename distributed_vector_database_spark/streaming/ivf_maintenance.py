@@ -64,17 +64,13 @@ def build_ivf_changelog_fold(
     )
 
     def fold(batch: DataFrame, batch_id: int) -> None:
-        import os as _os
-
         if batch.isEmpty():
             return
         # the marker now guards the WHOLE fold, not just the append:
         # the single-rewrite delete pass removes put keys too, so a
         # clean replay that skipped only the append would delete
         # applied rows without restoring them
-        if _os.path.exists(
-            _os.path.join(index_dir, "_applied_batches", f"b={batch_id}")
-        ):
+        if versioned.batch_applied(index_dir, batch_id):
             return
         spark_ = batch.sparkSession
         w = Window.partitionBy(key_col).orderBy(F.desc(seq_col))

@@ -17,6 +17,10 @@ checkpoint-then-WAL-position discipline (src/datanode/handler.py:
 
 The marker is an underscore file, which Spark's parquet reader ignores
 like `_SUCCESS`.
+
+Layouts that take micro-batches in place, inside one version (IVF and
+HNSW appends), keep an applied-batch ledger instead: `batch_applied`
+and `mark_batch_applied`.
 """
 
 from __future__ import annotations
@@ -25,6 +29,7 @@ import os
 import shutil
 
 MARKER = "_COMMITTED"
+LEDGER = "_applied_batches"
 
 
 def _marker(path: str, v: int) -> str:
@@ -85,6 +90,26 @@ def fold(path: str, batch_id: int, step) -> None:
         return
     step(v, v + 1)
     commit(path, v + 1, batch_id)
+
+
+def batch_applied(path: str, batch_id) -> bool:
+    """True when `batch_id` is recorded in the applied-batch ledger of
+    the layout at `path`. The ledger is for layouts that take
+    micro-batches in place, inside one version (IVF/HNSW appends): one
+    empty file `_applied_batches/b=<id>` per applied batch. A None id
+    is never applied."""
+    return batch_id is not None and os.path.exists(
+        os.path.join(path, LEDGER, f"b={batch_id}")
+    )
+
+
+def mark_batch_applied(path: str, batch_id) -> None:
+    """Record `batch_id` in the ledger; call after the batch's writes.
+    A None id records nothing."""
+    if batch_id is None:
+        return
+    os.makedirs(os.path.join(path, LEDGER), exist_ok=True)
+    open(os.path.join(path, LEDGER, f"b={batch_id}"), "w").close()
 
 
 def read_latest(spark, path: str):

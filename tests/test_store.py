@@ -118,6 +118,27 @@ def test_compact_then_incremental(store):
     assert state2 == state
 
 
+def test_unreadable_changelog_raises_instead_of_serving_stale_state(store):
+    """A changelog that exists but cannot be read must fail the read:
+    serving the snapshot alone would return an overwritten value, and
+    the next compact() would fold that stale state and delete the log,
+    losing the unread writes for good."""
+    import os
+
+    store.put("a", [1.0, 0.0, 0.0, 0.0])
+    store.compact()
+    store.put("a", [0.0, 1.0, 0.0, 0.0])
+    log_dir = store._log_dir
+    (data,) = [f for f in os.listdir(log_dir) if not f.startswith(("_", "."))]
+    with open(os.path.join(log_dir, data), "wb") as fh:
+        fh.write(b"not a parquet file")
+    with pytest.raises(Exception):
+        store.get("a")
+    with pytest.raises(Exception):
+        store.compact()
+    assert os.path.exists(os.path.join(log_dir, data))
+
+
 def test_buffered_put_coalesces_files(spark, tmp_path):
     """buffer_rows=N writes one log file per N single-record ops (the
     small-files fix); reads flush pending ops so read-your-writes
@@ -294,6 +315,31 @@ def test_rebuild_index_auto_sizing(store, spark):
     assert len(got) == 5
     brute = store.search([0.0, 0.0, 1.0, 0.0], top_k=5)
     assert [r["key"] for r in got] == [r["key"] for r in brute.collect()]
+
+
+def test_store_index_is_an_ann_layout(store, spark):
+    """rebuild_index writes the operators/ann IVF layout with its
+    quantizer, and no separate centroid table: ann.ivf_read_search
+    serves it from the directory alone, and a full probe equals the
+    store's exact search."""
+    import os
+
+    from distributed_vector_database_spark.operators import ann
+
+    recs = [(f"k{i}", [float(i % 7), float(i % 5), float(i % 3), 1.0]) for i in range(60)]
+    store.put_batch(spark.createDataFrame(recs, "key string, vector array<double>"))
+    v = store.rebuild_index(n_centroids=4)
+    layout = os.path.join(store.root, "index", "data", f"v={v}")
+    assert os.path.exists(os.path.join(layout, "_quantizer.json"))
+    assert not os.path.exists(os.path.join(store.root, "index", "centroids"))
+    q = [3.0, 2.0, 1.0, 1.0]
+    got = ann.ivf_read_search(
+        spark, layout, q, k=5, nprobe=10**9, key_col="key", vec_col="embedding"
+    )
+    want = store.search(q, top_k=5)
+    assert [(r["key"], r["score"]) for r in got.collect()] == [
+        (r["key"], r["score"]) for r in want.collect()
+    ]
 
 
 def test_index_search_requires_build(store):

@@ -53,9 +53,9 @@ def _store_compact(spark, root):
 
 
 def _store_rebuild_index(spark, root):
-    # the crash lands after the layout's data is written and before its
-    # centroid table: put_batch(auto_index=True) and index_search must
-    # keep using the committed v=0
+    # the crash lands after the layout's data and quantizer are written
+    # and before its build meta: put_batch(auto_index=True) and
+    # index_search must keep using the committed v=0
     s = VectorStore(spark, root, dim=DIM)
     s.put_batch(
         spark.createDataFrame(
