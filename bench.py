@@ -433,7 +433,7 @@ def _split_phase_rows(spark, sf_dir: str) -> dict[str, float]:
     out["ann_mrl_probe"] = probe_best_of_2(
         lambda: mrl_read_search(spark, f"{tmp}/mrl", qvec, k=10, rerank=10).count()
     )
-    # MRL maintenance fold (run_mrl_stream's body): append-only layout
+    # MRL maintenance fold (run_codec_stream's body): append-only layout
     # growth + a probe over the maintained layout — the row that
     # surfaces publish-marker / attempt-file regressions (VERDICT r8
     # #6: every persisted layout's fold should bench like IVF/HNSW's)

@@ -21,9 +21,27 @@ the plain path as fallback for anything pandas/Arrow cannot represent.
 
 from __future__ import annotations
 
+import logging
 from typing import Any, Sequence
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import _make_type_verifier
+
+_log = logging.getLogger(__name__)
+_fallback_logged = False
+
+
+def _fallback(reason: str) -> None:
+    """Log the first fast-path fallback of the process: a degraded path
+    must show, but a per-call warning would flood the log."""
+    global _fallback_logged
+    if not _fallback_logged:
+        _fallback_logged = True
+        _log.warning(
+            "local_df: Arrow fast path unavailable, using createDataFrame: %s",
+            reason,
+        )
 
 
 def _as_struct_type(schema: Any):
@@ -56,33 +74,32 @@ def local_df(
     """
     if not rows:
         return spark.createDataFrame([], schema)
+    first = rows[0]
+    if not isinstance(first, (tuple, list)):
+        data = [(r,) for r in rows]
+    else:
+        data = [tuple(r) for r in rows]
+    # Preserve the plain path's type strictness (ADVICE r13): the
+    # Arrow conversion CASTS where createDataFrame(list) VERIFIES —
+    # local_df(spark, [(1.7,)], "x long") would silently truncate to 1
+    # where the old code raised. Run the same verifier the plain path
+    # runs; rows it rejects go to the plain path, which raises the
+    # canonical error (a bad input, not a fast-path fallback).
+    struct = _as_struct_type(schema)
+    if struct is not None:
+        verify = _make_type_verifier(struct)
+        try:
+            for r in data:
+                verify(r)
+        except (TypeError, ValueError):
+            return spark.createDataFrame(rows, schema)
     try:
-        import pandas as pd
-
-        first = rows[0]
-        if not isinstance(first, (tuple, list)):
-            data = [(r,) for r in rows]
-        else:
-            data = [tuple(r) for r in rows]
         ncols = len(data[0])
         # column-major dict; names are placeholders — createDataFrame
         # applies the authoritative names/types from `schema`. Columns
         # are built dtype=object so a None stays a NULL through Arrow
         # (a float64 column would coerce None -> NaN, a silent
         # semantic drift the WAL's delete rows must not suffer).
-        # Preserve the plain path's type strictness (ADVICE r13): the
-        # Arrow conversion CASTS where createDataFrame(list) VERIFIES —
-        # local_df(spark, [(1.7,)], "x long") would silently truncate
-        # to 1 where the old code raised. Run the same verifier the
-        # plain path runs; any mismatch falls through to the plain
-        # path, which raises the canonical error.
-        struct = _as_struct_type(schema)
-        if struct is not None:
-            from pyspark.sql.types import _make_type_verifier
-
-            verify = _make_type_verifier(struct)
-            for r in data:
-                verify(r)
         pdf = pd.DataFrame(
             {
                 f"_{i}": pd.Series([r[i] for r in data], dtype=object)
@@ -93,8 +110,10 @@ def local_df(
         # the pandas path silently degrades to the RDD path when Arrow
         # conversion fails; cheap plan sniff keeps us honest
         if "ExistingRDD" in out._jdf.queryExecution().simpleString():
+            _fallback("pandas conversion planned an RDD scan")
             return spark.createDataFrame(data, schema)
         return out
-    except Exception:  # noqa: BLE001 - any conversion trouble: use the
+    except Exception as e:  # noqa: BLE001 - any conversion trouble: use the
         # battle-tested slow path rather than risk a type drift
+        _fallback(f"{type(e).__name__}: {e}")
         return spark.createDataFrame(rows, schema)

@@ -19,6 +19,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from distributed_vector_database_spark import versioned
+
 
 def describe_ivf(spark: SparkSession, path: str) -> dict:
     """IVF layout health: cell count, row skew, maintenance state."""
@@ -71,13 +73,10 @@ def describe_hnsw(spark: SparkSession, path: str) -> dict:
 
 
 def describe_published(spark: SparkSession, path: str, rows_under: str = "postings") -> dict:
-    """Write-audit-publish layout health (postings / MRL): published
-    attempts vs orphaned rows a crashed append left unservable."""
-    from distributed_vector_database_spark.operators.lexical import (
-        _applied_markers,
-    )
-
-    markers = _applied_markers(path)
+    """Write-audit-publish layout health (postings, or a quantized codec
+    layout with `rows_under=""`): published attempts vs orphaned rows a
+    crashed append left unservable."""
+    markers = versioned.published_attempts(path)
     aids = {m["aid"] for m in markers}
     rows_path = f"{path}/{rows_under}" if rows_under else path
     rows = spark.read.parquet(rows_path)

@@ -31,6 +31,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from distributed_vector_database_spark import versioned
 from distributed_vector_database_spark.functions.localrel import local_df
 from distributed_vector_database_spark.functions.text import tokenize
 
@@ -265,9 +266,9 @@ def _postings_rows(
     """(term, doc, tf, dl, bucket, aid) rows from a tokenized frame —
     shared by the full build and the incremental append. `aid` is the
     write-attempt id: rows become VISIBLE only once a matching marker
-    is published (see _publish), which is what makes appends replay-
-    safe — an interrupted attempt's rows stay on disk but are never
-    served."""
+    is published (versioned.publish_attempt), which is what makes
+    appends replay-safe — an interrupted attempt's rows stay on disk
+    but are never served, and its totals never count."""
     return (
         toks.select(
             doc_col, F.col("__dl").alias("dl"), F.explode("__toks").alias("term")
@@ -284,54 +285,6 @@ def _postings_rows(
     )
 
 
-def _applied_dir(path: str) -> str:
-    import os
-
-    return os.path.join(path, "applied")
-
-
-def _publish(path: str, aid: str, batch_id, n_docs: int, total_tokens: int) -> None:
-    """Publish an attempt: one small atomic-enough JSON marker written
-    AFTER the postings land. Marker presence makes the attempt's rows
-    servable and carries the corpus-totals delta, so the summary needs
-    no separate mutable file (summing markers is exact under replay —
-    an unpublished attempt contributes neither rows nor totals)."""
-    import json
-    import os
-
-    d = _applied_dir(path)
-    os.makedirs(d, exist_ok=True)
-    tmp = os.path.join(d, f".{aid}.tmp")
-    with open(tmp, "w") as f:
-        json.dump(
-            {
-                "aid": aid,
-                "batch_id": batch_id,
-                "n_docs": int(n_docs),
-                "total_tokens": int(total_tokens),
-            },
-            f,
-        )
-    os.replace(tmp, os.path.join(d, f"{aid}.json"))
-
-
-def _applied_markers(path: str) -> list[dict]:
-    import json
-    import os
-
-    d = _applied_dir(path)
-    out = []
-    try:
-        names = sorted(os.listdir(d))
-    except FileNotFoundError:
-        return out
-    for n in names:
-        if n.endswith(".json") and not n.startswith("."):
-            with open(os.path.join(d, n)) as f:
-                out.append(json.load(f))
-    return out
-
-
 def _postings_meta(spark, path: str, terms) -> tuple:
     """Shared serving preamble for every postings reader: layout
     bucket count, published attempt markers, their aid list, and the
@@ -341,10 +294,8 @@ def _postings_meta(spark, path: str, terms) -> tuple:
     n_buckets = int(
         spark.read.parquet(f"{path}/corpus").collect()[0]["n_buckets"]
     )
-    markers = _applied_markers(path)
-    if not markers:
-        raise FileNotFoundError(f"no published attempts under {path}/applied")
-    aids = sorted(m["aid"] for m in markers)
+    aids = versioned.published_aids(path)
+    markers = versioned.published_attempts(path)
     buckets = sorted({_term_bucket_py(t, n_buckets) for t in terms})
     return n_buckets, markers, aids, buckets
 
@@ -374,7 +325,7 @@ def postings_write(
     Layout: `{path}/postings/bucket=H/` holds rows
     (term, doc_id, tf, dl, aid) for every term with crc32(term) %
     n_buckets == H; `{path}/corpus/` is a 1-row config (n_buckets);
-    `{path}/applied/` holds one JSON marker per PUBLISHED write attempt
+    `{path}/_published/` holds one JSON marker per PUBLISHED write attempt
     carrying its corpus-totals delta. A query for `q` terms reads ONLY
     the <=q bucket directories (partition-pruned) further filtered to
     the exact terms (predicate pushed to parquet) — at 100 TB a
@@ -398,7 +349,7 @@ def postings_write(
         F.col(doc_col), tokenize(text_col).alias("__toks")
     ).withColumn("__dl", F.size("__toks"))
     # full rebuild: clear any previous markers, then base attempt
-    shutil.rmtree(_applied_dir(path), ignore_errors=True)
+    shutil.rmtree(versioned.attempts_dir(path), ignore_errors=True)
     _postings_rows(toks, doc_col, n_buckets, "base").write.mode(
         "overwrite"
     ).partitionBy("bucket").parquet(f"{path}/postings")
@@ -408,7 +359,9 @@ def postings_write(
     totals = toks.agg(
         F.count(F.lit(1)).alias("n"), F.sum("__dl").alias("t")
     ).collect()[0]
-    _publish(path, "base", None, totals["n"], totals["t"] or 0)
+    versioned.publish_attempt(
+        path, "base", n_docs=int(totals["n"]), total_tokens=int(totals["t"] or 0)
+    )
 
 
 def postings_append(
@@ -441,9 +394,8 @@ def postings_append(
     an anti-join against indexed ids)."""
     import uuid
 
-    if batch_id is not None:
-        if any(m.get("batch_id") == batch_id for m in _applied_markers(path)):
-            return False
+    if versioned.batch_published(path, batch_id):
+        return False
     corpus = docs_batch.sparkSession.read.parquet(f"{path}/corpus").collect()[0]
     n_buckets = int(corpus["n_buckets"])
     aid = uuid.uuid4().hex[:16]
@@ -456,7 +408,10 @@ def postings_append(
     totals = toks.agg(
         F.count(F.lit(1)).alias("n"), F.sum("__dl").alias("t")
     ).collect()[0]
-    _publish(path, aid, batch_id, totals["n"], totals["t"] or 0)
+    versioned.publish_attempt(
+        path, aid, batch_id,
+        n_docs=int(totals["n"]), total_tokens=int(totals["t"] or 0),
+    )
     return True
 
 
@@ -475,10 +430,8 @@ def postings_compact(spark, path: str) -> int:
     import shutil
     import uuid
 
-    markers = _applied_markers(path)
-    if not markers:
-        raise FileNotFoundError(f"no published attempts under {path}/applied")
-    aids = sorted(m["aid"] for m in markers)
+    aids = versioned.published_aids(path)
+    markers = versioned.published_attempts(path)
     n_docs = sum(m["n_docs"] for m in markers)
     total_tokens = sum(m["total_tokens"] for m in markers)
     new_base = "base-" + uuid.uuid4().hex[:8]
@@ -497,8 +450,10 @@ def postings_compact(spark, path: str) -> int:
     )
     shutil.rmtree(f"{path}/postings")
     shutil.move(f"{path}/postings_compacting", f"{path}/postings")
-    shutil.rmtree(_applied_dir(path), ignore_errors=True)
-    _publish(path, new_base, None, n_docs, total_tokens)
+    shutil.rmtree(versioned.attempts_dir(path), ignore_errors=True)
+    versioned.publish_attempt(
+        path, new_base, n_docs=n_docs, total_tokens=total_tokens
+    )
     return n
 
 

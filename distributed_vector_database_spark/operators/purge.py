@@ -25,11 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from distributed_vector_database_spark import versioned
 from distributed_vector_database_spark.operators.dedup import _window_grams
-from distributed_vector_database_spark.operators.lexical import (
-    _applied_markers,
-    _publish,
-)
 
 
 def purge_from_postings(
@@ -44,10 +41,7 @@ def purge_from_postings(
     negatives), so BM25's n_docs/avgdl match a from-scratch rebuild
     over the remaining corpus. Returns the number of posting rows
     removed."""
-    markers = _applied_markers(path)
-    if not markers:
-        raise FileNotFoundError(f"no published attempts under {path}/applied")
-    aids = sorted(m["aid"] for m in markers)
+    aids = versioned.published_aids(path)
     # compare in the column's native type — no int() coercion, so
     # string doc ids work exactly as the configurable doc_col implies
     ids = list(doc_ids)
@@ -86,12 +80,11 @@ def purge_from_postings(
             shutil.rmtree(f"{path}/postings/bucket={b}", ignore_errors=True)
         import uuid
 
-        _publish(
+        versioned.publish_attempt(
             path,
             "purge-" + uuid.uuid4().hex[:8],
-            None,
-            -int(agg["nd"]),
-            -int(agg["tok"] or 0),
+            n_docs=-int(agg["nd"]),
+            total_tokens=-int(agg["tok"] or 0),
         )
         return int(removed)
     finally:

@@ -2,17 +2,34 @@
 database offers (the reference stores raw float vectors only; PQ/SQ is
 how the same corpus serves at 100 TB without reading 100 TB).
 
-- Scalar quantization (SQ, int8): per-dimension min/max → uint8 codes.
-  4x smaller than float32, distances computed on dequantized values —
-  one aggregation for the stats, one map for the codes, all columnar.
-- Product quantization (PQ): split the vector into M subvectors, learn
-  a K-centroid codebook per subspace (MLlib KMeans on the DataFrame —
-  the 'batch index build'), store M uint8 codes per vector (e.g. 64-d
-  float32 = 256 B → 8 B at M=8). Queries use asymmetric distance
-  (ADC): one small lookup table per query, then each candidate's
-  distance is M table lookups — inside a vectorized numpy kernel with
-  the same per-partition top-k + merge shape as every other search
-  here.
+Four codecs (`SQCodec`, `PQCodec`, `BQCodec`, `MRLCodec`), one search
+and one persisted layout — the IVF-list × codec composition of FAISS
+(`IndexIVFPQ`, `IndexIVFScalarQuantizer`, `IndexBinaryIVF`). A codec
+holds its frozen state, an `encode` that adds one code column, and a
+coarse scorer of one of two kinds, each with one coarse → pool →
+exact-refine pipeline:
+
+- a numpy batch `kernel` (SQ, PQ): a per-partition pool of `rerank*k`
+  rows inside one `mapInPandas` (`2k` and no refine when `rerank=0`);
+- a `coarse` column expression (BQ, MRL): one global TakeOrdered pool
+  of `rerank*k` rows, all JVM codegen.
+
+The refine re-scores the pool's true vectors exactly, top-k by
+(round(score, 6), key) — the FAISS `IndexRefine` pattern. A pool that
+covers the corpus and a probe of every cell reproduce `knn_exact`
+bit-for-bit: the hash-oracled `ann_*_exact` anchors rely on this.
+`codec_search` runs over an in-plan encoded frame, probing the cells
+`ann.ivf_probe` picks when centroids are passed.
+
+The persisted layout (`codec_write` / `codec_append` /
+`codec_read_search`) holds (key, code, vector, aid) parquet rows, flat
+or partitioned by `centroid_id` (a probe = partition pruning), with the
+codec state in a `_codec.json` sidecar next to the IVF quantizer's
+`_quantizer.json`. The coarse pass reads only (key, code), so column
+pruning makes the compression an I/O win. Appends encode with the frozen
+state (FAISS `add` never retrains) and are write-audit-publish
+(`versioned.publish_attempt`): a crashed append's rows are never served
+and a replayed `batch_id` is skipped.
 
 Approximate → recall-tested against knn_exact (SURVEY §5.2), not
 hash-matched.
@@ -20,128 +37,212 @@ hash-matched.
 
 from __future__ import annotations
 
+import json
+import os
+import shutil
+import uuid
 from collections.abc import Iterator, Sequence
 
 import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from distributed_vector_database_spark import versioned
+from distributed_vector_database_spark.functions.vector import squared_l2
 from distributed_vector_database_spark.operators.ann import (
+    ivf_assign,
     ivf_probe,
     ivf_read_quantizer,
     ivf_write,
 )
 
+CODEC_FILE = "_codec.json"
 
-# -- scalar quantization ----------------------------------------------------
+
+# -- codecs -------------------------------------------------------------------
+
+
+class SQCodec:
+    """int8 scalar quantization: code = round(255·(x − min)/(max − min))
+    per dimension; coarse distance = squared L2 of the dequantized code."""
+
+    kind, column = "sq", "sq_codes"
+
+    def __init__(self, mins: Sequence[float], maxs: Sequence[float]):
+        self.mins = [float(x) for x in mins]
+        self.maxs = [float(x) for x in maxs]
+        self.scales = [(b - a) if b > a else 1.0 for a, b in zip(self.mins, self.maxs)]
+
+    def state(self) -> dict:
+        return {"mins": self.mins, "maxs": self.maxs}
+
+    def encode(self, df: DataFrame, vec_col: str = "embedding") -> DataFrame:
+        """A native column expression (stored as array<int>)."""
+        arr = F.col(vec_col).cast("array<double>")
+        codes = [
+            F.round((F.element_at(arr, i + 1) - mn) / sc * 255.0).cast("int")
+            for i, (mn, sc) in enumerate(zip(self.mins, self.scales))
+        ]
+        return df.withColumn(self.column, F.array(*codes))
+
+    def kernel(self, q: np.ndarray):
+        mn = np.asarray(self.mins, dtype=np.float64)
+        sc = np.asarray(self.scales, dtype=np.float64)
+
+        def score(codes: np.ndarray) -> np.ndarray:
+            d = mn + codes.astype(np.float64) / 255.0 * sc - q
+            return np.einsum("ij,ij->i", d, d)
+
+        return score
+
+
+class PQCodec:
+    """Product quantization: M per-subspace codebooks (pq_train); code j
+    = the nearest centroid of subvector j; coarse distance = ADC, the
+    sum of M cells of the query's (M, K) lookup table."""
+
+    kind, column = "pq", "pq_codes"
+
+    def __init__(self, codebooks: Sequence):
+        self.codebooks = [np.asarray(b, dtype=np.float64) for b in codebooks]
+
+    def state(self) -> dict:
+        return {"codebooks": [b.tolist() for b in self.codebooks]}
+
+    def encode(self, df: DataFrame, vec_col: str = "embedding") -> DataFrame:
+        """One vectorized numpy pass per partition (array<long> codes)."""
+        import pandas as pd
+
+        books = self.codebooks
+        sub = books[0].shape[1]
+        fields = ", ".join(
+            f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
+        )
+
+        def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            for pdf in batches:
+                if pdf.empty:
+                    continue
+                mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+                codes = np.empty((len(pdf), len(books)), dtype=np.int64)
+                for j, book in enumerate(books):
+                    seg = mat[:, j * sub : (j + 1) * sub]
+                    # (n, k) argmin via ||c||^2 - 2*x.c (matmul — encoding
+                    # scans the FULL corpus, so no (n,k,sub) temporaries)
+                    d2 = (book**2).sum(axis=1)[None, :] - 2.0 * (seg @ book.T)
+                    codes[:, j] = d2.argmin(axis=1)
+                pdf = pdf.copy()
+                pdf["pq_codes"] = list(codes)
+                yield pdf
+
+        return df.mapInPandas(encode, schema=f"{fields}, pq_codes array<long>")
+
+    def kernel(self, q: np.ndarray):
+        m = len(self.codebooks)
+        sub = self.codebooks[0].shape[1]
+        # ADC lookup table: lut[j][c] = ||q_j - centroid_jc||^2
+        lut = np.stack([
+            ((book - q[j * sub : (j + 1) * sub]) ** 2).sum(axis=1)
+            for j, book in enumerate(self.codebooks)
+        ])
+
+        def score(codes: np.ndarray) -> np.ndarray:
+            return lut[np.arange(m)[None, :], codes].sum(axis=1)
+
+        return score
+
+
+class BQCodec:
+    """Binary quantization: bit i of word w = x[32w+i] > mean[32w+i];
+    coarse distance = Hamming, bit_count(xor) folds in codegen over the
+    32x-compressed column."""
+
+    kind, column = "bq", "bq_codes"
+
+    def __init__(self, means: Sequence[float]):
+        self.means = [float(x) for x in means]
+
+    def state(self) -> dict:
+        return {"means": self.means}
+
+    def encode(self, df: DataFrame, vec_col: str = "embedding") -> DataFrame:
+        """A sum of disjoint power-of-two CASE terms per word, so encoding
+        stays inside whole-stage codegen: no Python, no Arrow."""
+        arr = F.col(vec_col).cast("array<double>")
+        words = []
+        for w0 in range(0, len(self.means), 32):
+            terms = [
+                F.when(F.element_at(arr, w0 + i + 1) > F.lit(m), F.lit(1 << i).cast("long"))
+                .otherwise(F.lit(0).cast("long"))
+                for i, m in enumerate(self.means[w0 : w0 + 32])
+            ]
+            words.append(sum(terms[1:], terms[0]).cast("long"))
+        return df.withColumn(self.column, F.array(*words))
+
+    def coarse(self, q: Sequence[float]) -> Column:
+        qlit = F.array(*[F.lit(int(w)).cast("long") for w in _bq_words(q, self.means)])
+        bits = F.zip_with(F.col(self.column), qlit, lambda a, b: F.bit_count(a.bitwiseXOR(b)))
+        return F.aggregate(bits, F.lit(0), lambda acc, x: acc + x)
+
+
+class MRLCodec:
+    """Matryoshka prefix: the code is the first `prefix_dim` coordinates
+    (no training); coarse distance = squared L2 on the prefix."""
+
+    kind, column = "mrl", "mrl_prefix"
+
+    def __init__(self, prefix_dim: int):
+        self.prefix_dim = int(prefix_dim)
+
+    def state(self) -> dict:
+        return {"prefix_dim": self.prefix_dim}
+
+    def encode(self, df: DataFrame, vec_col: str = "embedding") -> DataFrame:
+        prefix = F.slice(F.col(vec_col).cast("array<double>"), 1, self.prefix_dim)
+        return df.withColumn(self.column, prefix)
+
+    def coarse(self, q: Sequence[float]) -> Column:
+        return squared_l2(self.column, list(q[: self.prefix_dim]))
+
+
+_CODECS = {c.kind: c for c in (SQCodec, PQCodec, BQCodec, MRLCodec)}
+
+
+def _bq_words(vals, means) -> list[int]:
+    """Driver-side packing of one vector into 32-bit words (bit i of
+    word w = sign of dimension 32w+i against its mean)."""
+    words = []
+    for w0 in range(0, len(means), 32):
+        word = 0
+        for i, m in enumerate(means[w0 : w0 + 32]):
+            if float(vals[w0 + i]) > m:
+                word |= 1 << i
+        words.append(word)
+    return words
+
+
+# -- training -------------------------------------------------------------------
+
+
+def _per_dim(df: DataFrame, vec_col: str, *aggs) -> list[list]:
+    """Each of `aggs` (F.min, ...) over every dimension of the vectors,
+    all in one aggregation."""
+    arr = F.col(vec_col).cast("array<double>")
+    dim = df.select(F.size(arr).alias("d")).first()["d"]
+    aggs = [a(F.element_at(arr, i + 1)) for a in aggs for i in range(dim)]
+    row = df.select(*aggs).first()
+    return [list(row[j : j + dim]) for j in range(0, len(aggs), dim)]
 
 
 def sq_train(df: DataFrame, vec_col: str = "embedding") -> tuple[list, list]:
     """Per-dimension (min, max) over the corpus — one aggregation."""
-    arr = F.col(vec_col).cast("array<double>")
-    dim = df.select(F.size(arr).alias("d")).first()["d"]
-    mins = df.select(
-        *[F.min(F.element_at(arr, i + 1)).alias(f"m{i}") for i in range(dim)]
-    ).first()
-    maxs = df.select(
-        *[F.max(F.element_at(arr, i + 1)).alias(f"m{i}") for i in range(dim)]
-    ).first()
-    return list(mins), list(maxs)
-
-
-def sq_encode(
-    df: DataFrame, mins: Sequence[float], maxs: Sequence[float], vec_col: str = "embedding"
-) -> DataFrame:
-    """uint8 codes: round(255 * (x - min) / (max - min)) per dim, as a
-    native column expression (stored as array<int> for parquet)."""
-    arr = F.col(vec_col).cast("array<double>")
-    scales = [(mx - mn) if mx > mn else 1.0 for mn, mx in zip(mins, maxs)]
-    codes = F.array(
-        *[
-            F.round(
-                (F.element_at(arr, i + 1) - float(mins[i])) / float(scales[i]) * 255.0
-            )
-            .cast("int")
-            .alias(f"c{i}")
-            for i in range(len(mins))
-        ]
-    )
-    return df.withColumn("sq_codes", codes)
-
-
-def sq_search(
-    encoded: DataFrame,
-    mins: Sequence[float],
-    maxs: Sequence[float],
-    query_vec: Sequence[float],
-    k: int = 10,
-    key_col: str = "vec_id",
-    rerank: int = 0,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Top-k on dequantized distances (numpy kernel, per-partition
-    top-k + merge).
-
-    With `rerank > 0` (the FAISS `IndexRefine` pattern, same contract
-    as pq_search): dequantized distances select a per-partition pool of
-    `rerank*k` candidates whose TRUE vectors are re-scored exactly —
-    the corpus is scanned codes-only, exact distances touch only the
-    pool. A pool that covers the whole partition makes the result
-    identical to knn_exact (the hash-oracled anchor ann_sq_topk_exact
-    relies on this)."""
-    import pandas as pd
-
-    mn = np.asarray(mins, dtype=np.float64)
-    sc = np.asarray(
-        [(b - a) if b > a else 1.0 for a, b in zip(mins, maxs)], dtype=np.float64
-    )
-    q = np.asarray([float(v) for v in query_vec], dtype=np.float64)
-    key_type = dict(encoded.dtypes)[key_col]
-    pool = max(k * rerank, k) if rerank else 2 * k
-    do_rerank = rerank > 0 and vec_col in encoded.columns
-
-    def topk(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        best = None
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            codes = np.stack(pdf["sq_codes"].to_numpy()).astype(np.float64)
-            deq = mn + codes / 255.0 * sc
-            d = deq - q
-            s = np.einsum("ij,ij->i", d, d)
-            cand = pd.DataFrame({key_col: pdf[key_col].to_numpy(), "score": s})
-            if do_rerank:
-                cand[vec_col] = pdf[vec_col].to_numpy()
-            best = cand if best is None else pd.concat([best, cand])
-            best = best.nsmallest(pool, ["score", key_col])
-        if best is None:
-            return
-        if do_rerank:
-            vecs = np.stack(best[vec_col].to_numpy()).astype(np.float64)
-            best = best.drop(columns=[vec_col])
-            best["score"] = ((vecs - q[None, :]) ** 2).sum(axis=1)
-        best["score"] = np.round(best["score"], 6)
-        yield best
-
-    import pandas as pd  # noqa: F811
-
-    cols = [key_col, "sq_codes"] + ([vec_col] if do_rerank else [])
-    local = encoded.select(*cols).mapInPandas(
-        topk, schema=f"{key_col} {key_type}, score double"
-    )
-    return local.orderBy("score", key_col).limit(k)
-
-
-# -- product quantization ---------------------------------------------------
+    mins, maxs = _per_dim(df, vec_col, F.min, F.max)
+    return mins, maxs
 
 
 def pq_train(
-    df: DataFrame,
-    m: int = 8,
-    k_codebook: int = 32,
-    vec_col: str = "embedding",
-    seed: int = 42,
-    train_sample: int = 50_000,
+    df: DataFrame, m: int = 8, k_codebook: int = 32, vec_col: str = "embedding",
+    seed: int = 42, train_sample: int = 50_000,
 ) -> list[np.ndarray]:
     """Learn M per-subspace codebooks on a deterministic hash-sampled
     subset, k-means run driver-side in numpy.
@@ -150,9 +251,8 @@ def pq_train(
     caps at ~256 points per centroid) — the statistics converge long
     before the corpus size matters, so even at 100 TB the training
     input is a ~50k-row collect; only ENCODING and SEARCH touch the
-    full corpus, and those are distributed. (An MLlib-KMeans-per-
-    subspace variant works but pays 8 sequential fit-job overheads for
-    identical codebooks.) Returns M (k_codebook, dim/m) arrays."""
+    full corpus, and those are distributed. Returns M (k_codebook,
+    dim/m) arrays."""
     arr = F.col(vec_col).cast("array<double>")
     dim = df.select(F.size(arr).alias("d")).first()["d"]
     if dim % m != 0:
@@ -184,79 +284,38 @@ def pq_train(
     return books
 
 
-def pq_encode(
-    df: DataFrame, codebooks: list[np.ndarray], vec_col: str = "embedding"
+def bq_train(df: DataFrame, vec_col: str = "embedding") -> list:
+    """Per-dimension mean over the corpus — the 1-bit threshold vector.
+    One aggregation (the cheapest quantizer to train: BQ needs only a
+    centering point; FAISS uses 0 for normalized vectors, the
+    per-dimension mean generalizes to uncentered corpora)."""
+    return [float(x) for x in _per_dim(df, vec_col, F.avg)[0]]
+
+
+# -- the two pipelines ----------------------------------------------------------
+
+
+def _kernel_search(
+    frame: DataFrame, codec, q: np.ndarray, k: int, rerank: int,
+    key_col: str, vec_col: str,
 ) -> DataFrame:
-    """M uint8 codes per vector: nearest centroid per subspace, assigned
-    in one vectorized numpy pass per partition."""
+    """Numpy-kernel scorers: per-partition pool of the `pool` best
+    (score, key) inside one mapInPandas, exact refine of the pool when
+    `rerank > 0` and the vectors are present, then the top-k merge."""
     import pandas as pd
 
-    m = len(codebooks)
-    sub = codebooks[0].shape[1]
-    fields = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            codes = np.empty((len(pdf), m), dtype=np.int64)
-            for j in range(m):
-                seg = mat[:, j * sub : (j + 1) * sub]
-                # (n, k) argmin via ||c||^2 - 2*x.c (matmul — encoding
-                # scans the FULL corpus, so no (n,k,sub) temporaries)
-                d2 = (codebooks[j] ** 2).sum(axis=1)[None, :] - 2.0 * (
-                    seg @ codebooks[j].T
-                )
-                codes[:, j] = d2.argmin(axis=1)
-            pdf = pdf.copy()
-            pdf["pq_codes"] = list(codes)
-            yield pdf
-
-    return df.mapInPandas(encode, schema=f"{fields}, pq_codes array<long>")
-
-
-def pq_search(
-    encoded: DataFrame,
-    codebooks: list[np.ndarray],
-    query_vec: Sequence[float],
-    k: int = 10,
-    key_col: str = "vec_id",
-    rerank: int = 4,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Asymmetric-distance top-k: per query, an (M, K) lookup table of
-    subspace distances; each candidate's score = sum of M table cells.
-
-    With `rerank > 0` (the FAISS `IndexRefine` pattern): ADC selects a
-    per-partition pool of `rerank*k` candidates, whose TRUE vectors are
-    then re-scored exactly — the full corpus is still scanned codes-only
-    (M bytes/row), and exact distances touch only the small pool, so the
-    refine step costs O(partitions * rerank * k * dim) regardless of
-    corpus size. `rerank=0` is pure ADC (no float reads at all)."""
-    import pandas as pd
-
-    m = len(codebooks)
-    sub = codebooks[0].shape[1]
-    q = np.asarray([float(v) for v in query_vec], dtype=np.float64)
-    # ADC lookup table: lut[j][c] = ||q_j - centroid_jc||^2
-    lut = np.stack(
-        [
-            ((codebooks[j] - q[j * sub : (j + 1) * sub]) ** 2).sum(axis=1)
-            for j in range(m)
-        ]
-    )
-    key_type = dict(encoded.dtypes)[key_col]
+    score = codec.kernel(q)
+    key_type = dict(frame.dtypes)[key_col]
     pool = max(k * rerank, k) if rerank else 2 * k
-    do_rerank = rerank > 0 and vec_col in encoded.columns
+    do_rerank = rerank > 0 and vec_col in frame.columns
+    code_col = codec.column
 
     def topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         best = None
         for pdf in batches:
             if pdf.empty:
                 continue
-            codes = np.stack(pdf["pq_codes"].to_numpy())
-            s = lut[np.arange(m)[None, :], codes].sum(axis=1)
+            s = score(np.stack(pdf[code_col].to_numpy()))
             cand = pd.DataFrame({key_col: pdf[key_col].to_numpy(), "score": s})
             if do_rerank:
                 cand[vec_col] = pdf[vec_col].to_numpy()
@@ -271,722 +330,319 @@ def pq_search(
         best["score"] = np.round(best["score"], 6)
         yield best
 
-    cols = [key_col, "pq_codes"] + ([vec_col] if do_rerank else [])
-    local = encoded.select(*cols).mapInPandas(
-        topk, schema=f"{key_col} {key_type}, score double"
-    )
+    cols = [key_col, code_col] + ([vec_col] if do_rerank else [])
+    schema = f"{key_col} {key_type}, score double"
+    local = frame.select(*cols).mapInPandas(topk, schema=schema)
     return local.orderBy("score", key_col).limit(k)
 
 
-def ivf_pq_search(
-    centroids: list[tuple[int, list[float]]],
-    encoded: DataFrame,
-    codebooks: list[np.ndarray],
-    query_vec: Sequence[float],
-    k: int = 10,
-    nprobe: int = 4,
-    rerank: int = 4,
-    key_col: str = "vec_id",
-    vec_col: str = "embedding",
+def _column_search(
+    frame: DataFrame, coarse: Column, q: list[float], k: int, rerank: int,
+    key_col: str, vec_col: str, by_key: bool = False,
 ) -> DataFrame:
-    """IVF+PQ — the FAISS `IndexIVFPQ(+refine)` composition, and the
-    plan a 100 TB corpus actually serves from:
+    """Column scorers: one global pool of the rerank·k best by
+    (coarse, key) — TakeOrderedAndProject, ≤ pool rows leave each
+    partition — then exact squared-L2 re-score, top-k by (score, key).
 
-    1. coarse quantizer (driver-side: centroid count is tiny) ranks
-       centroids, keeping `nprobe` → an IN filter on centroid_id that
-       becomes parquet PARTITION PRUNING when the encoded corpus is
-       written via ann.ivf_write — only nprobe/n_centroids of the data
-       is read at all;
-    2. within probed partitions, the scan touches PQ codes only
-       (M bytes/row, ADC lookup-table scoring);
-    3. the true vectors of the per-partition candidate pool are
-       re-scored exactly (pq_search's rerank).
-
-    `encoded` = pq_encode(assigned) where assigned carries centroid_id
-    from ann.ivf_build. Recall-tested, not hash-matched (SURVEY §5.2).
-    """
-    probe_ids = ivf_probe(centroids, query_vec, nprobe)
-    pruned = encoded.filter(F.col("centroid_id").isin(probe_ids))
-    return pq_search(
-        pruned, codebooks, query_vec, k=k, key_col=key_col, rerank=rerank, vec_col=vec_col
+    `by_key` (persisted layouts) keeps the vector column out of the
+    coarse scan: the pool's keys are collected and only their rows are
+    re-read at full dimension (a bounded key-literal pushdown)."""
+    pool_n = max(int(rerank) * k, k)
+    if by_key and pool_n > 100_000:
+        # clamp an anchor-sized pool (rerank=10**6) to the served rows:
+        # TakeOrdered preallocates 2·pool_n slots per task, which OOMs a
+        # session without session.get_spark's topKSortFallbackThreshold
+        pool_n = min(pool_n, frame.count())
+    scan = frame if by_key else frame.filter(F.col(vec_col).isNotNull())
+    cols = [key_col] if by_key else [key_col, vec_col]
+    pool = (
+        scan.select(*cols, coarse.alias("__coarse"))
+        .orderBy("__coarse", key_col)
+        .limit(pool_n)
+    )
+    if by_key:
+        pool = frame.filter(F.col(key_col).isin([r[key_col] for r in pool.collect()]))
+    return (
+        pool.select(key_col, F.round(squared_l2(vec_col, q), 6).alias("score"))
+        .orderBy("score", key_col)
+        .limit(k)
     )
 
 
-# -- binary quantization ------------------------------------------------------
+def _search(
+    frame, codec, centroids, q, k, nprobe, rerank, key_col, vec_col, by_key=False
+):
+    """Probe (when centroids are given), then the codec's pipeline."""
+    q = [float(v) for v in q]
+    if centroids is not None:
+        cells = ivf_probe(centroids, q, nprobe)
+        frame = frame.filter(F.col("centroid_id").isin(cells))
+    if hasattr(codec, "kernel"):
+        return _kernel_search(
+            frame, codec, np.asarray(q, dtype=np.float64), k, rerank, key_col, vec_col
+        )
+    return _column_search(
+        frame, codec.coarse(q), q, k, rerank, key_col, vec_col, by_key=by_key
+    )
 
 
-def bq_train(df: DataFrame, vec_col: str = "embedding") -> list:
-    """Per-dimension mean over the corpus — the 1-bit threshold vector.
-    One aggregation (the cheapest quantizer to train: BQ needs only a
-    centering point; FAISS uses 0 for normalized vectors, the
-    per-dimension mean generalizes to uncentered corpora)."""
-    arr = F.col(vec_col).cast("array<double>")
-    dim = df.select(F.size(arr).alias("d")).first()["d"]
-    row = df.select(
-        *[F.avg(F.element_at(arr, i + 1)).alias(f"m{i}") for i in range(dim)]
-    ).first()
-    return [float(x) for x in row]
+def codec_search(
+    encoded: DataFrame, codec, query_vec: Sequence[float], k: int = 10,
+    rerank: int = 4, centroids: list | None = None, nprobe: int = 4,
+    key_col: str = "vec_id", vec_col: str = "embedding",
+) -> DataFrame:
+    """Quantized top-k over an in-plan frame carrying `codec.column`
+    (codec.encode). With `centroids` (ann.ivf_build), only the `nprobe`
+    cells ivf_probe picks are scanned — an IN filter on centroid_id
+    that becomes partition pruning over an ivf_write layout."""
+    return _search(
+        encoded, codec, centroids, query_vec, k, nprobe, rerank, key_col, vec_col
+    )
 
 
-def _bq_words(vals, means) -> list[int]:
-    """Driver-side packing of one vector into 32-bit words (bit i of
-    word w = sign of dimension 32w+i against its mean)."""
-    words = []
-    for w0 in range(0, len(means), 32):
-        word = 0
-        for i, m in enumerate(means[w0 : w0 + 32]):
-            if float(vals[w0 + i]) > m:
-                word |= 1 << i
-        words.append(word)
-    return words
+# -- the persisted layout ---------------------------------------------------------
+
+
+def _write_sidecar(path: str, codec, partitioned: bool) -> None:
+    tmp = os.path.join(path, CODEC_FILE + ".tmp")
+    with open(tmp, "w") as fh:
+        meta = {"kind": codec.kind, "state": codec.state(), "partitioned": partitioned}
+        json.dump(meta, fh)
+    os.replace(tmp, os.path.join(path, CODEC_FILE))
+
+
+def _read_sidecar(path: str) -> tuple:
+    """(codec, partitioned) of the layout at `path`."""
+    with open(os.path.join(path, CODEC_FILE)) as fh:
+        meta = json.load(fh)
+    return _CODECS[meta["kind"]](**meta["state"]), meta["partitioned"]
+
+
+def read_codec(path: str):
+    """The layout's FROZEN codec, read back from the layout itself (as
+    ivf_read_quantizer), so no caller drifts from the writer's training."""
+    return _read_sidecar(path)[0]
+
+
+def _layout_rows(df, codec, aid: str, key_col: str, vec_col: str) -> DataFrame:
+    cells = ["centroid_id"] if "centroid_id" in df.columns else []
+    return codec.encode(df, vec_col).select(
+        key_col, codec.column, vec_col, *cells, F.lit(aid).alias("aid")
+    )
+
+
+def codec_write(
+    df: DataFrame, path: str, codec, centroids: list | None = None,
+    key_col: str = "vec_id", vec_col: str = "embedding",
+) -> None:
+    """Persist the quantized serving layout: (key, code, vector, aid)
+    parquet rows, the codec state in `_codec.json`. A frame carrying
+    `centroid_id` (or given `centroids`, which assign it) is written
+    partitioned by cell through ann.ivf_write, with the quantizer in
+    `_quantizer.json` when `centroids` is given. Rows with a null
+    vector are dropped. The base attempt publishes last."""
+    shutil.rmtree(versioned.attempts_dir(path), ignore_errors=True)
+    df = df.filter(F.col(vec_col).isNotNull())
+    if centroids is not None and "centroid_id" not in df.columns:
+        df = ivf_assign(df, centroids, vec_col)
+    rows = _layout_rows(df, codec, "base", key_col, vec_col)
+    partitioned = "centroid_id" in rows.columns
+    if partitioned:
+        ivf_write(rows, path, centroids=centroids)
+    else:
+        rows.write.mode("overwrite").parquet(path)
+    _write_sidecar(path, codec, partitioned)
+    versioned.publish_attempt(path, "base")
+
+
+def codec_append(
+    df: DataFrame, path: str, key_col: str = "vec_id", vec_col: str = "embedding",
+    batch_id: int | None = None,
+) -> bool:
+    """O(batch), one Spark job: encode with the layout's frozen codec
+    (on a partitioned layout, assign to its persisted quantizer's cells)
+    and append. A batch_id that already published is skipped (returns
+    False); a crashed attempt's rows stay unpublished orphans. Caller
+    contract: batch keys must be new (dedup/anti-join upstream)."""
+    if versioned.batch_published(path, batch_id):
+        return False
+    codec, partitioned = _read_sidecar(path)
+    df = df.filter(F.col(vec_col).isNotNull())
+    if partitioned:
+        df = ivf_assign(df, ivf_read_quantizer(path), vec_col)
+    aid = uuid.uuid4().hex[:16]
+    writer = _layout_rows(df, codec, aid, key_col, vec_col).write.mode("append")
+    if partitioned:
+        writer = writer.partitionBy("centroid_id")
+    writer.parquet(path)
+    versioned.publish_attempt(path, aid, batch_id)
+    return True
+
+
+def codec_read_search(
+    spark, path: str, query_vec: Sequence[float], k: int = 10, nprobe: int = 4,
+    rerank: int = 4, key_col: str = "vec_id", vec_col: str = "embedding",
+) -> DataFrame:
+    """Serve top-k from a persisted layout — the restart path, nothing
+    but the directory needed: published attempts only; on a partitioned
+    layout only the `nprobe` cells of its persisted quantizer (partition
+    pruning opens only their files); then the codec's pipeline."""
+    codec, partitioned = _read_sidecar(path)
+    centroids = ivf_read_quantizer(path) if partitioned else None
+    layout = spark.read.parquet(path).filter(
+        F.col("aid").isin(versioned.published_aids(path))
+    )
+    return _search(
+        layout, codec, centroids, query_vec, k, nprobe, rerank, key_col, vec_col,
+        by_key=True,
+    )
+
+
+# -- the public per-codec names: thin wrappers over the codec API ---------------
+
+
+def sq_encode(
+    df: DataFrame, mins: Sequence[float], maxs: Sequence[float],
+    vec_col: str = "embedding",
+) -> DataFrame:
+    return SQCodec(mins, maxs).encode(df, vec_col)
+
+
+def sq_search(
+    encoded: DataFrame, mins: Sequence[float], maxs: Sequence[float],
+    query_vec: Sequence[float], k: int = 10, key_col: str = "vec_id",
+    rerank: int = 0, vec_col: str = "embedding",
+) -> DataFrame:
+    return codec_search(
+        encoded, SQCodec(mins, maxs), query_vec, k=k, rerank=rerank,
+        key_col=key_col, vec_col=vec_col,
+    )
+
+
+def pq_encode(
+    df: DataFrame, codebooks: list[np.ndarray], vec_col: str = "embedding"
+) -> DataFrame:
+    return PQCodec(codebooks).encode(df, vec_col)
+
+
+def pq_search(
+    encoded: DataFrame, codebooks: list[np.ndarray], query_vec: Sequence[float],
+    k: int = 10, key_col: str = "vec_id", rerank: int = 4, vec_col: str = "embedding",
+) -> DataFrame:
+    """`rerank=0` is pure ADC: no float reads at all."""
+    return codec_search(
+        encoded, PQCodec(codebooks), query_vec, k=k, rerank=rerank,
+        key_col=key_col, vec_col=vec_col,
+    )
+
+
+def ivf_pq_search(
+    centroids: list[tuple[int, list[float]]], encoded: DataFrame,
+    codebooks: list[np.ndarray], query_vec: Sequence[float], k: int = 10,
+    nprobe: int = 4, rerank: int = 4, key_col: str = "vec_id", vec_col: str = "embedding",
+) -> DataFrame:
+    """`encoded` = pq_encode(assigned), assigned by ann.ivf_build."""
+    return codec_search(
+        encoded, PQCodec(codebooks), query_vec, k=k, rerank=rerank,
+        centroids=centroids, nprobe=nprobe, key_col=key_col, vec_col=vec_col,
+    )
 
 
 def bq_encode(
     df: DataFrame, means: Sequence[float], vec_col: str = "embedding"
 ) -> DataFrame:
-    """1-bit codes: 32 dimensions pack into one int word, 32x smaller
-    than float32 — BUILT AS A NATIVE COLUMN EXPRESSION (a sum of
-    disjoint power-of-two CASE terms per word), so encoding stays
-    inside whole-stage codegen: no Python, no Arrow, scales with
-    executors. Adds `bq_codes array<int>`; keeps every input column
-    (the true vector rides along for rerank)."""
-    arr = F.col(vec_col).cast("array<double>")
-    words = []
-    for w0 in range(0, len(means), 32):
-        terms = [
-            F.when(
-                F.element_at(arr, w0 + i + 1) > F.lit(float(m)),
-                F.lit(1 << i).cast("long"),
-            ).otherwise(F.lit(0).cast("long"))
-            for i, m in enumerate(means[w0 : w0 + 32])
-        ]
-        word = terms[0]
-        for t in terms[1:]:
-            word = word + t
-        words.append(word.cast("long"))
-    return df.withColumn("bq_codes", F.array(*words))
+    return BQCodec(means).encode(df, vec_col)
 
 
 def bq_search(
-    encoded: DataFrame,
-    means: Sequence[float],
-    query_vec: Sequence[float],
-    k: int = 10,
-    key_col: str = "vec_id",
-    rerank: int = 4,
-    vec_col: str = "embedding",
+    encoded: DataFrame, means: Sequence[float], query_vec: Sequence[float],
+    k: int = 10, key_col: str = "vec_id", rerank: int = 4, vec_col: str = "embedding",
 ) -> DataFrame:
-    """BQ candidate generation + exact refine, fully declarative:
-
-    1. Hamming distance between the corpus codes and the query's codes
-       — zip_with + bit_count(xor) folds, all JVM codegen over the
-       32x-compressed column (the scan never reads the float vectors
-       for ranking).
-    2. Top-(rerank*k) pool by (hamming, key) — TakeOrderedAndProject,
-       ≤ pool rows leave each partition.
-    3. Exact squared-L2 re-score of the pool's TRUE vectors, top-k by
-       (score, key) — the FAISS IndexBinaryFlat + refine shape.
-
-    A pool covering the whole corpus degenerates to knn_exact (the
-    hash-oracled anchor ann_bq_topk_exact relies on this, same
-    contract as sq_search/pq_search rerank anchors)."""
-    from distributed_vector_database_spark.functions.vector import squared_l2
-
-    qwords = _bq_words([float(v) for v in query_vec], list(means))
-    qlit = F.array(*[F.lit(int(w)).cast("long") for w in qwords])
-    ham = F.aggregate(
-        F.zip_with(
-            F.col("bq_codes"),
-            qlit,
-            lambda a, b: F.bit_count(a.bitwiseXOR(b)),
-        ),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
-    pool_n = max(int(rerank) * k, k)
-    pool = (
-        encoded.filter(F.col(vec_col).isNotNull())
-        .select(key_col, vec_col, ham.alias("__ham"))
-        .orderBy("__ham", key_col)
-        .limit(pool_n)
-    )
-    return (
-        pool.select(
-            key_col,
-            F.round(squared_l2(vec_col, list(query_vec)), 6).alias("score"),
-        )
-        .orderBy("score", key_col)
-        .limit(k)
+    return codec_search(
+        encoded, BQCodec(means), query_vec, k=k, rerank=rerank,
+        key_col=key_col, vec_col=vec_col,
     )
 
 
 def ivf_bq_search(
-    centroids: list,
-    encoded: DataFrame,
-    means: Sequence[float],
-    query_vec: Sequence[float],
-    k: int = 10,
-    nprobe: int = 4,
-    rerank: int = 4,
-    key_col: str = "vec_id",
-    vec_col: str = "embedding",
+    centroids: list, encoded: DataFrame, means: Sequence[float],
+    query_vec: Sequence[float], k: int = 10, nprobe: int = 4, rerank: int = 4,
+    key_col: str = "vec_id", vec_col: str = "embedding",
 ) -> DataFrame:
-    """IVF+BQ — the FAISS `IndexBinaryIVF(+refine)` composition:
-    coarse-quantizer partition pruning (only nprobe/n_centroids of the
-    layout is read), Hamming ranking over the 32x-compressed 1-bit
-    codes inside the probed cells (bit_count(xor) codegen — the scan
-    never touches float vectors for ranking), exact refine of the
-    candidate pool. The cheapest serving tier in the composition
-    matrix (IVF×flat / IVF×PQ / IVF×BQ): codes cost 2 bigints/row at
-    64-d vs 8 PQ bytes, with no codebook training beyond per-dim
-    means.
-
-    `encoded` = bq_encode(assigned) where assigned carries centroid_id
-    from ann.ivf_build. nprobe >= n_centroids + pool >= corpus
-    degenerates to knn_exact (hash-anchorable); serving mode is
-    recall-tested like the other compositions."""
-    probe_ids = ivf_probe(centroids, query_vec, nprobe)
-    pruned = encoded.filter(F.col("centroid_id").isin(probe_ids))
-    return bq_search(
-        pruned, means, query_vec, k=k, key_col=key_col, rerank=rerank, vec_col=vec_col
-    )
-
-
-# -- Matryoshka (prefix-dimension) search ------------------------------------
-
-
-def mrl_search(
-    df: DataFrame,
-    query_vec: Sequence[float],
-    k: int = 10,
-    prefix_dim: int = 16,
-    rerank: int = 4,
-    key_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Matryoshka-style truncated-dimension search (Kusupati et al.
-    2022, 'Matryoshka Representation Learning'): rank the corpus on
-    the FIRST `prefix_dim` coordinates only, then exactly re-score a
-    rerank*k candidate pool at full dimension — the adaptive-retrieval
-    shape MRL-trained embedders are built for, and the zero-training
-    member of the quantization family (SQ/PQ/BQ learn codes; MRL just
-    slices).
-
-    Fully declarative: the coarse distance is squared-L2 over a
-    codegen `slice()` of the vector column, the pool is one
-    TakeOrderedAndProject (≤ pool rows leave each partition), and the
-    refine touches pool rows only. `prefix_dim >= dim` makes coarse
-    ranking already exact, so the result must reproduce knn_exact
-    bit-for-bit (the hash-oracled anchor ann_mrl_topk_exact relies on
-    this, same contract as the SQ/PQ/BQ rerank anchors). For real I/O
-    truncation at scale, serve from the persisted layout
-    (mrl_write/mrl_read_search) where the prefix is its own parquet
-    column and the coarse scan's ReadSchema never touches the full
-    vectors."""
-    from distributed_vector_database_spark.functions.vector import squared_l2
-
-    q = [float(v) for v in query_vec]
-    p = min(int(prefix_dim), len(q))
-    coarse = squared_l2(
-        F.slice(F.col(vec_col).cast("array<double>"), 1, p), q[:p]
-    )
-    pool_n = max(int(rerank) * k, k)
-    pool = (
-        df.filter(F.col(vec_col).isNotNull())
-        .select(key_col, vec_col, coarse.alias("__coarse"))
-        .orderBy("__coarse", key_col)
-        .limit(pool_n)
-    )
-    return (
-        pool.select(
-            key_col,
-            F.round(squared_l2(vec_col, q), 6).alias("score"),
-        )
-        .orderBy("score", key_col)
-        .limit(k)
-    )
-
-
-def mrl_write(
-    df: DataFrame,
-    path: str,
-    prefix_dim: int = 16,
-    key_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Persist the Matryoshka serving layout: the dimension prefix is
-    materialized as its OWN parquet column next to the full vector, so
-    a coarse scan that selects only (key, prefix) reads prefix_dim/dim
-    of the vector bytes — parquet column pruning is what makes
-    truncation an I/O win rather than a compute trick. At 64->16 dims
-    the coarse pass reads 4x less; a 100 TB corpus serves its first
-    pass from 25 TB.
-
-    Write-audit-publish (same contract as postings_write): rows carry
-    a write-attempt id and serve only once the attempt's marker exists
-    under {path}/applied — a crashed mrl_append leaves invisible
-    orphans, never partial results."""
-    import shutil
-
-    from distributed_vector_database_spark.operators.lexical import (
-        _applied_dir,
-        _publish,
-    )
-
-    shutil.rmtree(_applied_dir(path), ignore_errors=True)
-    (
-        df.filter(F.col(vec_col).isNotNull())
-        .select(
-            key_col,
-            F.slice(
-                F.col(vec_col).cast("array<double>"), 1, int(prefix_dim)
-            ).alias("mrl_prefix"),
-            vec_col,
-            F.lit("base").alias("aid"),
-        )
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-    _publish(path, "base", None, 0, 0)
-
-
-def mrl_append(
-    df: DataFrame,
-    path: str,
-    key_col: str = "vec_id",
-    vec_col: str = "embedding",
-    batch_id: int | None = None,
-) -> bool:
-    """O(batch) maintenance for the Matryoshka layout: slice the
-    batch's prefix at the layout's persisted width and append — no
-    touch of existing files, no stats to rebuild (the layout has no
-    trained state; its only invariant is the prefix width, read back
-    from the data so an appender can never drift from the writer).
-
-    Replay-safe like postings_append: rows land under a fresh attempt
-    id and only become servable when the marker publishes; a batch_id
-    that already published is skipped (returns False); a crashed
-    attempt's rows are unpublished orphans, not duplicates. Caller
-    contract: batch keys must be new (dedup/anti-join upstream)."""
-    import uuid
-
-    from distributed_vector_database_spark.operators.lexical import (
-        _applied_markers,
-        _publish,
-    )
-
-    if batch_id is not None:
-        if any(m.get("batch_id") == batch_id for m in _applied_markers(path)):
-            return False
-    spark = df.sparkSession
-    p = spark.read.parquet(path).select(
-        F.size("mrl_prefix").alias("d")
-    ).first()["d"]
-    aid = uuid.uuid4().hex[:16]
-    (
-        df.filter(F.col(vec_col).isNotNull())
-        .select(
-            key_col,
-            F.slice(F.col(vec_col).cast("array<double>"), 1, int(p)).alias(
-                "mrl_prefix"
-            ),
-            vec_col,
-            F.lit(aid).alias("aid"),
-        )
-        .write.mode("append")
-        .parquet(path)
-    )
-    _publish(path, aid, batch_id, 0, 0)
-    return True
-
-
-def mrl_read_search(
-    spark,
-    path: str,
-    query_vec: Sequence[float],
-    k: int = 10,
-    rerank: int = 4,
-    key_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Serve from the persisted Matryoshka layout in two passes:
-
-    1. Coarse: scan (key, mrl_prefix) ONLY — the ReadSchema excludes
-       the full vector column entirely, so the pass reads
-       prefix_dim/dim of the corpus bytes — and take the rerank*k
-       pool by prefix distance (one TakeOrderedAndProject).
-    2. Refine: re-read ONLY the pool's rows (bounded key-literal
-       pushdown — pool is ≤ rerank*k keys, never corpus-sized) at
-       full dimension and score exactly.
-
-    rerank covering the corpus degenerates pass 1 to 'everything is
-    in the pool', making the result exactly knn_exact regardless of
-    prefix quality — the layout-path anchor parameterization."""
-    from distributed_vector_database_spark.functions.vector import squared_l2
-
-    from distributed_vector_database_spark.operators.lexical import (
-        _applied_markers,
-    )
-
-    q = [float(v) for v in query_vec]
-    markers = _applied_markers(path)
-    if not markers:
-        raise FileNotFoundError(f"no published attempts under {path}/applied")
-    aids = sorted(m["aid"] for m in markers)
-    layout = spark.read.parquet(path).filter(F.col("aid").isin(aids))
-    p = layout.select(F.size("mrl_prefix").alias("d")).first()["d"]
-    # clamp the pool to the served row count: an anchor-sized rerank
-    # (10**6) must not become a 10M-row TakeOrdered buffer — guava's
-    # TopKSelector allocates 2k slots up front PER TASK and OOMs the
-    # JVM long before any row materializes
-    n_rows = layout.count()
-    pool_n = min(max(int(rerank) * k, k), n_rows)
-    pool_keys = [
-        r[key_col]
-        for r in (
-            layout.select(
-                key_col,
-                squared_l2("mrl_prefix", q[: int(p)]).alias("__coarse"),
-            )
-            .orderBy("__coarse", key_col)
-            .limit(pool_n)
-            .collect()
-        )
-    ]
-    return (
-        spark.read.parquet(path)
-        .filter(F.col("aid").isin(aids))
-        .filter(F.col(key_col).isin(pool_keys))
-        .select(
-            key_col,
-            F.round(squared_l2(vec_col, q), 6).alias("score"),
-        )
-        .orderBy("score", key_col)
-        .limit(k)
+    """`encoded` = bq_encode(assigned), assigned by ann.ivf_build."""
+    return codec_search(
+        encoded, BQCodec(means), query_vec, k=k, rerank=rerank,
+        centroids=centroids, nprobe=nprobe, key_col=key_col, vec_col=vec_col,
     )
 
 
 def ivf_mrl_search(
-    centroids: list,
-    assigned: DataFrame,
-    query_vec: Sequence[float],
-    k: int = 10,
-    nprobe: int = 4,
-    prefix_dim: int = 16,
-    rerank: int = 4,
-    key_col: str = "vec_id",
-    vec_col: str = "embedding",
+    centroids: list, assigned: DataFrame, query_vec: Sequence[float], k: int = 10,
+    nprobe: int = 4, prefix_dim: int = 16, rerank: int = 4,
+    key_col: str = "vec_id", vec_col: str = "embedding",
 ) -> DataFrame:
-    """IVF×MRL — coarse-quantizer cell pruning composed with
-    prefix-dimension ranking INSIDE the probed cells, then exact
-    refine: the third member of the candidate-tier matrix next to
-    IVF×PQ and IVF×BQ, and the only one whose candidate stage needs no
-    training or codes at all (the prefix is a byte range of the vector
-    column). nprobe covering every cell + a corpus-sized pool
-    degenerates to knn_exact (hash-anchorable, same contract as the
-    sibling compositions).
-
-    100 TB: partition pruning cuts the scan to nprobe/n_centroids of
-    the layout; within probed cells the rank pass touches
-    prefix_dim/dim of the vector bytes (column-pruned when served from
-    an mrl_write layout partitioned by centroid)."""
-    probe_ids = ivf_probe(centroids, query_vec, nprobe)
-    pruned = assigned.filter(F.col("centroid_id").isin(probe_ids))
-    return mrl_search(
-        pruned,
-        query_vec,
-        k=k,
-        prefix_dim=prefix_dim,
-        rerank=rerank,
-        key_col=key_col,
-        vec_col=vec_col,
+    """Prefix ranking of the raw vectors (MRLCodec encodes in-plan);
+    `centroids=None` searches every row. For I/O truncation at scale,
+    serve from mrl_write's layout, where the prefix is its own column."""
+    codec = MRLCodec(min(int(prefix_dim), len(query_vec)))
+    return codec_search(
+        codec.encode(assigned, vec_col), codec, query_vec, k=k, rerank=rerank,
+        centroids=centroids, nprobe=nprobe, key_col=key_col, vec_col=vec_col,
     )
 
 
-def ivf_mrl_write(
-    assigned: DataFrame,
-    path: str,
-    prefix_dim: int = 16,
-    centroids: list | None = None,
-    key_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Persist the IVF×MRL serving layout: centroid-partitioned (probe
-    = parquet partition pruning) with the dimension prefix as its own
-    column (coarse rank = parquet column pruning). A probe against
-    this layout reads (nprobe/n_centroids) × (prefix_dim/dim) of the
-    corpus vector bytes — the two pruning axes multiply, which is the
-    whole point of composing the layouts. Quantizer persisted alongside
-    for the restart path (ivf_write(centroids=))."""
-    with_prefix = assigned.filter(F.col(vec_col).isNotNull()).withColumn(
-        "mrl_prefix",
-        F.slice(F.col(vec_col).cast("array<double>"), 1, int(prefix_dim)),
-    )
-    ivf_write(with_prefix, path, centroids=centroids)
-
-
-def ivf_mrl_read_search(
-    spark,
-    path: str,
-    query_vec: Sequence[float],
-    k: int = 10,
-    nprobe: int = 4,
-    rerank: int = 4,
-    key_col: str = "vec_id",
-    vec_col: str = "embedding",
+def mrl_search(
+    df: DataFrame, query_vec: Sequence[float], k: int = 10, prefix_dim: int = 16,
+    rerank: int = 4, key_col: str = "vec_id", vec_col: str = "embedding",
 ) -> DataFrame:
-    """Serve from the persisted IVF×MRL layout — the restart path with
-    both prunings live:
-
-    1. Probe: nearest nprobe cells from the PERSISTED quantizer;
-       partition pruning opens only their files.
-    2. Coarse: scan (key, mrl_prefix) of the probed cells ONLY — the
-       ReadSchema never touches the full vector column (pinned by
-       tests/test_mrl.py) — and pool the rerank·k best by prefix
-       distance.
-    3. Refine: re-read the probed cells filtered to pool keys at full
-       dimension, exact scores, top-k.
-
-    nprobe ≥ n_centroids + a corpus pool ⟹ knn_exact bit-for-bit
-    (the layout-path anchor, same contract as every composition)."""
-    from distributed_vector_database_spark.functions.vector import squared_l2
-
-    q = [float(v) for v in query_vec]
-    probe_ids = ivf_probe(ivf_read_quantizer(path), q, nprobe)
-    cells = spark.read.parquet(path).filter(
-        F.col("centroid_id").isin(probe_ids)
-    )
-    p = cells.select(F.size("mrl_prefix").alias("d")).first()["d"]
-    # same pool clamp as mrl_read_search: TakeOrdered buffers size 2k
-    # per task regardless of actual rows
-    n_rows = cells.count()
-    pool_n = min(max(int(rerank) * k, k), n_rows)
-    pool_keys = [
-        r[key_col]
-        for r in (
-            cells.select(
-                key_col,
-                squared_l2("mrl_prefix", q[: int(p)]).alias("__coarse"),
-            )
-            .orderBy("__coarse", key_col)
-            .limit(pool_n)
-            .collect()
-        )
-    ]
-    return (
-        cells.filter(F.col(key_col).isin(pool_keys))
-        .select(
-            key_col,
-            F.round(squared_l2(vec_col, q), 6).alias("score"),
-        )
-        .orderBy("score", key_col)
-        .limit(k)
-    )
-
-
-def _write_codebooks(path: str, codebooks: list[np.ndarray]) -> None:
-    import json as _json
-    import os as _os
-
-    tmp = _os.path.join(path, "_codebooks.json.tmp")
-    with open(tmp, "w") as fh:
-        _json.dump([b.tolist() for b in codebooks], fh)
-    _os.replace(tmp, _os.path.join(path, "_codebooks.json"))
-
-
-def pq_read_codebooks(path: str) -> list[np.ndarray]:
-    """The layout's FROZEN codebooks — appenders and servers read them
-    back from the layout itself (the same self-describing discipline
-    as ivf_read_quantizer / mrl's persisted prefix width), so no
-    caller can drift from the writer's training run."""
-    import json as _json
-    import os as _os
-
-    with open(_os.path.join(path, "_codebooks.json")) as fh:
-        return [np.asarray(b, dtype=np.float64) for b in _json.load(fh)]
-
-
-def pq_write(
-    df: DataFrame,
-    path: str,
-    m: int = 8,
-    k_codebook: int = 32,
-    key_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-) -> None:
-    """Persist the product-quantization serving layout: train the M
-    per-subspace codebooks once (bounded driver-side sample,
-    pq_train), encode the corpus distributed (pq_encode), write
-    (key, pq_codes, vector) parquet with the codebooks saved beside
-    the data (_codebooks.json, atomic replace) — the FAISS index-file
-    lifecycle, Spark-shaped. Scans that read only (key, pq_codes)
-    touch M bytes of code per row; the float column exists solely for
-    the refine pass.
-
-    Write-audit-publish (same contract as postings_write/mrl_write):
-    rows carry a write-attempt id and serve only once the attempt's
-    marker exists under {path}/applied."""
-    import shutil
-
-    from distributed_vector_database_spark.operators.lexical import (
-        _applied_dir,
-        _publish,
-    )
-
-    codebooks = pq_train(
-        df, m=m, k_codebook=k_codebook, vec_col=vec_col, seed=seed
-    )
-    shutil.rmtree(_applied_dir(path), ignore_errors=True)
-    (
-        pq_encode(df.filter(F.col(vec_col).isNotNull()), codebooks,
-                  vec_col=vec_col)
-        .select(key_col, "pq_codes", vec_col, F.lit("base").alias("aid"))
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-    _write_codebooks(path, codebooks)
-    _publish(path, "base", None, 0, 0)
-
-
-def pq_append(
-    df: DataFrame,
-    path: str,
-    key_col: str = "vec_id",
-    vec_col: str = "embedding",
-    batch_id: int | None = None,
-) -> bool:
-    """O(batch) maintenance for the PQ layout: encode the batch with
-    the layout's FROZEN codebooks (the standard PQ practice — FAISS
-    `add` never retrains; codebook statistics converge on the
-    training sample and re-training would silently invalidate every
-    previously stored code) and append. No touch of existing files.
-
-    Replay-safe like postings_append/mrl_append: a batch_id that
-    already published is skipped (returns False); a crashed attempt's
-    rows are unpublished orphans, not duplicates. Caller contract:
-    batch keys must be new (dedup/anti-join upstream)."""
-    import uuid
-
-    from distributed_vector_database_spark.operators.lexical import (
-        _applied_markers,
-        _publish,
-    )
-
-    if batch_id is not None:
-        if any(m.get("batch_id") == batch_id for m in _applied_markers(path)):
-            return False
-    codebooks = pq_read_codebooks(path)
-    aid = uuid.uuid4().hex[:16]
-    (
-        pq_encode(df.filter(F.col(vec_col).isNotNull()), codebooks,
-                  vec_col=vec_col)
-        .select(key_col, "pq_codes", vec_col, F.lit(aid).alias("aid"))
-        .write.mode("append")
-        .parquet(path)
-    )
-    _publish(path, aid, batch_id, 0, 0)
-    return True
-
-
-def pq_read_search(
-    spark,
-    path: str,
-    query_vec: Sequence[float],
-    k: int = 10,
-    rerank: int = 4,
-    key_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Serve asymmetric-distance top-k from the persisted PQ layout:
-    published attempts only, codes scanned via the ADC lookup table
-    (pq_search kernel — per-partition candidate pools, exact refine
-    over rerank*k true vectors). rerank covering the corpus
-    degenerates to exact knn (the layout-path anchor
-    parameterization, same as mrl_read_search's)."""
-    from distributed_vector_database_spark.operators.lexical import (
-        _applied_markers,
-    )
-
-    markers = _applied_markers(path)
-    if not markers:
-        raise FileNotFoundError(f"no published attempts under {path}/applied")
-    aids = sorted(m["aid"] for m in markers)
-    codebooks = pq_read_codebooks(path)
-    layout = spark.read.parquet(path).filter(F.col("aid").isin(aids))
-    # clamp the refine pool to the served row count (the TakeOrdered
-    # 2k-slot-per-task guard, same as mrl_read_search)
-    if rerank:
-        n_rows = layout.count()
-        rerank = max(1, min(int(rerank), -(-n_rows // max(k, 1))))
-    return pq_search(
-        layout, codebooks, query_vec, k=k, key_col=key_col,
-        rerank=rerank, vec_col=vec_col,
+    return ivf_mrl_search(
+        None, df, query_vec, k=k, prefix_dim=prefix_dim, rerank=rerank,
+        key_col=key_col, vec_col=vec_col,
     )
 
 
 def ivf_pq_write(
-    assigned: DataFrame,
-    path: str,
-    centroids: list | None = None,
-    m: int = 8,
-    k_codebook: int = 32,
-    key_col: str = "vec_id",
-    vec_col: str = "embedding",
+    assigned: DataFrame, path: str, centroids: list | None = None, m: int = 8,
+    k_codebook: int = 32, key_col: str = "vec_id", vec_col: str = "embedding",
     seed: int = 42,
 ) -> None:
-    """Persist the IVF×PQ serving layout — the FAISS IndexIVFPQ
-    lifecycle: centroid-partitioned parquet (probe = partition
-    pruning) whose rows carry the PQ codes as their own column (ADC =
-    column pruning: the scan of the probed cells reads M bytes of
-    code per row, not the vector), with BOTH trained artifacts saved
-    beside the data (_quantizer.json via ivf_write, _codebooks.json).
-    The two pruning axes multiply exactly as in ivf_mrl_write —
-    (nprobe/n_centroids) × (M·1B / dim·8B) of the corpus bytes per
-    probe — but with trained codes instead of a dimension prefix."""
-    codebooks = pq_train(
-        assigned, m=m, k_codebook=k_codebook, vec_col=vec_col, seed=seed
-    )
-    encoded = pq_encode(
-        assigned.filter(F.col(vec_col).isNotNull()), codebooks,
-        vec_col=vec_col,
-    )
-    ivf_write(encoded, path, centroids=centroids)
-    _write_codebooks(path, codebooks)
+    """Codebooks trained once on `assigned` (pq_train), then codec_write."""
+    books = pq_train(assigned, m=m, k_codebook=k_codebook, vec_col=vec_col, seed=seed)
+    codec_write(assigned, path, PQCodec(books), centroids, key_col, vec_col)
 
 
-def ivf_pq_read_search(
-    spark,
-    path: str,
-    query_vec: Sequence[float],
-    k: int = 10,
-    nprobe: int = 4,
-    rerank: int = 4,
-    key_col: str = "vec_id",
-    vec_col: str = "embedding",
+def pq_write(
+    df: DataFrame, path: str, m: int = 8, k_codebook: int = 32,
+    key_col: str = "vec_id", vec_col: str = "embedding", seed: int = 42,
+) -> None:
+    ivf_pq_write(df, path, None, m, k_codebook, key_col, vec_col, seed)
+
+
+def ivf_mrl_write(
+    assigned: DataFrame, path: str, prefix_dim: int = 16,
+    centroids: list | None = None, key_col: str = "vec_id", vec_col: str = "embedding",
+) -> None:
+    codec_write(assigned, path, MRLCodec(prefix_dim), centroids, key_col, vec_col)
+
+
+def mrl_write(
+    df: DataFrame, path: str, prefix_dim: int = 16,
+    key_col: str = "vec_id", vec_col: str = "embedding",
+) -> None:
+    codec_write(df, path, MRLCodec(prefix_dim), None, key_col, vec_col)
+
+
+def pq_read_search(
+    spark, path: str, query_vec: Sequence[float], k: int = 10, rerank: int = 4,
+    key_col: str = "vec_id", vec_col: str = "embedding",
 ) -> DataFrame:
-    """Serve from the persisted IVF×PQ layout — the restart path:
-
-    1. Probe: nearest nprobe cells from the PERSISTED quantizer;
-       partition pruning opens only their files.
-    2. ADC: the pq_search kernel over the probed cells' code column
-       (per-partition pools via the query's (M, K) lookup table).
-    3. Refine: exact re-score of the rerank·k pool's true vectors.
-
-    nprobe ≥ n_centroids + a corpus-covering pool ⟹ knn_exact
-    bit-for-bit (the layout-path anchor, same contract as the MRL and
-    flat-PQ compositions)."""
-    q = [float(v) for v in query_vec]
-    probe_ids = ivf_probe(ivf_read_quantizer(path), q, nprobe)
-
-    codebooks = pq_read_codebooks(path)
-    cells = spark.read.parquet(path).filter(
-        F.col("centroid_id").isin(probe_ids)
+    """codec_read_search of a flat layout (pq_write, mrl_write)."""
+    return codec_read_search(
+        spark, path, query_vec, k=k, rerank=rerank, key_col=key_col, vec_col=vec_col
     )
-    if rerank:
-        n_rows = cells.count()
-        rerank = max(1, min(int(rerank), -(-n_rows // max(k, 1))))
-    return pq_search(
-        cells, codebooks, q, k=k, key_col=key_col, rerank=rerank,
-        vec_col=vec_col,
-    )
+
+
+# same signatures as the codec API's own, so the same functions
+mrl_read_search = pq_read_search
+ivf_pq_read_search = ivf_mrl_read_search = codec_read_search
+pq_append = mrl_append = codec_append

@@ -51,6 +51,16 @@ def stratified_sample(
     )
 
 
+def _persist_unless_cached(df: DataFrame) -> tuple[DataFrame, bool]:
+    """(`df` persisted, True) — or (`df`, False) when the caller already
+    cached it: Spark matches caches by plan, so unpersisting any
+    equivalent frame afterwards would drop the caller's cache too."""
+    level = df.storageLevel
+    if level.useMemory or level.useDisk:
+        return df, False
+    return df.persist(), True
+
+
 def select_by_token_budget(
     df: DataFrame,
     token_budget: int,
@@ -94,7 +104,7 @@ def select_by_token_budget(
     # input (per-doc tokenize/quality annotation) was evaluated twice —
     # once for the sample, once for the exchange. Persist the input:
     # the sampling job fills the cache, the exchange reads it.
-    df = df.persist()
+    df, owned = _persist_unless_cached(df)
     ranged = df.repartitionByRange(
         p, F.desc(order_col), F.asc(id_col)
     ).withColumn("__pid", F.spark_partition_id())
@@ -140,7 +150,8 @@ def select_by_token_budget(
         return out.localCheckpoint(eager=True)
     finally:
         ranged.unpersist()
-        df.unpersist()
+        if owned:
+            df.unpersist()
 
 
 def select_by_token_budget_grouped(
@@ -189,7 +200,7 @@ def select_by_token_budget_grouped(
     # r14: persist the input so repartitionByRange's boundary-sampling
     # job doesn't re-run the (expensive) annotation upstream — see
     # select_by_token_budget.
-    df = df.persist()
+    df, owned = _persist_unless_cached(df)
     ranged = df.repartitionByRange(
         p, F.asc(group_col), F.desc(order_col), F.asc(id_col)
     ).withColumn("__pid", F.spark_partition_id())
@@ -249,7 +260,8 @@ def select_by_token_budget_grouped(
         return out.localCheckpoint(eager=True)
     finally:
         ranged.unpersist()
-        df.unpersist()
+        if owned:
+            df.unpersist()
 
 
 def _enumerate_positions(

@@ -21,15 +21,27 @@ like `_SUCCESS`.
 Layouts that take micro-batches in place, inside one version (IVF and
 HNSW appends), keep an applied-batch ledger instead: `batch_applied`
 and `mark_batch_applied`.
+
+Append-only layouts whose rows carry a write-attempt id (`aid`: the
+postings index and the quantized codec layouts) use write-audit-publish
+instead: an attempt's rows serve only once `publish_attempt` has written
+its JSON marker under `_published/`, after the rows land. A crashed
+attempt leaves unpublished rows that no reader serves, and a replayed
+batch id is detected with `batch_published`. The directory is
+underscore-named so that Spark's parquet reader skips it, also inside a
+`centroid_id=`-partitioned layout, where a plain sub-directory would be
+taken for a conflicting partition directory.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
 MARKER = "_COMMITTED"
 LEDGER = "_applied_batches"
+ATTEMPTS = "_published"
 
 
 def _marker(path: str, v: int) -> str:
@@ -110,6 +122,56 @@ def mark_batch_applied(path: str, batch_id) -> None:
         return
     os.makedirs(os.path.join(path, LEDGER), exist_ok=True)
     open(os.path.join(path, LEDGER, f"b={batch_id}"), "w").close()
+
+
+def attempts_dir(path: str) -> str:
+    """The directory holding the published-attempt markers of `path`."""
+    return os.path.join(path, ATTEMPTS)
+
+
+def publish_attempt(path: str, aid: str, batch_id=None, **totals) -> None:
+    """Publish write attempt `aid`: call after all of its rows have
+    landed. The marker records `batch_id` and any per-attempt totals
+    (e.g. the postings' corpus-size delta), and lands by rename, so it is
+    whole or absent."""
+    d = attempts_dir(path)
+    os.makedirs(d, exist_ok=True)
+    tmp = os.path.join(d, f".{aid}.tmp")
+    with open(tmp, "w") as f:
+        json.dump({"aid": aid, "batch_id": batch_id, **totals}, f)
+    os.replace(tmp, os.path.join(d, f"{aid}.json"))
+
+
+def published_attempts(path: str) -> list[dict]:
+    """Every published attempt marker of `path`, in aid order."""
+    d = attempts_dir(path)
+    try:
+        names = sorted(os.listdir(d))
+    except FileNotFoundError:
+        return []
+    out = []
+    for n in names:
+        if n.endswith(".json") and not n.startswith("."):
+            with open(os.path.join(d, n)) as f:
+                out.append(json.load(f))
+    return out
+
+
+def published_aids(path: str) -> list[str]:
+    """The aids a reader of `path` may serve, sorted; raises
+    FileNotFoundError when no attempt is published."""
+    aids = sorted(m["aid"] for m in published_attempts(path))
+    if not aids:
+        raise FileNotFoundError(f"no published attempts under {attempts_dir(path)}")
+    return aids
+
+
+def batch_published(path: str, batch_id) -> bool:
+    """True when an attempt carrying `batch_id` is published (a None id
+    never is)."""
+    return batch_id is not None and any(
+        m.get("batch_id") == batch_id for m in published_attempts(path)
+    )
 
 
 def read_latest(spark, path: str):

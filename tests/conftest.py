@@ -53,3 +53,37 @@ def tables(spark):
     from distributed_vector_database_spark.sources.fixtures import load_tables
 
     return load_tables(spark, SF_DIR)
+
+
+@pytest.fixture
+def executed_plans(spark):
+    """`run(fn)` calls `fn` (which must force its work, e.g. collect)
+    under its own job group and returns (fn's result, the lines of the
+    formatted physical plans of the SQL executions whose jobs that group
+    ran), read from the driver's SQL status store: the plans the code
+    under test actually executed, not ones rebuilt by hand."""
+    import uuid
+
+    sc = spark.sparkContext
+    conv = sc._gateway.jvm.scala.jdk.javaapi.CollectionConverters
+
+    def run(fn):
+        group = f"plans-{uuid.uuid4().hex[:12]}"
+        sc.setJobGroup(group, group, False)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = {int(j) for j in sc.statusTracker().getJobIdsForGroup(group)}
+        store = spark._jsparkSession.sharedState().statusStore()
+        lines = []
+        it = store.executionsList().iterator()
+        while it.hasNext():
+            ex = it.next()
+            if jobs & {int(j) for j in conv.asJava(ex.jobs().keySet())}:
+                lines.extend(ex.physicalPlanDescription().splitlines())
+        return out, lines
+
+    return run
+

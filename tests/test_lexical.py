@@ -394,6 +394,7 @@ def test_bm25_postings_append_replay_and_orphans_invisible(spark, tmp_path):
 def test_postings_compact_preserves_serving_and_drops_orphans(spark, tmp_path):
     """append* -> compact: serving identical, orphan rows physically
     gone, markers folded to one."""
+    from distributed_vector_database_spark import versioned
     from distributed_vector_database_spark.operators import lexical as lx
 
     first = spark.createDataFrame(
@@ -418,7 +419,8 @@ def test_postings_compact_preserves_serving_and_drops_orphans(spark, tmp_path):
     after = [(r["doc_id"], r["score"]) for r in
              lx.bm25_postings_search(spark, idx, ["spark", "join"], k=10).collect()]
     assert after == before
-    assert len(lx._applied_markers(idx)) == 1  # folded to one base marker
+    # folded to one base marker
+    assert len(versioned.published_attempts(idx)) == 1
     total_rows = spark.read.parquet(f"{idx}/postings").count()
     assert total_rows == kept  # orphan rows physically dropped
 

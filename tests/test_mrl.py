@@ -55,32 +55,27 @@ def test_mrl_truncated_recall_on_front_loaded_data(spark):
     assert len(got & exact) >= 9
 
 
-def test_mrl_layout_roundtrip_and_column_pruning(spark, tmp_path):
+def test_mrl_layout_roundtrip_and_column_pruning(spark, tmp_path, executed_plans):
     """The persisted layout serves identically to the in-plan path,
     and the coarse pass's parquet ReadSchema contains the prefix
     column but NOT the full vector column — the I/O claim, asserted
-    on the real physical plan (createDataFrame inputs would fold to
-    LocalRelation and show nothing)."""
+    on the plans mrl_read_search actually executed."""
     df, q = _front_loaded(spark)
     path = str(tmp_path / "mrl")
     mrl_write(df, path, prefix_dim=8)
 
     exact = [(r["vec_id"], r["score"])
              for r in knn_exact(df, q, k=10, extra_cols=()).collect()]
-    got = [(r["vec_id"], r["score"])
-           for r in mrl_read_search(spark, path, q, k=10, rerank=10**6).collect()]
-    assert got == exact
-
-    layout = spark.read.parquet(path)
-    coarse = layout.select(
-        "vec_id", F.col("mrl_prefix")
-    ).orderBy("vec_id").limit(5)
-    plan = coarse._sc._jvm.PythonSQLUtils.explainString(
-        coarse._jdf.queryExecution(), "formatted"
+    rows, plan = executed_plans(
+        lambda: mrl_read_search(spark, path, q, k=10, rerank=10**6).collect()
     )
-    scan_lines = [l for l in plan.splitlines() if "ReadSchema" in l]
-    assert scan_lines and all("mrl_prefix" in l for l in scan_lines)
-    assert all("embedding" not in l for l in scan_lines)
+    assert [(r["vec_id"], r["score"]) for r in rows] == exact
+
+    schemas = [l for l in plan if l.startswith("ReadSchema:")]
+    coarse = [l for l in schemas if "mrl_prefix" in l]
+    assert coarse and all("embedding" not in l for l in coarse)
+    # the refine re-reads the pool's full vectors in a separate scan
+    assert any("embedding" in l for l in schemas)
 
 
 def test_mrl_write_drops_null_vectors_and_prefix_len(spark, tmp_path):
@@ -201,12 +196,12 @@ def test_mrl_append_replay_safety(spark, tmp_path):
 
 
 def test_streaming_mrl_maintenance(spark, tmp_path):
-    """Micro-batches folded through run_mrl_stream serve exactly the
+    """Micro-batches folded through run_codec_stream serve exactly the
     union corpus; the layout path equals knn_exact over the union."""
     import json
 
-    from distributed_vector_database_spark.streaming.mrl_maintenance import (
-        run_mrl_stream,
+    from distributed_vector_database_spark.streaming.codec_maintenance import (
+        run_codec_stream,
     )
 
     df, q = _front_loaded(spark, n=60)
@@ -226,7 +221,7 @@ def test_streaming_mrl_maintenance(spark, tmp_path):
         "".join(json.dumps({"vec_id": k, "embedding": v}) + "\n"
                 for k, v in rest.items() if k >= 40)
     )
-    sq = run_mrl_stream(
+    sq = run_codec_stream(
         spark, str(vecs_dir), path, str(tmp_path / "ckpt"),
         max_files_per_trigger=1,
     )
@@ -239,12 +234,13 @@ def test_streaming_mrl_maintenance(spark, tmp_path):
     assert served == exact
 
 
-def test_ivf_mrl_layout_both_prunings_and_exactness(spark, tmp_path):
+def test_ivf_mrl_layout_both_prunings_and_exactness(
+    spark, tmp_path, executed_plans
+):
     """The persisted IVF x MRL layout serves knn_exact at full
-    probe/pool, and the coarse pass's physical plan shows BOTH
-    prunings: PartitionFilters on centroid_id AND a ReadSchema without
-    the full vector column."""
-    from distributed_vector_database_spark.functions.vector import squared_l2
+    probe/pool, and the plans a partial probe actually executed show
+    BOTH prunings: PartitionFilters on centroid_id in every scan AND a
+    coarse ReadSchema without the full vector column."""
     from distributed_vector_database_spark.operators.ann import ivf_build
     from distributed_vector_database_spark.operators.quantization import (
         ivf_mrl_read_search,
@@ -263,16 +259,15 @@ def test_ivf_mrl_layout_both_prunings_and_exactness(spark, tmp_path):
              for r in knn_exact(df, q, k=10, extra_cols=()).collect()]
     assert got == exact
 
-    coarse = (
-        spark.read.parquet(path)
-        .filter(F.col("centroid_id").isin([0, 1]))
-        .select("vec_id", squared_l2("mrl_prefix", q[:8]).alias("c"))
-        .orderBy("c")
-        .limit(5)
+    rows, plan = executed_plans(
+        lambda: ivf_mrl_read_search(
+            spark, path, q, k=10, nprobe=2, rerank=4
+        ).collect()
     )
-    plan = coarse._sc._jvm.PythonSQLUtils.explainString(
-        coarse._jdf.queryExecution(), "formatted"
-    )
-    assert "PartitionFilters" in plan and "centroid_id" in plan
-    scan_lines = [l for l in plan.splitlines() if "ReadSchema" in l]
-    assert scan_lines and all("embedding" not in l for l in scan_lines)
+    assert len(rows) == 10
+    scans = [l for l in plan if l.startswith("(") and "Scan parquet" in l]
+    filters = [l for l in plan if l.startswith("PartitionFilters:")]
+    assert scans and len(filters) == len(scans)
+    assert all("centroid_id" in l for l in filters)
+    coarse = [l for l in plan if l.startswith("ReadSchema:") and "mrl_prefix" in l]
+    assert coarse and all("embedding" not in l for l in coarse)

@@ -203,63 +203,72 @@ def test_ivf_bq_full_probe_full_pool_equals_exact(tables, qvec):
     assert got == exact
 
 
-def test_pq_layout_roundtrip_append_and_exact_anchor(tables, qvec, tmp_path):
-    """The persisted PQ layout: (1) pq_write then pq_read_search with a
-    corpus-covering rerank reproduces knn_exact bit-for-bit; (2)
-    pq_append encodes with the FROZEN codebooks, so write(half) +
-    append(half) serves identically to write(all); (3) a replayed
-    batch_id is skipped; (4) reading an unpublished path fails fast."""
+@pytest.mark.parametrize("ivf", [False, True], ids=["flat", "ivf"])
+def test_pq_layout_roundtrip_append_and_exact_anchor(tables, qvec, tmp_path, ivf):
+    """The persisted PQ layout, flat and centroid-partitioned: (1) a
+    write then a read search with a corpus-covering rerank (and every
+    cell probed) reproduces knn_exact bit-for-bit; (2) the append
+    encodes with the FROZEN codebooks, so write(half) + append(half)
+    serves identically to write(all); (3) a replayed batch_id is
+    skipped; (4) reading an unpublished path fails fast."""
+    from distributed_vector_database_spark.operators.ann import ivf_build
     from distributed_vector_database_spark.operators.quantization import (
-        pq_append,
-        pq_read_codebooks,
-        pq_read_search,
+        codec_append,
+        codec_read_search,
+        ivf_pq_write,
         pq_write,
+        read_codec,
     )
 
     emb = tables["embeddings"]
+    spark = emb.sparkSession
+    if ivf:
+        centroids, emb = ivf_build(emb, n_centroids=4, trainer="numpy")
+
+    def write(df, path):
+        if ivf:
+            ivf_pq_write(df, path, centroids=centroids, m=8, k_codebook=32)
+        else:
+            pq_write(df, path, m=8, k_codebook=32)
+
+    def served(path):
+        return [
+            (r["vec_id"], r["score"])
+            for r in codec_read_search(
+                spark, path, qvec, k=10, nprobe=10**6, rerank=10**6
+            ).collect()
+        ]
+
     path_all = str(tmp_path / "pq_all")
-    pq_write(emb, path_all, m=8, k_codebook=32)
+    write(emb, path_all)
 
     # exact anchor: rerank covering the corpus == knn_exact
     exact = [
         (r["vec_id"], r["score"])
-        for r in knn_exact(emb, qvec, k=10).collect()
+        for r in knn_exact(tables["embeddings"], qvec, k=10).collect()
     ]
-    got = [
-        (r["vec_id"], r["score"])
-        for r in pq_read_search(
-            tables["embeddings"].sparkSession, path_all, qvec,
-            k=10, rerank=10**6,
-        ).collect()
-    ]
-    assert got == exact
+    assert served(path_all) == exact
 
     # frozen-codebook append == one-shot write (identical codebooks
     # guaranteed: append reads them from the layout, never retrains)
-    spark = emb.sparkSession
     half_a = emb.filter("vec_id % 2 = 0")
-    half_b = emb.filter("vec_id % 2 = 1")
+    half_b = emb.filter("vec_id % 2 = 1").drop("centroid_id")
     path_inc = str(tmp_path / "pq_inc")
-    pq_write(half_a, path_inc, m=8, k_codebook=32)
-    books_before = pq_read_codebooks(path_inc)
-    assert pq_append(half_b, path_inc, batch_id=1) is True
-    assert pq_append(half_b, path_inc, batch_id=1) is False  # replay
-    books_after = pq_read_codebooks(path_inc)
+    write(half_a, path_inc)
+    books_before = read_codec(path_inc).codebooks
+    assert codec_append(half_b, path_inc, batch_id=1) is True
+    assert codec_append(half_b, path_inc, batch_id=1) is False  # replay
+    books_after = read_codec(path_inc).codebooks
     for a, b in zip(books_before, books_after):
         assert np.array_equal(a, b)
-    inc = [
-        (r["vec_id"], r["score"])
-        for r in pq_read_search(spark, path_inc, qvec, k=10,
-                                rerank=10**6).collect()
-    ]
-    assert inc == exact  # same corpus content -> same exact refine
+    assert served(path_inc) == exact  # same corpus content -> same exact refine
 
     with pytest.raises(FileNotFoundError):
-        pq_read_search(spark, str(tmp_path / "nope"), qvec, k=5)
+        codec_read_search(spark, str(tmp_path / "nope"), qvec, k=5)
 
 
 def test_streaming_pq_maintenance(spark, tmp_path):
-    """Micro-batches folded through run_pq_stream encode with the
+    """Micro-batches folded through run_codec_stream encode with the
     FROZEN codebooks and serve exactly the union corpus: the layout
     path with a corpus-covering refine pool equals knn_exact over the
     union."""
@@ -271,8 +280,8 @@ def test_streaming_pq_maintenance(spark, tmp_path):
         pq_read_search,
         pq_write,
     )
-    from distributed_vector_database_spark.streaming.pq_maintenance import (
-        run_pq_stream,
+    from distributed_vector_database_spark.streaming.codec_maintenance import (
+        run_codec_stream,
     )
 
     rng = np.random.default_rng(3)
@@ -296,7 +305,7 @@ def test_streaming_pq_maintenance(spark, tmp_path):
         "".join(json.dumps({"vec_id": i, "embedding": v}) + "\n"
                 for i, v in rest.items() if i >= 45)
     )
-    sq = run_pq_stream(
+    sq = run_codec_stream(
         spark, str(vecs_dir), path, str(tmp_path / "ckpt"),
         max_files_per_trigger=1,
     )
@@ -310,17 +319,18 @@ def test_streaming_pq_maintenance(spark, tmp_path):
     assert served == exact
 
 
-def test_ivf_pq_layout_exactness_and_partition_pruning(spark, tmp_path):
+def test_ivf_pq_layout_exactness_and_partition_pruning(
+    spark, tmp_path, executed_plans
+):
     """The persisted IVF×PQ layout: full probe + corpus-covering pool
-    reproduces knn_exact bit-for-bit, and a partial probe's physical
-    plan shows PartitionFilters on centroid_id (the probe IS partition
-    pruning)."""
+    reproduces knn_exact bit-for-bit, and every scan a partial probe
+    actually executed shows PartitionFilters on centroid_id (the probe
+    IS partition pruning)."""
     from distributed_vector_database_spark.operators.ann import ivf_build
     from distributed_vector_database_spark.operators.quantization import (
         ivf_pq_read_search,
         ivf_pq_write,
     )
-    from distributed_vector_database_spark.plans.explain import formatted_plan
 
     rng = np.random.default_rng(5)
     rows = [
@@ -340,13 +350,15 @@ def test_ivf_pq_layout_exactness_and_partition_pruning(spark, tmp_path):
     assert got == exact
 
     # partial probe: the scan must be partition-pruned to probed cells
-    layout = spark.read.parquet(path)
-    pruned = layout.filter(layout["centroid_id"].isin([0, 1]))
-    plan = formatted_plan(pruned)
-    assert "PartitionFilters" in plan and "centroid_id" in plan
+    part, plan = executed_plans(
+        lambda: ivf_pq_read_search(
+            spark, path, q, k=10, nprobe=4, rerank=4
+        ).collect()
+    )
+    scans = [l for l in plan if l.startswith("(") and "Scan parquet" in l]
+    filters = [l for l in plan if l.startswith("PartitionFilters:")]
+    assert scans and len(filters) == len(scans)
+    assert all("centroid_id" in l for l in filters)
 
     # and a sane partial-probe recall (the serving trade, not exact)
-    part = {r["vec_id"] for r in ivf_pq_read_search(
-        spark, path, q, k=10, nprobe=4, rerank=4
-    ).collect()}
-    assert len(part & {v for v, _ in exact}) >= 5
+    assert len({r["vec_id"] for r in part} & {v for v, _ in exact}) >= 5

@@ -76,3 +76,27 @@ def test_local_df_arrow_path_keeps_type_strictness(spark):
     # valid rows still go through (and NULLs survive)
     rows = local_df(spark, [(1, None), (2, 3.5)], "a long, b double").collect()
     assert [(r["a"], r["b"]) for r in rows] == [(1, None), (2, 3.5)]
+
+
+def test_local_df_fast_path_fallback_logs_once(spark, monkeypatch, caplog):
+    # a degraded fast path must show in the log (once per process, not
+    # per call) and still return the rows through the plain path
+    import logging
+    from types import SimpleNamespace
+
+    from distributed_vector_database_spark.functions import localrel
+
+    def broken(*a, **k):
+        raise RuntimeError("arrow conversion unavailable")
+
+    # only local_df's own pandas breaks; createDataFrame keeps the real one
+    monkeypatch.setattr(localrel, "pd", SimpleNamespace(DataFrame=broken, Series=broken))
+    monkeypatch.setattr(localrel, "_fallback_logged", False)
+    with caplog.at_level(logging.WARNING, logger=localrel.__name__):
+        a = local_df(spark, [(1, "a")], "x long, y string")
+        b = local_df(spark, [(2, "b")], "x long, y string")
+    monkeypatch.undo()
+    assert [tuple(r) for r in a.union(b).collect()] == [(1, "a"), (2, "b")]
+    logged = [r for r in caplog.records if r.name == localrel.__name__]
+    assert len(logged) == 1
+    assert "arrow conversion unavailable" in logged[0].getMessage()

@@ -230,3 +230,30 @@ def test_grouped_budget_null_groups_dropped(spark):
     df = spark.createDataFrame(rows, ["doc_id", "source", "quality", "n_tokens"])
     got = select_by_token_budget_grouped(df, 100, partitions=2)
     assert sorted(r["doc_id"] for r in got.collect()) == [0, 2]
+
+
+def test_caller_cached_frame_stays_cached(spark):
+    # the operator caches its input for the range-boundary sampling job;
+    # releasing that cache must not drop one the caller holds on `df`
+    df = _annotated(spark).cache()
+    df.count()
+    try:
+        select_by_token_budget(df, 36, partitions=3).collect()
+        assert df.storageLevel.useMemory
+        assert df.is_cached
+    finally:
+        df.unpersist()
+
+
+def test_grouped_caller_cached_frame_stays_cached(spark):
+    from distributed_vector_database_spark.operators.sampling import (
+        select_by_token_budget_grouped,
+    )
+
+    df = _annotated(spark).withColumn("source", F.lit("web")).cache()
+    df.count()
+    try:
+        select_by_token_budget_grouped(df, 36, partitions=3).collect()
+        assert df.storageLevel.useMemory
+    finally:
+        df.unpersist()

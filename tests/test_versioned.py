@@ -1,6 +1,8 @@
 """Crash injection for every user of the versioned-publish protocol
 (versioned.py): a writer killed before its commit leaves a partial
-v=N+1 that readers ignore and the next writer overwrites."""
+v=N+1 that readers ignore and the next writer overwrites; an append
+killed before its attempt publishes leaves rows no reader serves, and
+the redelivered batch publishes exactly once."""
 
 from __future__ import annotations
 
@@ -228,3 +230,109 @@ def test_fold_skips_a_replayed_batch(tmp_path):
     assert calls == [(-1, 0), (0, 1)]
     assert versioned.committed_batch(d, 1) == 8
     assert versioned.committed_versions(d) == [0, 1]
+
+
+@dataclass
+class AppendCase:
+    path: str  # the write-audit-publish layout
+    rows_under: str  # where its rows live, for describe_published
+    append: Callable[[], bool]  # appends one batch under batch_id 5
+    served: Callable[[], set]  # the keys readers serve
+    batch_keys: set  # the keys the batch adds
+
+
+def _postings_append(spark, root):
+    from distributed_vector_database_spark.operators.lexical import (
+        bm25_postings_search,
+        postings_append,
+        postings_write,
+    )
+
+    path = os.path.join(root, "postings")
+    docs = "doc_id long, text string"
+    postings_write(
+        spark.createDataFrame([(1, "alpha beta"), (2, "beta gamma")], docs),
+        path, n_buckets=4,
+    )
+    batch = spark.createDataFrame([(3, "beta delta")], docs)
+    return AppendCase(
+        path, "postings",
+        lambda: postings_append(batch, path, batch_id=5),
+        lambda: {
+            r["doc_id"]
+            for r in bm25_postings_search(spark, path, ["beta"], k=10).collect()
+        },
+        {3},
+    )
+
+
+def _codec_append(spark, root, codec, centroids):
+    from distributed_vector_database_spark.operators.quantization import (
+        codec_append,
+        codec_read_search,
+        codec_write,
+    )
+
+    path = os.path.join(root, "codec")
+    vecs = "vec_id long, embedding array<double>"
+    codec_write(
+        spark.createDataFrame(
+            [(i, [float(i), 1.0, 0.0, 0.0]) for i in range(8)], vecs
+        ),
+        path, codec, centroids=centroids,
+    )
+    batch = spark.createDataFrame([(100, [3.5, 1.0, 0.0, 0.0])], vecs)
+    q = [3.5, 1.0, 0.0, 0.0]
+    return AppendCase(
+        path, "",
+        lambda: codec_append(batch, path, batch_id=5),
+        lambda: {
+            r["vec_id"]
+            for r in codec_read_search(
+                spark, path, q, k=100, nprobe=10**6, rerank=10**6
+            ).collect()
+        },
+        {100},
+    )
+
+
+def _flat_codec_append(spark, root):
+    from distributed_vector_database_spark.operators.quantization import SQCodec
+
+    return _codec_append(spark, root, SQCodec([0.0] * 4, [8.0, 1.0, 1.0, 1.0]), None)
+
+
+def _ivf_codec_append(spark, root):
+    from distributed_vector_database_spark.operators.quantization import MRLCodec
+
+    centroids = [(0, [1.0, 1.0, 0.0, 0.0]), (1, [6.0, 1.0, 0.0, 0.0])]
+    return _codec_append(spark, root, MRLCodec(2), centroids)
+
+
+@pytest.mark.parametrize(
+    "make",
+    [_postings_append, _flat_codec_append, _ivf_codec_append],
+    ids=lambda f: f.__name__.strip("_"),
+)
+def test_crashed_append_is_never_served_and_replay_publishes_once(
+    spark, tmp_path, monkeypatch, make
+):
+    from distributed_vector_database_spark.operators.introspect import (
+        describe_published,
+    )
+
+    case = make(spark, str(tmp_path))
+    served = case.served()
+    with monkeypatch.context() as m:
+        m.setattr(versioned, "publish_attempt", _crash)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            case.append()
+    # the crash came after the rows landed: they are on disk, unserved
+    assert describe_published(spark, case.path, case.rows_under)["n_rows_orphaned"]
+    assert case.served() == served
+
+    assert case.append() is True  # the redelivered batch
+    assert case.append() is False  # and its replay
+    assert case.served() == served | case.batch_keys
+    batches = [a["batch_id"] for a in versioned.published_attempts(case.path)]
+    assert batches.count(5) == 1
