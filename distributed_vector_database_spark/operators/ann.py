@@ -485,6 +485,9 @@ def ivf_write(
     (only nprobe/k of the files are ever opened). At 100 TB this is the
     difference between an index probe and a full scan.
 
+    Written with write_layout, so the layout's schema lands in
+    `_schema.json` and every reader opens it with read_layout.
+
     Pass `centroids` to persist the quantizer WITH the layout
     (_quantizer.json) — the reference's save_index lifecycle
     (src/datanode/handler.py:46-88): a restarted process reloads the
@@ -497,11 +500,52 @@ def ivf_write(
     process serves exact radius queries (ivf_read_range_search) from
     the layout directory alone, and ivf_append keeps the radii wide
     enough as batches land."""
-    assigned.write.mode("overwrite").partitionBy("centroid_id").parquet(path)
+    write_layout(assigned, path, ["centroid_id"])
     if centroids is not None:
         _write_quantizer(path, centroids)
     if cell_stats is not None:
         _write_cell_stats(path, cell_stats)
+
+
+SCHEMA_FILE = "_schema.json"
+
+
+def write_layout(
+    df: DataFrame, path: str, partition_cols: Sequence[str] = ()
+) -> None:
+    """Overwrite the parquet layout at `path` with `df` (partitioned by
+    `partition_cols`) and its read schema as `_schema.json`, so
+    read_layout names it instead of running a schema-inference Spark
+    job per read. Data columns first, partition columns last: the order
+    a parquet read reports. Every IVF, HNSW and codec layout writer
+    goes through here."""
+    import os as _os
+
+    from pyspark.sql.types import StructType
+
+    writer = df.write.mode("overwrite")
+    if partition_cols:
+        writer = writer.partitionBy(*partition_cols)
+    writer.parquet(path)
+    fields = [f for f in df.schema.fields if f.name not in partition_cols]
+    fields += [df.schema[c] for c in partition_cols]
+    tmp = _os.path.join(path, SCHEMA_FILE + ".tmp")
+    with open(tmp, "w") as fh:
+        fh.write(StructType(fields).json())
+    _os.replace(tmp, _os.path.join(path, SCHEMA_FILE))
+
+
+def read_layout(spark: SparkSession, path: str) -> DataFrame:
+    """The layout at `path` read with its persisted schema
+    (write_layout) — no schema-inference job."""
+    import json as _json
+    import os as _os
+
+    from pyspark.sql.types import StructType
+
+    with open(_os.path.join(path, SCHEMA_FILE)) as fh:
+        schema = StructType.fromJson(_json.load(fh))
+    return spark.read.schema(schema).parquet(path)
 
 
 def _write_quantizer(path: str, centroids: list) -> None:
@@ -603,7 +647,7 @@ def ivf_split_fat_cells(
     import shutil as _shutil
 
     centroids = ivf_read_quantizer(path)
-    stored = spark.read.parquet(path)
+    stored = read_layout(spark, path)
     n = stored.count()
     if n == 0 or not centroids:
         return 0
@@ -665,7 +709,7 @@ def ivf_split_fat_cells(
             if c not in set(fat)
         ]
         new_ids = [c for c, _ in out_centroids if c not in dict(centroids)]
-        sub_rows = spark.read.parquet(path).filter(
+        sub_rows = read_layout(spark, path).filter(
             F.col("centroid_id").isin(new_ids)
         )
         kept.extend(ivf_cell_stats(sub_rows, out_centroids, vec_col))
@@ -753,10 +797,10 @@ def ivf_append(
     # with PARQUET_COLUMN_DATA_TYPE_MISMATCH (parquet has no schema
     # merge across element widths) — found by the r8 served-probe
     # bench, where a changelog union had widened float to double
-    stored_vec_type = dict(spark.read.parquet(path).dtypes)[vec_col]
+    stored = read_layout(spark, path)
+    stored_vec_type = dict(stored.dtypes)[vec_col]
     batch = batch.withColumn(vec_col, F.col(vec_col).cast(stored_vec_type))
     if not assume_absent:
-        stored = spark.read.parquet(path)
         # keys already stored, found with a broadcast SEMI JOIN — never
         # a collected isin() list: a 100k-key batch as literals makes a
         # multi-minute Catalyst predicate (the r8 1M maintenance smoke
@@ -838,7 +882,7 @@ def ivf_delete(
     import shutil
     import uuid as _uuid
 
-    stored = spark.read.parquet(path)
+    stored = read_layout(spark, path)
     if isinstance(keys, DataFrame):
         kdf = keys.selectExpr(f"{keys.columns[0]} as {key_col}").distinct()
     else:
@@ -864,7 +908,7 @@ def ivf_delete(
             return 0
         removed = sum(r["__n"] for r in cell_rows)
         keep = (
-            spark.read.parquet(path)
+            read_layout(spark, path)
             .filter(F.col("centroid_id").isin(cells))
             .join(F.broadcast(kdf), key_col, "left_anti")
         )
@@ -883,8 +927,7 @@ def ivf_delete(
             )
             if not live and not remaining:
                 # every row of the layout deleted: leave one empty
-                # schema-carrying file so the next spark.read.parquet
-                # (e.g. ivf_append) doesn't fail schema inference.
+                # data file, so the layout still reads (e.g. ivf_append).
                 # Built lineage-free from the schema (a frame derived
                 # from `keep` would read the very path it overwrites);
                 # centroid_id is an ordinary column, so it round-trips
@@ -947,7 +990,7 @@ def ivf_read_search(
     return ivf_search(
         spark,
         ivf_read_quantizer(path),
-        spark.read.parquet(path),
+        read_layout(spark, path),
         query_vec,
         k=k,
         nprobe=nprobe,
@@ -978,7 +1021,7 @@ def ivf_read_range_search(
     return ivf_range_search(
         spark,
         ivf_read_quantizer(path),
-        spark.read.parquet(path),
+        read_layout(spark, path),
         query_vec,
         radius,
         cell_radii=ivf_read_cell_stats(path),
@@ -995,9 +1038,7 @@ def ivf_read_probe(
     """Read only the probed centroid partitions (partition pruning —
     verify with plans.explain: the scan shows PartitionFilters on
     centroid_id and touches nprobe directories)."""
-    from pyspark.sql import functions as F
-
-    return spark.read.parquet(path).filter(F.col("centroid_id").isin(probe_ids))
+    return read_layout(spark, path).filter(F.col("centroid_id").isin(probe_ids))
 
 
 def ivf_cell_stats(

@@ -43,6 +43,10 @@ from pyspark.sql import functions as F
 
 from distributed_vector_database_spark import versioned
 from distributed_vector_database_spark.config import DEFAULT_TOP_K, OVERFETCH
+from distributed_vector_database_spark.operators.ann import (
+    read_layout,
+    write_layout,
+)
 from distributed_vector_database_spark.operators.knn import (
     SCORE_DECIMALS,
     _effective_k,
@@ -407,9 +411,9 @@ def hnsw_write(
         "entry long, max_level int, m int, efc int, nshards int, seed int"
         + extra_schema
     )
-    proj.mapInPandas(build_shard, schema=schema).write.mode(
-        "overwrite"
-    ).partitionBy("shard_id").parquet(path)
+    write_layout(
+        proj.mapInPandas(build_shard, schema=schema), path, ["shard_id"]
+    )
 
 
 def _reconstruct(pdf, key_col: str, vec_col: str) -> "HnswIndex":
@@ -597,7 +601,7 @@ def hnsw_read_search(
     fetch = OVERFETCH * k
     qlist = [float(v) for v in query_vec]
     tomb = _read_tombstones(path)
-    nodes = spark.read.parquet(path)
+    nodes = read_layout(spark, path)
     has_pred = predicate is not None
     if has_pred:
         nodes = nodes.withColumn("__keep", predicate)
@@ -669,11 +673,13 @@ def hnsw_append(
     batch: DataFrame,
     key_col: str = "vec_id",
     vec_col: str = "embedding",
-    seed: int = 42,
     batch_id: int | None = None,
 ) -> None:
     """Incremental index maintenance: route a (key, vector) batch to its
-    shards with the SAME hash partitioning hnsw_write used, reload each
+    shards with the SAME hash partitioning hnsw_write used — the shard
+    is the column expression pmod(hash(key), nshards), Spark's Murmur3
+    HashPartitioning of hnsw_write's repartition(nshards, key), so no
+    repartition and no Python pass tag the batch — reload each
     affected shard's graph, insert the new rows (HnswIndex.add — the
     reference's live add_items on put, src/datanode/handler.py:253-261),
     and rewrite ONLY those shard partitions (dynamic partition
@@ -700,27 +706,19 @@ def hnsw_append(
     rebuild."""
     import numpy as np
     import pandas as pd
-    from pyspark import TaskContext
 
     if versioned.batch_applied(path, batch_id):
         return
 
-    nodes = spark.read.parquet(path)
+    nodes = read_layout(spark, path)
     key_type = dict(nodes.dtypes)[key_col]
-    has_seed = "seed" in nodes.columns
-    head_cols = ["m", "efc", "nshards"] + (["seed"] if has_seed else [])
-    head = nodes.select(*head_cols).limit(1).collect()
+    head = nodes.select("m", "efc", "nshards", "seed").limit(1).collect()
     if not head:
         raise ValueError(f"empty HNSW layout at {path}")
     m, efc, nshards = int(head[0]["m"]), int(head[0]["efc"]), int(head[0]["nshards"])
-    # the persisted build seed wins over the parameter default —
-    # otherwise a layout built via hnsw_write(seed!=42) would get
-    # differently-seeded level draws on append (ADVICE r7); legacy
-    # layouts without the column fall back to the parameter
-    if has_seed:
-        seed = int(head[0]["seed"])
-    else:
-        nodes = nodes.withColumn("seed", F.lit(int(seed)))
+    # insert with the layout's build seed, so a layout built via
+    # hnsw_write(seed!=42) keeps its level draws on append
+    seed = int(head[0]["seed"])
 
     # metadata columns persisted by hnsw_write(extra_cols=...) must
     # ride the append too — the batch has to carry the same columns
@@ -739,31 +737,15 @@ def hnsw_append(
         f", {c} {dict(nodes.dtypes)[c]}" for c in extras
     )
 
-    # same repartition(key) hash → a key lands on the shard whose graph
-    # would have held it at build time
-    tagged_schema = (
-        f"shard_id int, {key_col} {key_type}, {vec_col} array<double>"
-        + extra_schema
-    )
-
-    def tag(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pid = TaskContext.get().partitionId()
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            out = pdf[[key_col, vec_col, *extras]].copy()
-            out.insert(0, "shard_id", pid)
-            yield out
-
-    new_rows = (
-        batch.filter(F.col(vec_col).isNotNull())
-        .select(
-            key_col,
-            F.col(vec_col).cast("array<double>").alias(vec_col),
-            *extras,
-        )
-        .repartition(nshards, key_col)
-        .mapInPandas(tag, schema=tagged_schema)
+    # hnsw_write's repartition(nshards, key) places a row in partition
+    # pmod(murmur3 hash(key), nshards) — Spark's HashPartitioning, and
+    # F.hash is the same Murmur3 — so this expression routes a key to
+    # the shard whose graph would have held it at build time
+    new_rows = batch.filter(F.col(vec_col).isNotNull()).select(
+        F.pmod(F.hash(key_col), F.lit(nshards)).cast("int").alias("shard_id"),
+        key_col,
+        F.col(vec_col).cast("array<double>").alias(vec_col),
+        *extras,
     )
 
     out_schema = (
@@ -948,7 +930,6 @@ def hnsw_compact(
     path: str,
     key_col: str = "vec_id",
     vec_col: str = "embedding",
-    seed: int = 42,
 ) -> int:
     """Reclaim tombstoned keys from a persisted hnsw_write layout —
     the reference's periodic index rebuild (_rebuild_hnsw_index,
@@ -971,14 +952,8 @@ def hnsw_compact(
     from pyspark.sql.window import Window as _W
 
     tomb = _read_tombstones(path)
-    nodes = spark.read.parquet(path)
+    nodes = read_layout(spark, path)
     key_type = dict(nodes.dtypes)[key_col]
-    # rebuild with the seed the layout was BUILT with (persisted by
-    # hnsw_write since r8) — the parameter is only a fallback for
-    # legacy layouts lacking the column (ADVICE r7: a seed-42 default
-    # would shift approximate-path results of a seed!=42 layout)
-    if "seed" not in nodes.columns:
-        nodes = nodes.withColumn("seed", F.lit(int(seed)))
     nw = _W.partitionBy("shard_id", key_col).orderBy(F.desc("node_idx"))
     nodes_rn = nodes.withColumn("__rn", F.row_number().over(nw))
     stale = F.col("__rn") > 1
@@ -1067,12 +1042,8 @@ def hnsw_compact(
             }
             if all_shards <= set(shards):
                 # EVERY shard reclaimed to empty: leave one empty
-                # schema-carrying file so the next
-                # spark.read.parquet(path) (hnsw_append,
-                # hnsw_read_search) doesn't fail schema inference
-                rebuilt.limit(0).coalesce(1).write.mode(
-                    "overwrite"
-                ).parquet(path)
+                # data file (and its schema), so the layout still reads
+                write_layout(rebuilt.limit(0).coalesce(1), path)
             else:
                 # affected shards all emptied but others survive:
                 # just drop the emptied directories
@@ -1173,7 +1144,7 @@ def hnsw_knn_join(
 
     if index_path is not None:
         spark = queries.sparkSession
-        nodes = spark.read.parquet(index_path)
+        nodes = read_layout(spark, index_path)
         key_type = dict(nodes.dtypes)[corpus_key]
         eff_ef_served = max(ef if ef is not None else max(50, 2 * k), k)
 

@@ -20,11 +20,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from distributed_vector_database_spark import versioned
+from distributed_vector_database_spark.operators.ann import read_layout
 
 
 def describe_ivf(spark: SparkSession, path: str) -> dict:
     """IVF layout health: cell count, row skew, maintenance state."""
-    cells = spark.read.parquet(path).groupBy("centroid_id").count()
+    cells = read_layout(spark, path).groupBy("centroid_id").count()
     stats = cells.agg(
         F.count(F.lit(1)).alias("n_cells"),
         F.sum("count").alias("n_rows"),
@@ -48,7 +49,7 @@ def describe_ivf(spark: SparkSession, path: str) -> dict:
 def describe_hnsw(spark: SparkSession, path: str) -> dict:
     """HNSW layout health: shards and tombstone pressure — the inputs
     to the compact-or-not decision hnsw_compact/auto-compaction make."""
-    nodes = spark.read.parquet(path)
+    nodes = read_layout(spark, path)
     n_shards = nodes.select("shard_id").distinct().count()
     n_nodes = nodes.count()
     tombs: set = set()

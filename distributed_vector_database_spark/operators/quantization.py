@@ -25,8 +25,10 @@ The persisted layout (`codec_write` / `codec_append` /
 `codec_read_search`) holds (key, code, vector, aid) parquet rows, flat
 or partitioned by `centroid_id` (a probe = partition pruning), with the
 codec state in a `_codec.json` sidecar next to the IVF quantizer's
-`_quantizer.json`. The coarse pass reads only (key, code), so column
-pruning makes the compression an I/O win. Appends encode with the frozen
+`_quantizer.json` and the layout's `_schema.json` (ann.write_layout /
+ann.read_layout: reads name their schema, no inference job). The coarse
+pass reads only (key, code), so column pruning makes the compression an
+I/O win. Appends encode with the frozen
 state (FAISS `add` never retrains) and are write-audit-publish
 (`versioned.publish_attempt`): a crashed append's rows are never served
 and a replayed `batch_id` is skipped.
@@ -54,6 +56,8 @@ from distributed_vector_database_spark.operators.ann import (
     ivf_probe,
     ivf_read_quantizer,
     ivf_write,
+    read_layout,
+    write_layout,
 )
 
 CODEC_FILE = "_codec.json"
@@ -450,7 +454,7 @@ def codec_write(
     if partitioned:
         ivf_write(rows, path, centroids=centroids)
     else:
-        rows.write.mode("overwrite").parquet(path)
+        write_layout(rows, path)
     _write_sidecar(path, codec, partitioned)
     versioned.publish_attempt(path, "base")
 
@@ -489,7 +493,7 @@ def codec_read_search(
     pruning opens only their files); then the codec's pipeline."""
     codec, partitioned = _read_sidecar(path)
     centroids = ivf_read_quantizer(path) if partitioned else None
-    layout = spark.read.parquet(path).filter(
+    layout = read_layout(spark, path).filter(
         F.col("aid").isin(versioned.published_aids(path))
     )
     return _search(

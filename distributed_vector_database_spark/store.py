@@ -30,12 +30,19 @@ src/datanode/handler.py:156-219, as immutable Parquet):
     <root>/hnsw_index/v=N     HNSW graph layout (operators/hnsw.py)
 
 Reads resolve snapshot ∪ compacted-changelog-tail — exactly the
-reference's checkpoint + incremental WAL replay (SURVEY §3.4). At
-scale: the changelog is the only window-sorted data; `compact()` folds
-it into the next snapshot version (the 200k-put rebuild / 2k-put
-checkpoint cadence becomes an explicit batch job). Writes are
-append-mode Parquet — single-writer, like the reference's per-node
-RLock discipline.
+reference's checkpoint + incremental WAL replay (SURVEY §3.4). Calls
+that touch a few keys (`get`, the `hnsw_search` re-score of up to
+KEY_SCOPED_MAX_KEYS proposals) resolve only those keys
+(`_rows_for_keys`: one Spark job, the key set pushed into both scans,
+the newest changelog row winning on the driver), the way the reference
+serves `get` as one LevelDB lookup; every other read (`search`, `scan`,
+`count`, `index_search`, `compact`, a wider `hnsw_search`) resolves all
+of `state()`. Every read names its schema, so no read runs a
+schema-inference job. At scale: the changelog is the only window-sorted
+data; `compact()` folds it into the next snapshot version (the 200k-put
+rebuild / 2k-put checkpoint cadence becomes an explicit batch job).
+Writes are append-mode Parquet — single-writer, like the reference's
+per-node RLock discipline.
 
 Dimension is validated on every put (src/datanode/handler.py:228-232);
 `search(top_k<=0)` falls back to 5 (src/datanode/handler.py:346);
@@ -49,7 +56,7 @@ import time
 from collections.abc import Sequence
 
 from distributed_vector_database_spark.functions.localrel import local_df
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from distributed_vector_database_spark.config import DEFAULT_TOP_K, OVERFETCH
@@ -66,10 +73,19 @@ from distributed_vector_database_spark import versioned
 from distributed_vector_database_spark.versioned import latest_version
 
 STATE_COLS = ["key", "vector", "metadata", "ts"]
+STATE_SCHEMA = (
+    "key string, vector array<double>, metadata map<string,string>, ts long"
+)
 LOG_SCHEMA = (
     "op string, key string, vector array<double>, "
     "metadata map<string,string>, ts long, seq long"
 )
+BUILD_META_SCHEMA = "log_ops_at_build long, built_at_ms long"
+# widest key set resolved by _rows_for_keys: its keys travel as an IN
+# literal list, whose planning cost grows with the list. On a 3,000-key
+# store (4 cores) it beat a join against state() at 20 and 200 keys and
+# lost from 1,000 keys on (1.4 s vs 0.8 s; 9 s vs 0.8 s at 10,000)
+KEY_SCOPED_MAX_KEYS = 256
 
 
 class DimensionMismatch(ValueError):
@@ -184,6 +200,11 @@ class VectorStore:
         Dim-mismatched rows are rejected wholesale (fail-fast, unlike the
         reference's silent per-file skip at clip/db_operation.py:100-121).
 
+        One pass over `records`: the dimension check rides the changelog
+        write job (a bad row fails the job, so no file is committed, and
+        raises DimensionMismatch), and the written rows are cached once
+        and fed from the cache to both index appends.
+
         `auto_index`: when an IVF index exists, the batch is also routed
         into it (index_append — O(batch), no retrain), mirroring the
         reference's put path which inserts into the live HNSW index
@@ -194,26 +215,28 @@ class VectorStore:
         Log contract: the changelog records ONE row per key per batch —
         duplicate keys within a batch are resolved BEFORE the write
         (unlike the reference's WAL, which appends every op and resolves
-        at replay); audit consumers see the batch winner, not every
-        attempt. The within-batch "last occurrence wins" rule orders by
-        monotonically_increasing_id, which encodes (partition, position)
-        — equal to input order only for order-preserving sources (a
-        freshly-created or file-read DataFrame); after a shuffle the
-        winner among in-batch duplicates is partition-order, i.e.
-        effectively arbitrary. Callers that need a specific winner
-        should pre-dedup with an explicit ordering column."""
-        cols = records.columns
-        if "metadata" not in cols:
+        at replay); audit consumers, and both indexes, see the batch
+        winner, not every attempt. The within-batch "last occurrence
+        wins" rule orders by monotonically_increasing_id, which encodes
+        (partition, position) — equal to input order only for
+        order-preserving sources (a freshly-created or file-read
+        DataFrame); after a shuffle the winner among in-batch duplicates
+        is partition-order, i.e. effectively arbitrary. Callers that
+        need a specific winner should pre-dedup with an explicit
+        ordering column."""
+        if "metadata" not in records.columns:
             records = records.withColumn(
                 "metadata", F.create_map().cast("map<string,string>")
             )
-        # isNull checked explicitly: F.size(NULL) is NULL, so a null
-        # vector would slip past a bare size != dim predicate
-        bad = records.filter(
-            F.col("vector").isNull() | (F.size("vector") != self.dim)
-        ).count()
-        if bad:
-            raise DimensionMismatch(f"{bad} rows with dimension != {self.dim}")
+        # checked on every row BEFORE the dedup, so a bad row that loses
+        # to a later duplicate still fails the batch. isNull explicitly:
+        # F.size(NULL) is NULL, so a null vector would slip past a bare
+        # size == dim predicate
+        bad_msg = f"a batch row has a null vector or dimension != {self.dim}"
+        ok = F.col("vector").isNotNull() & (F.size("vector") == self.dim)
+        records = records.withColumn(
+            "vector", F.when(ok, F.col("vector")).otherwise(F.raise_error(F.lit(bad_msg)))
+        )
         ts, seq = self._next_ts_seq()
         # Every row in the batch shares ONE seq from the store counter, so
         # later puts/batches (higher counter) strictly dominate in the
@@ -242,31 +265,40 @@ class VectorStore:
                 F.lit(ts).cast("long").alias("ts"),
                 F.lit(seq).cast("long").alias("seq"),
             )
+            .persist()
         )
-        log.write.mode("append").parquet(self._log_dir)
-        self._maybe_auto_compact()
-        if auto_index:
-            data_dir, _ = self._index_dirs()
-            if latest_version(data_dir) >= 0:
-                self.index_append(records.select("key", "vector"))
-            hnsw_dir = os.path.join(self.root, "hnsw_index")
-            hv = latest_version(hnsw_dir)
-            if hv >= 0:
-                # index-on-put for the HNSW kind too: insert the batch
-                # into the live graph (the reference's add_items path,
-                # src/datanode/handler.py:253-261) — searchable without
-                # waiting for a rebuild
-                from distributed_vector_database_spark.operators.hnsw import (
-                    hnsw_append,
-                )
+        try:
+            try:
+                log.write.mode("append").parquet(self._log_dir)
+            except Exception as e:
+                if bad_msg in str(e):
+                    raise DimensionMismatch(bad_msg) from None
+                raise
+            self._maybe_auto_compact()
+            if auto_index:
+                data_dir, _ = self._index_dirs()
+                if latest_version(data_dir) >= 0:
+                    self.index_append(log.select("key", "vector"))
+                hnsw_dir = os.path.join(self.root, "hnsw_index")
+                hv = latest_version(hnsw_dir)
+                if hv >= 0:
+                    # index-on-put for the HNSW kind too: insert the batch
+                    # into the live graph (the reference's add_items path,
+                    # src/datanode/handler.py:253-261) — searchable without
+                    # waiting for a rebuild
+                    from distributed_vector_database_spark.operators.hnsw import (
+                        hnsw_append,
+                    )
 
-                hnsw_append(
-                    self.spark,
-                    f"{hnsw_dir}/v={hv}",
-                    records.select("key", "vector"),
-                    key_col="key",
-                    vec_col="vector",
-                )
+                    hnsw_append(
+                        self.spark,
+                        f"{hnsw_dir}/v={hv}",
+                        log.select("key", "vector"),
+                        key_col="key",
+                        vec_col="vector",
+                    )
+        finally:
+            log.unpersist(blocking=True)
 
     def delete(self, key: str) -> None:
         """Tombstone a key (O2)."""
@@ -329,12 +361,13 @@ class VectorStore:
     # -- state resolution ---------------------------------------------------
 
     def _base(self) -> DataFrame:
+        # reads name their schema: inferring it is a Spark job per read
         v = latest_version(self._snap_dir)
         if v >= 0:
-            return self.spark.read.parquet(f"{self._snap_dir}/v={v}")
-        return self.spark.createDataFrame(
-            [], "key string, vector array<double>, metadata map<string,string>, ts long"
-        )
+            return self.spark.read.schema(STATE_SCHEMA).parquet(
+                f"{self._snap_dir}/v={v}"
+            )
+        return self.spark.createDataFrame([], STATE_SCHEMA)
 
     def _log(self) -> DataFrame:
         self.flush()
@@ -343,19 +376,61 @@ class VectorStore:
         # unread writes and the next compact() would drop them for good
         if self._log_file_count() == 0:
             return self.spark.createDataFrame([], LOG_SCHEMA)
-        return self.spark.read.parquet(self._log_dir)
+        return self.spark.read.schema(LOG_SCHEMA).parquet(self._log_dir)
 
     def state(self) -> DataFrame:
         """Current state = snapshot ∪ compacted change-log tail
         (recovery semantics of src/datanode/handler.py:181-219 as a pure
         expression)."""
-        base = self._base()
+        # the log first: its flush may auto-compact into a new snapshot
         log = self._log()
-        if log.isEmpty():
+        base = self._base()
+        if self._log_file_count() == 0:
             return base
         return apply_changelog(
             base, log.select("op", *STATE_COLS, "seq"), seq_col="seq"
         ).select(*STATE_COLS)
+
+    def _rows_for_keys(self, keys) -> dict:
+        """{key: Row(key, vector, metadata, ts)} of the live keys among
+        `keys` — state() resolved for those keys only, in one Spark job:
+        the snapshot rows ∪ the changelog rows of the keys (the key set
+        pushed into both scans), then, per key, the newest changelog row
+        by (ts, seq) wins over the snapshot row and drops the key unless
+        it is a PUT — changelog.compact's rules, nulls lowest as in its
+        descending window. At most KEY_SCOPED_MAX_KEYS keys."""
+        keys = sorted({str(k) for k in keys})
+        if not keys:
+            return {}
+        assert len(keys) <= KEY_SCOPED_MAX_KEYS, len(keys)
+        log = self._log()
+        wanted = F.col("key").isin(keys)
+        rows = (
+            self._base()
+            .filter(wanted)
+            .select(F.lit(False).alias("from_log"),
+                    F.lit(None).cast("string").alias("op"), *STATE_COLS,
+                    F.lit(None).cast("long").alias("seq"))
+            .unionByName(log.filter(wanted).select(
+                F.lit(True).alias("from_log"), "op", *STATE_COLS, "seq"))
+            .collect()
+        )
+
+        def order(r):
+            # F.desc sorts nulls last, so a null ts or seq loses
+            return (r["ts"] is not None, r["ts"] or 0,
+                    r["seq"] is not None, r["seq"] or 0)
+
+        snap, newest = {}, {}
+        for r in rows:
+            if not r["from_log"]:
+                snap[r["key"]] = r
+            elif r["key"] not in newest or order(r) > order(newest[r["key"]]):
+                newest[r["key"]] = r
+        out = {k: r for k, r in snap.items() if k not in newest}
+        # compact keeps op != DELETE, which is null (dropped) for a null op
+        out.update((k, r) for k, r in newest.items() if r["op"] not in (None, OP_DELETE))
+        return {k: Row(**{c: r[c] for c in STATE_COLS}) for k, r in out.items()}
 
     def state_as_of(self, ts: int) -> DataFrame:
         """Time-travel read — the store form of
@@ -376,32 +451,30 @@ class VectorStore:
         row = base.agg(F.max("ts").alias("m")).first()
         base_max = row["m"] if row else None
         if base_max is None or base_max <= ts:
+            # an empty (or fully filtered) log resolves to the base itself
             log = self._log().filter(F.col("ts") <= ts)
-            if log.isEmpty():
-                return base.select(*STATE_COLS)
             return apply_changelog(
                 base, log.select("op", *STATE_COLS, "seq"), seq_col="seq"
             ).select(*STATE_COLS)
         for v in reversed(versioned.committed_versions(self._snap_dir)[:-1]):
-            cand = self.spark.read.parquet(f"{self._snap_dir}/v={v}")
+            cand = self.spark.read.schema(STATE_SCHEMA).parquet(
+                f"{self._snap_dir}/v={v}"
+            )
             mx = cand.agg(F.max("ts").alias("m")).first()["m"]
             if mx is None or mx <= ts:
                 return cand.select(*STATE_COLS)
-        return self.spark.createDataFrame(
-            [],
-            "key string, vector array<double>, "
-            "metadata map<string,string>, ts long",
-        )
+        return self.spark.createDataFrame([], STATE_SCHEMA)
 
     # -- read path ----------------------------------------------------------
 
     def get(self, key: str) -> dict | None:
         """Point lookup (O3); None after delete
-        (src/datanode/handler.py:418-421)."""
-        rows = self.state().filter(F.col("key") == str(key)).collect()
-        if not rows:
+        (src/datanode/handler.py:418-421). Resolves this one key
+        (_rows_for_keys): one Spark job whose scans read only the key's
+        row groups, not the corpus-wide state()."""
+        r = self._rows_for_keys([key]).get(str(key))
+        if r is None:
             return None
-        r = rows[0]
         return {"key": r["key"], "vector": list(r["vector"]), "metadata": dict(r["metadata"] or {})}
 
     def search(
@@ -499,8 +572,7 @@ class VectorStore:
         version, or None if under threshold. Call after large ingests;
         a scheduler owns the cadence in production."""
         t = self.REBUILD_EVERY if threshold is None else int(threshold)
-        log = self._log()
-        total_ops = 0 if log.isEmpty() else log.count()
+        total_ops = self._log().count()
         base = self._ops_at_last_build()
         # a compaction since the last build truncates the log, making the
         # recorded baseline stale — every surviving log op is then new
@@ -524,7 +596,9 @@ class VectorStore:
         v = latest_version(data_dir)
         if v < 0:
             return 0
-        row = self.spark.read.parquet(f"{meta_dir}/v={v}").collect()[0]
+        row = self.spark.read.schema(BUILD_META_SCHEMA).parquet(
+            f"{meta_dir}/v={v}"
+        ).collect()[0]
         return int(row["log_ops_at_build"])
 
     def rebuild_index(
@@ -545,8 +619,7 @@ class VectorStore:
         )
 
         data_dir, meta_dir = self._index_dirs()
-        log = self._log()
-        log_ops = 0 if log.isEmpty() else log.count()
+        log_ops = self._log().count()
         state = self.state().filter(F.col("vector").isNotNull())
         vectors = state.select("key", F.col("vector").alias("embedding"))
         if n_centroids == "auto":
@@ -566,7 +639,7 @@ class VectorStore:
         local_df(
             self.spark,
             [(log_ops, int(time.time() * 1000))],
-            "log_ops_at_build long, built_at_ms long",
+            BUILD_META_SCHEMA,
         ).coalesce(1).write.mode("overwrite").parquet(f"{meta_dir}/v={v}")
         versioned.commit(data_dir, v)
         return v
@@ -695,17 +768,21 @@ class VectorStore:
     ) -> DataFrame:
         """ANN search over the persisted HNSW graph: the index PROPOSES
         an over-fetched candidate pool (2k per the reference,
-        src/datanode/handler.py:364), live state DISPOSES — semi-join
-        drops deleted keys, re-scoring uses current vectors. ef >= shard
+        src/datanode/handler.py:364), live state DISPOSES — deleted keys
+        drop out and re-scoring uses current vectors. A pool of up to
+        KEY_SCOPED_MAX_KEYS keys is resolved alone against snapshot ∪
+        changelog (_rows_for_keys), without resolving the rest of the
+        corpus; a wider one is joined against state(). ef >= shard
         rows makes the proposal exhaustive (exact modulo the live-state
-        join).
+        resolution).
 
-        `predicate` filters on live-state columns (metadata map /
-        key); the proposal widens by `filter_overfetch` ON TOP of the
-        base 2x — the reference's filtered-search trick applied to its
-        own index type — so a selective filter still fills top_k. A
-        highly selective predicate should raise filter_overfetch
-        (~1/selectivity), same guidance as index_search."""
+        `predicate` filters the live rows on live-state columns
+        (metadata map / key); the proposal widens by `filter_overfetch`
+        ON TOP of the base 2x — the reference's filtered-search trick
+        applied to its own index type — so a selective filter still
+        fills top_k. A highly selective predicate should raise
+        filter_overfetch (~1/selectivity), same guidance as
+        index_search."""
         from distributed_vector_database_spark.operators.hnsw import (
             hnsw_read_search,
         )
@@ -724,10 +801,13 @@ class VectorStore:
             vec_col="vector",
             ef=ef,
         )
-        live = self.state().select("key", "vector", "metadata")
+        if width <= KEY_SCOPED_MAX_KEYS:
+            rows = self._rows_for_keys(r["key"] for r in cand.select("key").collect())
+            fresh = local_df(self.spark, list(rows.values()), STATE_SCHEMA)
+        else:
+            fresh = cand.select("key").join(self.state(), "key")
         if predicate is not None:
-            live = live.filter(predicate)
-        fresh = cand.select("key").join(live.select("key", "vector"), "key")
+            fresh = fresh.filter(predicate)
         return knn_exact(
             fresh, query_vector, k=top_k, key_col="key", vec_col="vector",
             extra_cols=(),

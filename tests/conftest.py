@@ -55,6 +55,29 @@ def tables(spark):
     return load_tables(spark, SF_DIR)
 
 
+def _run_in_job_group(spark, fn):
+    """(fn(), the ids of the Spark jobs it ran): `fn` runs under its own
+    job group, read back once the listener bus has drained."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex[:12]}"
+    sc.setJobGroup(group, group, False)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, {int(j) for j in sc.statusTracker().getJobIdsForGroup(group)}
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """`run(fn)` calls `fn` (which must force its work, e.g. collect)
+    and returns the number of Spark jobs it ran."""
+    return lambda fn: len(_run_in_job_group(spark, fn)[1])
+
+
 @pytest.fixture
 def executed_plans(spark):
     """`run(fn)` calls `fn` (which must force its work, e.g. collect)
@@ -62,20 +85,10 @@ def executed_plans(spark):
     formatted physical plans of the SQL executions whose jobs that group
     ran), read from the driver's SQL status store: the plans the code
     under test actually executed, not ones rebuilt by hand."""
-    import uuid
-
-    sc = spark.sparkContext
-    conv = sc._gateway.jvm.scala.jdk.javaapi.CollectionConverters
+    conv = spark.sparkContext._gateway.jvm.scala.jdk.javaapi.CollectionConverters
 
     def run(fn):
-        group = f"plans-{uuid.uuid4().hex[:12]}"
-        sc.setJobGroup(group, group, False)
-        try:
-            out = fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        jobs = {int(j) for j in sc.statusTracker().getJobIdsForGroup(group)}
+        out, jobs = _run_in_job_group(spark, fn)
         store = spark._jsparkSession.sharedState().statusStore()
         lines = []
         it = store.executionsList().iterator()
@@ -86,4 +99,3 @@ def executed_plans(spark):
         return out, lines
 
     return run
-

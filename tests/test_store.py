@@ -3,7 +3,11 @@
 
 import pytest
 
-from distributed_vector_database_spark.store import DimensionMismatch, VectorStore
+from distributed_vector_database_spark.store import (
+    KEY_SCOPED_MAX_KEYS,
+    DimensionMismatch,
+    VectorStore,
+)
 
 DIM = 4
 
@@ -603,3 +607,181 @@ def test_state_as_of_time_travel(store):
     with_c = {r["key"] for r in store.state_as_of(tail_ts).collect()}
     assert with_c == {"a", "c"}
     assert {r["key"] for r in store.state_as_of(min(all_ts.values()) - 1).collect()} == set()
+
+
+@pytest.fixture(scope="module")
+def indexed(spark, tmp_path_factory):
+    """A store with a snapshot, both indexes and a changelog tail,
+    shared by tests that each write only keys of their own."""
+    s = VectorStore(spark, str(tmp_path_factory.mktemp("indexed")), dim=DIM)
+    s.put_batch(spark.createDataFrame(
+        [(f"k{i}", [float(i), float(i % 3), 0.0, 1.0], {"p": str(i % 2)}) for i in range(40)],
+        "key string, vector array<double>, metadata map<string,string>",
+    ))
+    s.compact()
+    s.rebuild_index(n_centroids=4)
+    s.rebuild_hnsw_index(num_shards=2)
+    s.put("k1", [1.0, 9.0, 0.0, 1.0])
+    s.delete("k2")
+    return s
+
+
+def _sq(a, b):
+    return round(sum((x - y) ** 2 for x, y in zip(a, b)), 6)
+
+
+def test_put_batch_in_batch_duplicates_serve_the_last_occurrence(spark, indexed):
+    """A batch holding a key twice writes one changelog row per key (the
+    last occurrence), and both indexes receive that row only: with every
+    cell probed and an exhaustive ef, index_search and hnsw_search score
+    each key on its winning vector, as get returns it."""
+    s = indexed
+    v1 = {f"d{i}": [float(i), 50.0, 0.0, 0.0] for i in range(6)}
+    v2 = {f"d{i}": [float(i), -50.0, 3.0, 0.0] for i in range(6)}
+    s.put_batch(spark.createDataFrame(
+        [(k, v) for k, v in v1.items()] + [(k, v) for k, v in v2.items()],
+        "key string, vector array<double>",
+    ))
+    for k, v in v2.items():
+        assert s.get(k)["vector"] == v
+    q = v2["d0"]
+    ivf = {r["key"]: r["score"] for r in s.index_search(q, top_k=100, nprobe=10**9).collect()}
+    hnsw = {r["key"]: r["score"] for r in s.hnsw_search(q, top_k=100, ef=10**9).collect()}
+    # a proposal wider than KEY_SCOPED_MAX_KEYS re-scores against state()
+    wide = {r["key"]: r["score"] for r in s.hnsw_search(q, top_k=KEY_SCOPED_MAX_KEYS, ef=10**9).collect()}
+    for got in (ivf, hnsw, wide):
+        assert got["d0"] == 0.0
+        assert {k: got[k] for k in v2} == {k: _sq(v, q) for k, v in v2.items()}
+
+
+def test_rows_for_keys_equals_state_on_a_random_op_sequence(spark, tmp_path):
+    """The key-scoped resolver and the corpus-wide state() agree for
+    every key ever written, over a seeded random sequence of puts,
+    deletes, delete-then-re-put, batches with in-batch duplicates, a
+    compact() in the middle, a zero-row changelog file from an empty
+    batch, ops still buffered (buffer_rows > 1), and imported reference
+    WAL lines without a timestamp (a null ts, which loses to any
+    timestamped op on its key) or without an op type."""
+    import glob
+    import json
+    import random
+
+    import pyarrow.parquet as pq
+
+    schema = "key string, vector array<double>, metadata map<string,string>"
+    rng = random.Random(6)
+    s = VectorStore(spark, str(tmp_path / "vs"), dim=DIM, buffer_rows=3)
+    wal = [
+        {"op_type": "PUT", "key": "w0", "vector": [1.0] * DIM, "timestamp": 1000},
+        {"op_type": "PUT", "key": "w0", "vector": [2.0] * DIM},
+        {"op_type": "PUT", "key": "w1", "vector": [3.0] * DIM},
+        {"op_type": "DELETE", "key": "w2", "timestamp": 1000},
+        {"op_type": "PUT", "key": "w2", "vector": [4.0] * DIM},
+        {"key": "w3", "vector": [5.0] * DIM, "timestamp": 1000},
+    ]
+    (tmp_path / "wal").mkdir()
+    (tmp_path / "wal" / "wal.log").write_text("".join(json.dumps(e) + "\n" for e in wal))
+    keys = [f"x{i}" for i in range(6)]
+    written, ops = set(), set()
+    for step in range(14):
+        k = rng.choice(keys)
+        op = rng.choice(["put", "put", "put", "delete", "delete", "reput", "batch"])
+        ops.add(op)
+        vec = [float(rng.randint(0, 9)) for _ in range(DIM)]
+        if op == "put":
+            s.put(k, vec, {"s": str(step)})
+        elif op == "delete":
+            s.delete(k)
+        elif op == "reput":
+            s.delete(k)
+            s.put(k, vec, {"s": str(step)})
+        else:
+            ks = rng.sample(keys, 3)
+            rows = [(kk, [x + i for x in vec], {"s": str(step)}) for i, kk in enumerate(ks + ks[:1])]
+            s.put_batch(spark.createDataFrame(rows, schema))
+            written.update(ks)
+        written.add(k)
+        if step == 7:
+            s.compact()
+    # after the compact, so the null-ts rows stay in the changelog
+    assert s.import_wal(str(tmp_path / "wal")) == len(wal)
+    written.update({"w0", "w1", "w2", "w3"})
+    s.put_batch(spark.createDataFrame([], schema))
+    if not s._buf:  # end with ops still buffered
+        s.delete(keys[0])
+        written.add(keys[0])
+    assert ops == {"put", "delete", "reput", "batch"}, ops
+    # the key-scoped reads first: the first one flushes the buffer
+    got = {k: s._rows_for_keys([k]) for k in sorted(written)}
+    assert 0 in {pq.read_metadata(f).num_rows for f in glob.glob(f"{s._log_dir}/*.parquet")}
+    state = {r["key"]: r.asDict() for r in s.state().collect()}
+    assert state["w0"]["vector"] == [1.0] * DIM and state["w1"]["ts"] is None
+    assert "w2" not in state and "w3" not in state  # w3's line has no op_type
+    for k, rows in got.items():
+        want = {k: state[k]} if k in state else {}
+        assert {kk: r.asDict() for kk, r in rows.items()} == want, k
+
+
+def test_bad_batch_leaves_nothing_behind(spark, indexed):
+    """A wrong-size vector, a null vector, or a bad row that loses the
+    in-batch dedup to a good one each fail the whole batch with
+    DimensionMismatch, and the store is as before: no changelog file, no
+    IVF layout row, no HNSW node, every batch key reads as before."""
+    import os
+
+    from distributed_vector_database_spark.operators.ann import read_layout
+
+    s = indexed
+    ivf_path, _ = s._index_layout()
+    hnsw_path = f"{s.root}/hnsw_index/v=0"
+
+    def footprint():
+        log = sorted(f for f in os.listdir(s._log_dir) if not f.startswith(("_", ".")))
+        return log, read_layout(spark, ivf_path).count(), read_layout(spark, hnsw_path).count()
+
+    good = [1.0, 2.0, 3.0, 4.0]
+    cases = {
+        "wrong_size": [("k3", good), ("bad1", [1.0, 2.0])],
+        "null_vector": [("k3", good), ("bad1", None)],
+        "bad_loses_dedup": [("bad1", [1.0]), ("k3", good), ("bad1", good)],
+    }
+    for name, rows in cases.items():
+        batch_keys = sorted({k for k, _ in rows})
+        before = footprint(), {k: s.get(k) for k in batch_keys}
+        with pytest.raises(DimensionMismatch):
+            s.put_batch(spark.createDataFrame(rows, "key string, vector array<double>"))
+        after = footprint(), {k: s.get(k) for k in batch_keys}
+        assert after == before, name
+
+
+def test_store_verbs_run_only_the_jobs_their_answers_need(spark, indexed, spark_jobs):
+    """Spark jobs per verb on a store with a snapshot, a changelog tail
+    and both indexes: a point lookup is one job (key-scoped resolution),
+    reads name their schemas (no inference or emptiness probes), and
+    put_batch evaluates its batch once."""
+    s = indexed
+    q = [3.0, 1.0, 0.0, 1.0]
+    batch = spark.createDataFrame(
+        [("k5", [5.0, 5.0, 5.0, 5.0]), ("j1", [1.0, 1.0, 1.0, 1.0])],
+        "key string, vector array<double>",
+    )
+    assert spark_jobs(lambda: s.get("k1")) == 1
+    assert spark_jobs(lambda: s.search(q, top_k=5).collect()) <= 4
+    assert spark_jobs(lambda: s.index_search(q, top_k=5).collect()) <= 6
+    assert spark_jobs(lambda: s.hnsw_search(q, top_k=5).collect()) <= 5
+    assert spark_jobs(lambda: s.put_batch(batch)) <= 9
+    assert s.get("j1")["vector"] == [1.0, 1.0, 1.0, 1.0]
+
+
+def test_read_that_flushes_into_auto_compaction_sees_every_op(spark, tmp_path):
+    """A read whose buffer flush reaches the auto-compaction threshold
+    folds the log into a new snapshot before it resolves: the read must
+    see that snapshot, not the one before it."""
+    s = VectorStore(
+        spark, str(tmp_path / "vs"), dim=DIM, buffer_rows=2, auto_compact_files=2
+    )
+    for k in "abc":
+        s.put(k, [1.0] * DIM)
+    assert len(s._buf) == 1
+    assert s.count() == 3
+    assert s.get("c") is not None
