@@ -17,15 +17,30 @@ execution is pure JVM (measured 6.9 s -> 2.0 s for a 100-row write,
 `local_df` is the drop-in: same (rows, schema) contract as
 createDataFrame for the list-of-tuples shapes this engine builds, with
 the plain path as fallback for anything pandas/Arrow cannot represent.
+
+Rows that only need to reach DISK (a store's buffered put/delete ops,
+an index's build meta) skip Spark altogether: `write_local_parquet`
+converts them to one pyarrow table on the driver and writes one parquet
+file, with no Spark job. A single-record `put` on a 3,000 x 64-d store
+(local[4]) took a median ~150 ms as a Spark write job and ~2.5 ms this
+way. The file is written under a `.`-prefixed temp name and renamed
+into place, so a crash mid-write leaves only a hidden file that Spark's
+readers skip.
 """
 
 from __future__ import annotations
 
+import functools
 import logging
+import os
+import uuid
 from typing import Any, Sequence
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import _make_type_verifier
 
 _log = logging.getLogger(__name__)
@@ -117,3 +132,41 @@ def local_df(
         # battle-tested slow path rather than risk a type drift
         _fallback(f"{type(e).__name__}: {e}")
         return spark.createDataFrame(rows, schema)
+
+
+# a DDL schema is parsed by the JVM (a py4j round trip): once per
+# schema, not once per write
+@functools.lru_cache(maxsize=None)
+def _arrow_schema_and_verifier(schema: Any):
+    struct = _as_struct_type(schema)
+    return to_arrow_schema(struct), _make_type_verifier(struct)
+
+
+def write_local_parquet(
+    rows: Sequence[tuple], schema: Any, directory: str
+) -> str:
+    """Write driver-held rows as ONE parquet file in `directory` without
+    a Spark job; returns the file's path.
+
+    The Arrow schema is derived from the Spark `schema` (StructType or
+    DDL), so Spark reads the file back with that same schema. Rows are
+    checked first by the verifier createDataFrame runs, so a value the
+    schema cannot hold raises before anything is written (Arrow alone
+    would truncate 1.7 into a long column). The file lands as
+    `.part-<uuid>.parquet` and is then renamed to `part-<uuid>.parquet`:
+    a crash before the rename leaves only the hidden temp file, which
+    Spark's readers (and any lister that skips `.`/`_` names) never
+    see."""
+    arrow_schema, verify = _arrow_schema_and_verifier(schema)
+    for r in rows:
+        verify(r)
+    table = pa.Table.from_pylist(
+        [dict(zip(arrow_schema.names, r)) for r in rows], schema=arrow_schema
+    )
+    os.makedirs(directory, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(directory, f".{name}")
+    pq.write_table(table, tmp)
+    path = os.path.join(directory, name)
+    os.replace(tmp, path)
+    return path

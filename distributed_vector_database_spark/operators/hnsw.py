@@ -832,12 +832,18 @@ def hnsw_append(
     # materialize first (localCheckpoint severs the file-source lineage,
     # which Spark otherwise rejects as a read-write cycle)
     merged = merged.localCheckpoint(eager=True)
-    (
-        merged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("shard_id")
-        .parquet(path)
-    )
+    try:
+        (
+            merged.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("shard_id")
+            .parquet(path)
+        )
+    finally:
+        # the checkpoint's blocks stay cached until released: nothing
+        # reads `merged` after the write, so drop them now rather than
+        # leave them in the session after every append
+        merged._jdf.queryExecution().analyzed().rdd().unpersist(True)
     # re-putting a tombstoned key RESURRECTS it (upsert semantics, the
     # reference's put path: the old node stays tombstoned, the new one
     # serves) — append a `remove` record for the keys that actually

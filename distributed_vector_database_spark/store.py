@@ -41,8 +41,16 @@ of `state()`. Every read names its schema, so no read runs a
 schema-inference job. At scale: the changelog is the only window-sorted
 data; `compact()` folds it into the next snapshot version (the 200k-put
 rebuild / 2k-put checkpoint cadence becomes an explicit batch job).
-Writes are append-mode Parquet — single-writer, like the reference's
-per-node RLock discipline.
+Writes append Parquet files to the changelog — single-writer, like the
+reference's per-node RLock discipline. `put_batch` and `import_wal`
+append with a Spark write; single-record `put` / `delete` (and the
+index build meta) are rows the driver already holds, so `flush` writes
+them as one parquet file from the driver with pyarrow, no Spark job
+(functions/localrel.write_local_parquet): written under a hidden
+`.`-prefixed name, then renamed into place — the reference's
+temp-then-rename WAL append (src/utils/wal_manager.py:100-105). A
+crash before the rename leaves only a hidden file that no reader sees
+and the next `compact()` removes.
 
 Dimension is validated on every put (src/datanode/handler.py:228-232);
 `search(top_k<=0)` falls back to 5 (src/datanode/handler.py:346);
@@ -52,10 +60,14 @@ scores are ascending squared-L2 (src/coordinator/handler.py:212).
 from __future__ import annotations
 
 import os
+import shutil
 import time
 from collections.abc import Sequence
 
-from distributed_vector_database_spark.functions.localrel import local_df
+from distributed_vector_database_spark.functions.localrel import (
+    local_df,
+    write_local_parquet,
+)
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
@@ -106,9 +118,11 @@ class VectorStore:
         """`buffer_rows` > 1 buffers single-record put/delete driver-side
         and writes one parquet file per `buffer_rows` records instead of
         one per call — the small-files fix for chatty ingest (a parquet
-        footer per row is metadata-bound at any scale). Reads flush
-        automatically, so read-your-writes is preserved; the default 1
-        keeps strict write-through.
+        footer per row is metadata-bound at any scale). Each file is
+        written from the driver without a Spark job (see `flush`), so
+        the buffer saves files, not jobs. Reads flush automatically, so
+        read-your-writes is preserved; the default 1 keeps strict
+        write-through.
 
         `auto_compact_files`: once the changelog accrues this many
         files, the next write folds it into a snapshot (the reference's
@@ -140,12 +154,17 @@ class VectorStore:
             self.flush()
 
     def flush(self) -> None:
-        """Write buffered single-record ops as one log file."""
+        """Write buffered single-record ops as one log file, from the
+        driver with pyarrow (no Spark job): the file is written under a
+        hidden `.`-prefixed name, then renamed to `part-<uuid>.parquet`.
+        A failure before the rename leaves no visible file, and the
+        buffered ops are dropped with the raised error — none of them
+        is ever served. The hidden orphan goes with the next
+        `compact()`."""
         if not self._buf:
             return
-        df = local_df(self.spark, self._buf, LOG_SCHEMA)
-        df.coalesce(1).write.mode("append").parquet(self._log_dir)
-        self._buf = []
+        rows, self._buf = self._buf, []
+        write_local_parquet(rows, LOG_SCHEMA, self._log_dir)
         self._maybe_auto_compact()
 
     def _log_file_count(self) -> int:
@@ -636,11 +655,14 @@ class VectorStore:
             f"{data_dir}/v={v}",
             centroids=centroids,
         )
-        local_df(
-            self.spark,
+        # an uncommitted v=N left by a crashed rebuild may hold a meta
+        # file already: replace it, as the layout write above does
+        shutil.rmtree(f"{meta_dir}/v={v}", ignore_errors=True)
+        write_local_parquet(
             [(log_ops, int(time.time() * 1000))],
             BUILD_META_SCHEMA,
-        ).coalesce(1).write.mode("overwrite").parquet(f"{meta_dir}/v={v}")
+            f"{meta_dir}/v={v}",
+        )
         versioned.commit(data_dir, v)
         return v
 
@@ -855,8 +877,8 @@ class VectorStore:
         sorted entry arrays are), so a metadata-only rewrite landing in
         the SAME millisecond as the prior write (seq isn't persisted
         into snapshots) is still classified as updated."""
-        a = self.spark.read.parquet(f"{self._snap_dir}/v={v_old}")
-        b = self.spark.read.parquet(f"{self._snap_dir}/v={v_new}")
+        a = self.spark.read.schema(STATE_SCHEMA).parquet(f"{self._snap_dir}/v={v_old}")
+        b = self.spark.read.schema(STATE_SCHEMA).parquet(f"{self._snap_dir}/v={v_new}")
         pa = F.col("__a").isNotNull()
         pb = F.col("__b").isNotNull()
         payload = F.struct(
@@ -935,7 +957,5 @@ class VectorStore:
         )
         versioned.commit(self._snap_dir, v)
         # truncate the applied log (the WAL GC of src/utils/wal_manager.py:22-23)
-        import shutil
-
         shutil.rmtree(self._log_dir, ignore_errors=True)
         return v

@@ -2,6 +2,8 @@
 scale-adaptive iteration partitioning, the graph audit's null-endpoint
 check, and local_df's restored type strictness on the Arrow fast path."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -76,6 +78,23 @@ def test_local_df_arrow_path_keeps_type_strictness(spark):
     # valid rows still go through (and NULLs survive)
     rows = local_df(spark, [(1, None), (2, 3.5)], "a long, b double").collect()
     assert [(r["a"], r["b"]) for r in rows] == [(1, None), (2, 3.5)]
+
+
+def test_write_local_parquet_keeps_type_strictness(spark, tmp_path):
+    # the driver-side writer raises where createDataFrame would, before
+    # any file exists: Arrow alone truncates 1.7 into a long column
+    from distributed_vector_database_spark.functions.localrel import (
+        write_local_parquet,
+    )
+
+    out = str(tmp_path / "out")
+    for bad in [(1.7, None), (1, "x")]:
+        with pytest.raises((TypeError, ValueError)):
+            write_local_parquet([bad], "a long, b double", out)
+    assert not os.path.exists(out) or os.listdir(out) == []
+    write_local_parquet([(1, None), (2, 3.5)], "a long, b double", out)
+    rows = spark.read.schema("a long, b double").parquet(out).collect()
+    assert sorted((r["a"], r["b"]) for r in rows) == [(1, None), (2, 3.5)]
 
 
 def test_local_df_fast_path_fallback_logs_once(spark, monkeypatch, caplog):

@@ -754,11 +754,12 @@ def test_bad_batch_leaves_nothing_behind(spark, indexed):
         assert after == before, name
 
 
-def test_store_verbs_run_only_the_jobs_their_answers_need(spark, indexed, spark_jobs):
+def test_store_verbs_run_only_the_jobs_their_answers_need(spark, indexed, spark_jobs, tmp_path):
     """Spark jobs per verb on a store with a snapshot, a changelog tail
     and both indexes: a point lookup is one job (key-scoped resolution),
-    reads name their schemas (no inference or emptiness probes), and
-    put_batch evaluates its batch once."""
+    reads name their schemas (no inference or emptiness probes),
+    put_batch evaluates its batch once, and put, delete and a buffered
+    flush write from the driver without a Spark job."""
     s = indexed
     q = [3.0, 1.0, 0.0, 1.0]
     batch = spark.createDataFrame(
@@ -771,6 +772,14 @@ def test_store_verbs_run_only_the_jobs_their_answers_need(spark, indexed, spark_
     assert spark_jobs(lambda: s.hnsw_search(q, top_k=5).collect()) <= 5
     assert spark_jobs(lambda: s.put_batch(batch)) <= 9
     assert s.get("j1")["vector"] == [1.0, 1.0, 1.0, 1.0]
+    # single-record writes reach the changelog from the driver
+    assert spark_jobs(lambda: s.put("j2", [2.0, 2.0, 2.0, 2.0])) == 0
+    assert spark_jobs(lambda: s.delete("j2")) == 0
+    buffered = VectorStore(spark, str(tmp_path / "buffered"), dim=DIM, buffer_rows=3)
+    buffered.put("b0", [1.0] * DIM)
+    buffered.delete("b1")
+    assert spark_jobs(buffered.flush) == 0
+    assert s.get("j2") is None and buffered.get("b0")["vector"] == [1.0] * DIM
 
 
 def test_read_that_flushes_into_auto_compaction_sees_every_op(spark, tmp_path):
@@ -785,3 +794,109 @@ def test_read_that_flushes_into_auto_compaction_sees_every_op(spark, tmp_path):
     assert len(s._buf) == 1
     assert s.count() == 3
     assert s.get("c") is not None
+
+
+def _crash(*a, **k):
+    raise RuntimeError("simulated crash")
+
+
+def test_hnsw_append_leaves_no_cached_blocks(spark, indexed):
+    """A put_batch that appends to the HNSW graph releases everything it
+    cached or checkpointed: no RDD stays persisted in the session."""
+    sc = spark.sparkContext
+
+    def persisted():
+        return {int(i) for i in sc._jsc.getPersistentRDDs().keySet().toArray()}
+
+    before = persisted()
+    indexed.put_batch(spark.createDataFrame(
+        [(f"h{i}", [float(i), 7.0, 7.0, 1.0]) for i in range(5)],
+        "key string, vector array<double>",
+    ))
+    assert persisted() - before == set()
+    assert indexed.get("h4")["vector"] == [4.0, 7.0, 7.0, 1.0]
+
+
+def test_crashed_log_write_is_never_served(spark, tmp_path, monkeypatch):
+    """A single-record write that dies before its temp file is renamed
+    leaves no visible changelog file: reads serve the store as before,
+    the next put lands, and compact() removes the hidden orphan."""
+    import glob
+    import os
+
+    from distributed_vector_database_spark.functions import localrel
+
+    s = VectorStore(spark, str(tmp_path / "vs"), dim=DIM)
+    s.put("a", [1.0] * DIM)
+    s.put("b", [2.0] * DIM)
+
+    def served():
+        return (s.get("a"), s.get("b"), s.count(), s._log_file_count(),
+                sorted(glob.glob(f"{s._log_dir}/*.parquet")))
+
+    before = served()
+
+    with monkeypatch.context() as m:
+        m.setattr(localrel.os, "replace", _crash)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            s.put("a", [9.0] * DIM)
+    (orphan,) = [f for f in os.listdir(s._log_dir) if f.startswith(".") and f.endswith(".parquet")]
+    assert served() == before
+    s.put("c", [3.0] * DIM)
+    assert s.get("c")["vector"] == [3.0] * DIM
+    s.compact()
+    assert not os.path.exists(os.path.join(s._log_dir, orphan))
+    assert s.count() == 3 and s.get("a")["vector"] == [1.0] * DIM
+
+
+def test_driver_written_ops_resolve_like_spark_read_rows(spark, tmp_path):
+    """A PUT with metadata, a PUT without, and a DELETE (null vector and
+    metadata) written by flush resolve the same way through state(),
+    the key-scoped resolver, compact() and the WAL export."""
+    s = VectorStore(spark, str(tmp_path / "vs"), dim=DIM)
+    s.put("m", [1.0, 2.0, 3.0, 4.0], {"t": "x"})
+    s.put("n", [0.5] * DIM)
+    s.put("d", [9.0] * DIM)
+    s.delete("d")
+    log = {(r["op"], r["key"]): r for r in s._log().collect()}
+    assert log[("DELETE", "d")]["vector"] is None
+    assert log[("DELETE", "d")]["metadata"] is None
+    assert log[("PUT", "n")]["metadata"] == {}
+    want = {"m": ([1.0, 2.0, 3.0, 4.0], {"t": "x"}), "n": ([0.5] * DIM, {})}
+
+    def resolved(rows):
+        return {r["key"]: (list(r["vector"]), dict(r["metadata"] or {})) for r in rows}
+
+    def check(store):
+        assert resolved(store.state().collect()) == want
+        assert resolved(store._rows_for_keys(["m", "n", "d"]).values()) == want
+
+    check(s)
+    assert s.export_wal(str(tmp_path / "wal")) == 2
+    imported = VectorStore(spark, str(tmp_path / "imported"), dim=DIM)
+    assert imported.import_wal(str(tmp_path / "wal")) == 2
+    check(imported)
+    s.compact()
+    check(s)
+
+
+def test_rebuild_after_a_crashed_commit_keeps_one_build_meta(store, monkeypatch):
+    """A rebuild that dies at its commit leaves an uncommitted meta file;
+    the next rebuild of that version replaces it, so the rebuild cadence
+    counts from the retried build."""
+    import glob
+
+    from distributed_vector_database_spark import versioned
+
+    for i in range(4):
+        store.put(f"k{i}", [float(i), 1.0, 0.0, 0.0])
+
+    with monkeypatch.context() as m:
+        m.setattr(versioned, "commit", _crash)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            store.rebuild_index(n_centroids=2)
+    store.put("k4", [4.0, 1.0, 0.0, 0.0])
+    assert store.rebuild_index(n_centroids=2) == 0
+    _, meta_dir = store._index_dirs()
+    assert len(glob.glob(f"{meta_dir}/v=0/*.parquet")) == 1
+    assert store._ops_at_last_build() == 5

@@ -84,7 +84,7 @@ def _store_rebuild_index(spark, root):
         lambda: s.rebuild_index(n_centroids=2),
         lambda: _scored(s.index_search(q, top_k=3)),
         lambda: _scored(s.search(q, top_k=3)),
-        crash_at=(store_mod, "local_df"),
+        crash_at=(store_mod, "write_local_parquet"),
         after_crash=after_crash,
     )
 
