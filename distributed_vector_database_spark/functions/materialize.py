@@ -34,6 +34,10 @@ conf, default false) — long-lived sessions running iterative
 operators in reliable mode should set it at session build, or GC the
 checkpoint dir on their own cadence; each call leaves one node-sized
 file set per materialized round otherwise.
+
+`release(df)` drops a materialized frame's cached blocks as soon as
+its last reader is done, instead of leaving them in the session until
+the JVM's garbage collector lets the ContextCleaner find them.
 """
 
 from __future__ import annotations
@@ -81,3 +85,11 @@ def materialize(df: DataFrame, reliable: bool | None = None) -> DataFrame:
                 "nodes)"
             )
     return df.checkpoint(eager=True)
+
+
+def release(df: DataFrame) -> None:
+    """Unpersist the blocks behind `df`, a frame returned by
+    `materialize` or `localCheckpoint` (its analyzed plan is the
+    checkpointed RDD). Nothing may read `df` afterwards: a
+    localCheckpoint's lineage is cut, so its blocks cannot be rebuilt."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(True)

@@ -19,7 +19,10 @@ derived key (fingerprint / band key / simhash prefix) — at 100 TB the
 all-pairs variants (ngram_jaccard_pairs, embedding all-pairs) are
 correctness oracles for small slices, while LSH banding and bucketed
 cosine are the production paths. Representative picking is min-id per
-cluster, a plain aggregation.
+cluster: `dedup_clusters` counts the candidate graph's edges and, up to
+`CC_ONE_TASK_MAX_EDGES`, resolves it in one numpy task (a handful of
+Spark jobs in all); only wider graphs pay the distributed label loop,
+whose rounds each cost a few jobs.
 """
 
 from __future__ import annotations
@@ -28,6 +31,7 @@ from distributed_vector_database_spark.functions.localrel import local_df
 from distributed_vector_database_spark.plans.explain import plan_size_bytes
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 from pyspark.sql.window import Window
 
 from distributed_vector_database_spark.functions.hashing import (
@@ -36,6 +40,7 @@ from distributed_vector_database_spark.functions.hashing import (
 )
 from distributed_vector_database_spark.functions.materialize import (
     materialize,
+    release,
 )
 from distributed_vector_database_spark.functions.text import (
     fingerprint,
@@ -555,20 +560,16 @@ def simhash_pairs(
     ).select("id", hash60("t").alias("h"))
     # bit b's ±1 vote sum is positive  ⟺  2*(count of 1s) > n_tokens:
     # summing the raw bit (no CASE) plus one shared count is measurably
-    # cheaper codegen than nbits conditional sums
+    # cheaper codegen than nbits conditional sums. The nbits sums and
+    # the signature are SQL strings: one parse each, where composing
+    # them from Column functions costs ~11 driver↔JVM calls per bit
     votes = toks.groupBy("id").agg(
         F.count(F.lit(1)).alias("__ntok"),
-        *[
-            F.sum(F.shiftright("h", b).bitwiseAND(F.lit(1))).alias(f"v{b}")
-            for b in range(nbits)
-        ],
+        *[F.expr(f"sum((h >> {b}) & 1) AS v{b}") for b in range(nbits)],
     )
-    sh_expr = None
-    for b in range(nbits):
-        term = F.when(
-            F.col(f"v{b}") * 2 > F.col("__ntok"), F.lit(2**b).cast("long")
-        ).otherwise(F.lit(0).cast("long"))
-        sh_expr = term if sh_expr is None else sh_expr + term
+    sh_expr = F.expr(
+        " + ".join(f"IF(v{b} * 2 > __ntok, {2**b}L, 0L)" for b in range(nbits))
+    )
     # r14 (guide §2.3/§2.4, the r13 mining pattern): the old block
     # SELF-join shuffled the signature table twice (once per join side,
     # re-evaluating the cached subtree per side) plus a broadcast
@@ -666,6 +667,74 @@ def simhash_pairs(
     )
 
 
+# widest canonical edge set (both directions of every candidate pair,
+# deduplicated) that dedup_clusters resolves in ONE task instead of the
+# distributed label loop. On local[4] (random small components plus one
+# 10%-of-pairs path) one task won at every size timed: 1.5 s vs 6.0 s
+# at 10^4 edges, 0.7 s vs 10.8 s at 10^5, 3.4 s vs 41.9 s at 10^6. Memory
+# sets the bound: the task's peak grows by ~90 MB at 10^6 edges and
+# ~275 MB at 2x10^6.
+CC_ONE_TASK_MAX_EDGES = 1_000_000
+
+
+def _min_labels(a, b, n: int):
+    """label[i] = the smallest node code in i's connected component, for
+    codes 0..n-1 joined by the edges (a[k], b[k]) (int numpy arrays).
+
+    Min-hooking plus pointer jumping on a shrinking edge list: every
+    root hooks onto the smallest root across its edges, jumping then
+    points every node straight at its root, and each edge is replaced
+    by its two roots, dropping the ones now inside one tree. Labels
+    only ever decrease and stay inside their component, so a root is
+    its tree's minimum; the loop ends when no edge joins two trees."""
+    import numpy as np
+
+    label = np.arange(n, dtype=np.int64)
+    while a.size:
+        np.minimum.at(label, a, b)
+        np.minimum.at(label, b, a)
+        while True:
+            jumped = label[label]
+            if np.array_equal(jumped, label):
+                break
+            label = jumped
+        a, b = label[a], label[b]
+        cross = a != b
+        a, b = a[cross], b[cross]
+    return label
+
+
+def _components_in_one_task(batches):
+    """mapInArrow body over ALL of dedup_clusters' (src, dst) edges in
+    one partition: one (id, rep_id) row per endpoint, rep_id = the min
+    id of its component. Ids are coded by their rank among the sorted
+    distinct endpoints, so any orderable id type keeps Spark's min; a
+    null endpoint labels nothing and comes out as one (null, null) row,
+    as the loop path's label table holds it."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    batches = list(batches)
+    if not batches:
+        return
+    table = pa.Table.from_batches(batches)
+    src = table.column("src").combine_chunks()
+    dst = table.column("dst").combine_chunks()
+    # edges hold both directions of every pair: the non-null srcs are
+    # every endpoint
+    nodes = pc.unique(src.drop_null())
+    nodes = nodes.take(pc.sort_indices(nodes))
+    both = pc.and_(src.is_valid(), dst.is_valid())
+    a = pc.index_in(src.filter(both), value_set=nodes).to_numpy()
+    b = pc.index_in(dst.filter(both), value_set=nodes).to_numpy()
+    ids = nodes
+    reps = nodes.take(pa.array(_min_labels(a, b, len(nodes))))
+    if src.null_count:
+        ids = pa.concat_arrays([ids, pa.nulls(1, ids.type)])
+        reps = pa.concat_arrays([reps, pa.nulls(1, reps.type)])
+    yield pa.RecordBatch.from_arrays([ids, reps], names=["id", "rep_id"])
+
+
 def dedup_clusters(
     all_ids: DataFrame,
     pairs: DataFrame,
@@ -678,22 +747,37 @@ def dedup_clusters(
     themselves) — the cluster-pick step after MinHash/SimHash candidate
     generation (SURVEY §2.3 / Phase 5).
 
-    Algorithm: min-label propagation + pointer doubling per round.
-    Propagation alone converges in O(component diameter) rounds — fine
-    for the small dense clusters near-dup workloads mostly produce, but
-    a scale cliff for the long similarity CHAINS that boilerplate /
-    template corpora create at 100 TB (a 10k-doc chain would need 10k
-    rounds). Each round therefore also shortcuts rep_id <- rep(rep_id)
-    (one self-join of the label table), which halves label-chain depth:
-    convergence is O(log n) rounds on any topology (the hash-to-min /
-    pointer-jumping argument — Kiveris et al., "Connected Components in
-    MapReduce and Beyond", gives the same bound for star operations).
-    Each round is two joins + one aggregate on |edge endpoints| rows;
-    labels are materialized per round to keep the lineage (and thus
-    task closures) constant-size at scale. `reliable` picks the mode
-    (functions/materialize.py): executor-local by default, durable
-    checkpoint files when True or when dynamic allocation is on —
-    same durability switch as the iterative graph operators.
+    The pairs are first canonicalized into a cached edge table (both
+    directions, distinct) and counted; the exact count picks the path,
+    so scanned and derived pair plans (minhash_lsh_pairs, whose size
+    estimate is unknown) choose alike:
+
+    - up to `CC_ONE_TASK_MAX_EDGES` edges: ONE task holds every edge
+      and resolves the graph in numpy (`_min_labels`: min-hooking plus
+      pointer jumping). Exact on any topology; the labels are
+      materialized once, with no round limit and no per-round jobs.
+    - above it, the distributed loop: min-label propagation + pointer
+      doubling per round. Propagation alone converges in
+      O(component diameter) rounds — fine for the small dense clusters
+      near-dup workloads mostly produce, but a scale cliff for the
+      long similarity CHAINS that boilerplate / template corpora create
+      at 100 TB (a 10k-doc chain would need 10k rounds). Each round
+      therefore also shortcuts rep_id <- rep(rep_id) (one self-join of
+      the label table), which halves label-chain depth: convergence is
+      O(log n) rounds when ids grow along a chain (the hash-to-min /
+      pointer-jumping argument — Kiveris et al., "Connected Components
+      in MapReduce and Beyond", gives the same bound for star
+      operations); a chain whose ids are shuffled along it converges
+      far slower. Each round is two joins + one aggregate on |edge
+      endpoints| rows; labels are materialized per round to keep the
+      lineage (and thus task closures) constant-size at scale, and the
+      superseded round's blocks are released. `max_iterations` caps
+      this loop's rounds and applies on this path only.
+
+    `reliable` picks the materialization mode of the labels on both
+    paths (functions/materialize.py): executor-local by default,
+    durable checkpoint files when True or when dynamic allocation is
+    on — same durability switch as the iterative graph operators.
     """
     edges = (
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
@@ -703,10 +787,40 @@ def dedup_clusters(
         .distinct()
         .cache()
     )
-    # only nodes that touch an edge need propagation — in a dedup
-    # workload that's a tiny fraction of the corpus, so the iterative
-    # loop runs on |edge endpoints|, and the (huge) singleton majority
-    # joins back in one anti-join at the end with rep=self
+    # only nodes that touch an edge get labels — in a dedup workload
+    # that's a tiny fraction of the corpus, so both paths run on |edge
+    # endpoints|, and the (huge) singleton majority joins back in one
+    # anti-join at the end with rep=self
+    if edges.count() <= CC_ONE_TASK_MAX_EDGES:
+        id_type = edges.schema["src"].dataType
+        labels = materialize(
+            edges.coalesce(1).mapInArrow(
+                _components_in_one_task,
+                StructType(
+                    [StructField("id", id_type), StructField("rep_id", id_type)]
+                ),
+            ),
+            reliable,
+        )
+        edge_nodes = labels.select("id")
+    else:
+        labels, edge_nodes = _label_loop(edges, max_iterations, reliable)
+    # the returned plan reads only the materialized edge_nodes and
+    # labels, never the edge cache
+    edges.unpersist()
+    singletons = (
+        all_ids.select(F.col(id_col).alias("id"))
+        .join(edge_nodes, "id", "left_anti")
+        .select("id", F.col("id").alias("rep_id"))
+    )
+    return labels.unionByName(singletons)
+
+
+def _label_loop(
+    edges: DataFrame, max_iterations: int, reliable: bool | None
+) -> tuple[DataFrame, DataFrame]:
+    """dedup_clusters' distributed path: (labels, edge_nodes), both
+    materialized, from min-label propagation + pointer doubling."""
     # localCheckpoint, not cache: the returned plan's singleton anti-join
     # references edge_nodes, and a cached lineage still embeds the whole
     # candidate-pair (sketch) plan in every consumer — checkpointing the
@@ -714,12 +828,8 @@ def dedup_clusters(
     edge_nodes = materialize(
         edges.select(F.col("src").alias("id")).distinct(), reliable
     )
-    singletons = (
-        all_ids.select(F.col(id_col).alias("id"))
-        .join(edge_nodes, "id", "left_anti")
-        .select("id", F.col("id").alias("rep_id"))
-    )
     labels = edge_nodes.select("id", F.col("id").alias("rep_id"))
+    superseded = None
     for it in range(max_iterations):
         neighbor_min = (
             edges.join(labels, edges["dst"] == labels["id"])
@@ -760,6 +870,11 @@ def dedup_clusters(
             ),
             reliable,
         )
+        # the previous round's labels were last read by this round's
+        # materialization (edge_nodes, round 0's input, stays)
+        if superseded is not None:
+            release(superseded)
+        superseded = new_labels
         labels = new_labels.select("id", "rep_id")
         # r13: probe EVERY round (was every 2nd). The probe is a
         # limit-1 scan over the just-checkpointed label blocks —
@@ -769,9 +884,7 @@ def dedup_clusters(
         # one whole extra round to save R/2 tiny probes.
         if new_labels.filter(F.col("__chg")).limit(1).count() == 0:
             break
-    # edges/edge_nodes stay cached: the returned plan (singletons
-    # anti-join) still reads them lazily
-    return labels.unionByName(singletons)
+    return labels, edge_nodes
 
 
 def dedup_clusters_incremental(
@@ -914,13 +1027,17 @@ def embedding_near_dup(
     import numpy as np
     import pandas as pd
 
-    n = emb.count()
+    # one sizing job: the row count and the vector width together
+    size = emb.agg(
+        F.count(F.lit(1)).alias("n"), F.max(F.size(F.col(vec_col))).alias("d")
+    ).first()
+    n = size["n"]
     if n == 0:
         return emb.sparkSession.createDataFrame(
             [], "id_a long, id_b long, cosine double"
         )
     if block_rows is None:
-        dim = emb.select(F.size(F.col(vec_col)).alias("d")).first()["d"] or 1
+        dim = size["d"] or 1
         # one block side ≈ 64 MB of float64s; floor keeps tiny-dim
         # corpora from degenerating into a single giant block task
         block_rows = max(1024, (64 << 20) // (int(dim) * 8))

@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 
 from distributed_vector_database_spark import versioned
 from distributed_vector_database_spark.config import DEFAULT_TOP_K, OVERFETCH
+from distributed_vector_database_spark.functions.materialize import release
 from distributed_vector_database_spark.operators.ann import (
     read_layout,
     write_layout,
@@ -843,7 +844,7 @@ def hnsw_append(
         # the checkpoint's blocks stay cached until released: nothing
         # reads `merged` after the write, so drop them now rather than
         # leave them in the session after every append
-        merged._jdf.queryExecution().analyzed().rdd().unpersist(True)
+        release(merged)
     # re-putting a tombstoned key RESURRECTS it (upsert semantics, the
     # reference's put path: the old node stays tombstoned, the new one
     # serves) — append a `remove` record for the keys that actually

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from distributed_vector_database_spark import versioned
+from distributed_vector_database_spark.functions.materialize import release
 from distributed_vector_database_spark.operators.hnsw import (
     _read_tombstones,
     hnsw_append,
@@ -108,18 +109,22 @@ def build_hnsw_changelog_fold(
             .drop("__rn")
             .localCheckpoint(eager=True)
         )
-        puts = last.filter(F.col(op_col) == "put").select(key_col, vec_col)
-        dels = [
-            r[key_col]
-            for r in last.filter(F.col(op_col) == "delete")
-            .select(key_col)
-            .collect()
-        ]
-        if puts.limit(1).count() > 0:
-            hnsw_append(
-                spark_, index_dir, puts, key_col=key_col, vec_col=vec_col,
-                batch_id=batch_id,
-            )
+        try:
+            puts = last.filter(F.col(op_col) == "put").select(key_col, vec_col)
+            dels = [
+                r[key_col]
+                for r in last.filter(F.col(op_col) == "delete")
+                .select(key_col)
+                .collect()
+            ]
+            if puts.limit(1).count() > 0:
+                hnsw_append(
+                    spark_, index_dir, puts, key_col=key_col,
+                    vec_col=vec_col, batch_id=batch_id,
+                )
+        finally:
+            # the newest-op view's last reader is the append
+            release(last)
         if dels:
             hnsw_delete(index_dir, dels)
         if compact_threshold is not None:

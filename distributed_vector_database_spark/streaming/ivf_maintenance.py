@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from distributed_vector_database_spark import versioned
+from distributed_vector_database_spark.functions.materialize import release
 from distributed_vector_database_spark.operators.ann import (
     ivf_append,
     ivf_delete,
@@ -84,39 +85,43 @@ def build_ivf_changelog_fold(
             .drop("__rn")
             .localCheckpoint(eager=True)
         )
-        # a malformed put carrying a null vector would crash
-        # ivf_assign's np.stack executor-side and kill the stream —
-        # drop it here (the HNSW twin filters inside hnsw_append)
-        puts = (
-            last.filter(F.col(op_col) == "put")
-            .filter(F.col(vec_col).isNotNull())
-            .drop(op_col, seq_col)
-        )
-        # ONE rewrite per batch: the victim set is every batch key —
-        # delete keys AND put keys (covers re-put upserts, and makes
-        # the whole fold replay-idempotent: a crashed append's rows
-        # are themselves put keys, so the replay's delete pass removes
-        # them before re-appending). Keys stay a DataFrame end-to-end —
-        # ivf_delete turns them into a broadcast anti join, never a
-        # collected literal list (O(batch) keys would otherwise
-        # round-trip the driver and explode the Catalyst predicate).
-        # Splitting this into upsert-pre-delete + delete-leg (the r7
-        # shape) rewrote the affected cells twice per batch; at 1M/100k
-        # ops the single-rewrite fold halves the dominant cost.
-        victims = last.select(key_col)
-        ivf_delete(spark_, index_dir, victims, key_col=key_col)
-        has_quantizer = _os2.path.exists(
-            _os2.path.join(index_dir, "_quantizer.json")
-        )
-        cents = (
-            ivf_read_quantizer(index_dir) if has_quantizer else centroids
-        )
-        if puts.limit(1).count() > 0:
-            ivf_append(
-                spark_, index_dir, puts, cents,
-                key_col=key_col, vec_col=vec_col, batch_id=batch_id,
-                assume_absent=True,
+        try:
+            # a malformed put carrying a null vector would crash
+            # ivf_assign's np.stack executor-side and kill the stream —
+            # drop it here (the HNSW twin filters inside hnsw_append)
+            puts = (
+                last.filter(F.col(op_col) == "put")
+                .filter(F.col(vec_col).isNotNull())
+                .drop(op_col, seq_col)
             )
+            # ONE rewrite per batch: the victim set is every batch key —
+            # delete keys AND put keys (covers re-put upserts, and makes
+            # the whole fold replay-idempotent: a crashed append's rows
+            # are themselves put keys, so the replay's delete pass removes
+            # them before re-appending). Keys stay a DataFrame end-to-end —
+            # ivf_delete turns them into a broadcast anti join, never a
+            # collected literal list (O(batch) keys would otherwise
+            # round-trip the driver and explode the Catalyst predicate).
+            # Splitting this into upsert-pre-delete + delete-leg (the r7
+            # shape) rewrote the affected cells twice per batch; at 1M/100k
+            # ops the single-rewrite fold halves the dominant cost.
+            victims = last.select(key_col)
+            ivf_delete(spark_, index_dir, victims, key_col=key_col)
+            has_quantizer = _os2.path.exists(
+                _os2.path.join(index_dir, "_quantizer.json")
+            )
+            cents = (
+                ivf_read_quantizer(index_dir) if has_quantizer else centroids
+            )
+            if puts.limit(1).count() > 0:
+                ivf_append(
+                    spark_, index_dir, puts, cents,
+                    key_col=key_col, vec_col=vec_col, batch_id=batch_id,
+                    assume_absent=True,
+                )
+        finally:
+            # the newest-op view's last reader is the append
+            release(last)
         if split_cap_factor is not None and has_quantizer:
             ivf_split_fat_cells(
                 spark_, index_dir, cap_factor=split_cap_factor,

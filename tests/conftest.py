@@ -99,3 +99,25 @@ def executed_plans(spark):
         return out, lines
 
     return run
+
+
+@pytest.fixture
+def persisted_rdds(spark):
+    """`run()` returns the ids of the RDDs persisted in the session now
+    (cached or locally checkpointed blocks)."""
+    rdds = spark.sparkContext._jsc.getPersistentRDDs
+    return lambda: {int(i) for i in rdds().keySet().toArray()}
+
+
+@pytest.fixture(params=["one_task", "loop"])
+def cc_path(request, monkeypatch):
+    """Runs the test once per dedup_clusters path: the one-task resolve
+    (every edge count fits) and the distributed label loop (none does)."""
+    from distributed_vector_database_spark.operators import dedup
+
+    monkeypatch.setattr(
+        dedup,
+        "CC_ONE_TASK_MAX_EDGES",
+        10**12 if request.param == "one_task" else -1,
+    )
+    return request.param

@@ -7,7 +7,7 @@ from distributed_vector_database_spark.operators.dedup import dedup_clusters
 from distributed_vector_database_spark.operators.textops import pack_documents
 
 
-def test_dedup_clusters_components(spark):
+def test_dedup_clusters_components(spark, cc_path):
     ids = spark.createDataFrame([(i,) for i in [1, 2, 3, 4, 10, 11, 99]], "id long")
     # chain 1-2-3-4 (tests multi-hop propagation), pair 10-11, singleton 99
     pairs = spark.createDataFrame(
@@ -17,11 +17,11 @@ def test_dedup_clusters_components(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 99: 99}
 
 
-def test_dedup_clusters_long_chain_converges_logarithmically(spark):
+def test_dedup_clusters_long_chain_converges_logarithmically(spark, cc_path):
     """A 4096-node PATH graph (the boilerplate-corpus worst case) must
     resolve within ~log2(n) rounds, not O(diameter): pointer doubling
     makes 12 iterations enough where pure min-label propagation would
-    need 4095."""
+    need 4095. The one-task path has no rounds; it must agree."""
     n = 4096
     ids = spark.createDataFrame([(i,) for i in range(n)], "id long")
     pairs = spark.createDataFrame(
@@ -34,11 +34,83 @@ def test_dedup_clusters_long_chain_converges_logarithmically(spark):
     assert got == {i: 0 for i in range(n)}
 
 
-def test_dedup_clusters_no_pairs(spark):
+def test_dedup_clusters_no_pairs(spark, cc_path):
     ids = spark.createDataFrame([(i,) for i in range(5)], "id long")
     pairs = spark.createDataFrame([], "id_a long, id_b long")
     got = {r["id"]: r["rep_id"] for r in dedup_clusters(ids, pairs).collect()}
     assert got == {i: i for i in range(5)}
+
+
+def _union_find_reps(ids, pairs):
+    """Pure-Python reference: {id: min id of its component} over every
+    id and every non-null pair endpoint."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for i in ids:
+        find(i)
+    for a, b in pairs:
+        if a is None or b is None:
+            for x in (a, b):
+                if x is not None:
+                    find(x)
+            continue
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def test_dedup_clusters_paths_match_union_find_reference(
+    spark, cc_path, persisted_rdds
+):
+    """Both paths equal a union-find reference on a seeded random graph,
+    and keep the label table's edge rules: a self-pair labels its id
+    itself, a null endpoint yields exactly one (null, null) row, and
+    endpoints missing from all_ids are labelled too. The loop path
+    releases each superseded round: the result holds at most its two
+    materialized frames (edge nodes, last labels), and the edge cache
+    is gone."""
+    import random
+
+    rng = random.Random(10)
+    ids = list(range(1, 7)) + list(range(100, 400))
+    # subcritical random graph (mean degree ~0.9): many small trees
+    pairs = [tuple(sorted(rng.sample(range(100, 400), 2))) for _ in range(140)]
+    pairs += [(3, 3), (None, 5), (9, 10), (1, 2)]
+    ids_df = spark.createDataFrame([(i,) for i in ids], "id long")
+    pairs_df = spark.createDataFrame(pairs, "id_a long, id_b long")
+    before = persisted_rdds()
+    out = dedup_clusters(ids_df, pairs_df, max_iterations=64)
+    assert len(persisted_rdds() - before) <= (1 if cc_path == "one_task" else 2)
+    rows = out.collect()
+    nulls = [r for r in rows if r["id"] is None]
+    assert [tuple(r) for r in nulls] == [(None, None)]
+    got = {r["id"]: r["rep_id"] for r in rows if r["id"] is not None}
+    assert len(got) == len(rows) - 1
+    assert got == _union_find_reps(ids, pairs)
+    assert got[3] == 3 and got[5] == 5 and got[10] == 9 and got[2] == 1
+
+
+def test_dedup_clusters_small_graph_runs_few_jobs(spark, spark_jobs, tmp_path):
+    """A candidate graph at or below CC_ONE_TASK_MAX_EDGES resolves in
+    one task: the whole call, read from a parquet pair file, runs at
+    most 10 Spark jobs (the round loop ran ~40 on such a graph)."""
+    path = str(tmp_path / "pairs")
+    spark.createDataFrame(
+        [(i, i + 1) for i in range(0, 600, 2)]
+        + [(i, i + 3) for i in range(0, 600, 5)],
+        "id_a long, id_b long",
+    ).write.parquet(path)
+    ids = spark.range(700).select("id")
+    pairs = spark.read.parquet(path)
+    assert spark_jobs(lambda: dedup_clusters(ids, pairs).collect()) <= 10
 
 
 def test_pack_documents_budget_respected(tables):
@@ -133,7 +205,7 @@ def test_build_training_examples_slices_exactly(spark):
         assert rows[e]["n_docs"] == want_docs
 
 
-def test_dedup_clusters_incremental_equals_batch_recompute(spark):
+def test_dedup_clusters_incremental_equals_batch_recompute(spark, cc_path):
     """fold(labels(P1), P2) == dedup_clusters(all, P1 ∪ P2) across the
     hard cases: a new edge MERGING two old components, a brand-new id
     that becomes its component's rep (smaller than the old min), a

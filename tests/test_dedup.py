@@ -641,7 +641,7 @@ def test_record_link_incremental_matches_full_recompute(spark):
     assert all(r[0] == 1 for r in inc)  # only the near-dup batch row links
 
 
-def test_dedup_clusters_reliable_mode_parity(spark, tmp_path):
+def test_dedup_clusters_reliable_mode_parity(spark, tmp_path, cc_path):
     # the durable-checkpoint materialization mode (executor-loss
     # safety, functions/materialize.py) must not change the labeling
     from distributed_vector_database_spark.operators.dedup import (

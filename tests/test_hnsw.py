@@ -481,3 +481,36 @@ def test_hnsw_tune_ef_picks_smallest_meeting_target(spark, tmp_path):
         spark, path, qs, k=10, target_recall=1.01, ef_grid=(8, 16)
     )
     assert out2["ef"] is None and len(out2["profile"]) == 2
+
+
+def test_hnsw_changelog_fold_leaves_no_persisted_rdds(
+    spark, tmp_path, persisted_rdds
+):
+    """The fold's newest-op-per-key checkpoint is released once the
+    batch is applied: three folds leave the session's persisted RDDs
+    as they were."""
+    from distributed_vector_database_spark.operators.hnsw import hnsw_write
+    from distributed_vector_database_spark.streaming.hnsw_maintenance import (
+        CHANGELOG_SCHEMA,
+        build_hnsw_changelog_fold,
+    )
+
+    rng = np.random.default_rng(5)
+    vecs = [[float(x) for x in rng.normal(size=8)] for _ in range(130)]
+    path = str(tmp_path / "idx")
+    hnsw_write(
+        spark.createDataFrame(
+            [(i, vecs[i]) for i in range(100)],
+            "vec_id long, embedding array<double>",
+        ),
+        path,
+        num_shards=2,
+    )
+    fold = build_hnsw_changelog_fold(path, compact_threshold=None)
+    before = persisted_rdds()
+    for b in range(3):
+        keys = [100 + b * 10 + i for i in range(4)]
+        ops = [(b * 10 + i, "put", k, vecs[k]) for i, k in enumerate(keys)]
+        ops += [(b * 10 + 5, "delete", b, None), (b * 10 + 6, "delete", b + 50, None)]
+        fold(spark.createDataFrame(ops, CHANGELOG_SCHEMA), b)
+        assert persisted_rdds() - before == set()

@@ -429,3 +429,33 @@ def test_cell_stats_lifecycle_keeps_range_search_exact(spark, tmp_path):
     stat_ids = {c for c, _, _ in ivf_read_cell_stats(path)}
     quant_ids = {c for c, _ in ivf_read_quantizer(path)}
     assert stat_ids <= quant_ids
+
+
+def test_ivf_changelog_fold_leaves_no_persisted_rdds(
+    spark, tmp_path, persisted_rdds
+):
+    """The fold's newest-op-per-key checkpoint is released once the
+    batch is applied: three folds leave the session's persisted RDDs
+    as they were."""
+    from distributed_vector_database_spark.operators.ann import (
+        ivf_build,
+        ivf_write,
+    )
+    from distributed_vector_database_spark.streaming.ivf_maintenance import (
+        CHANGELOG_SCHEMA,
+        build_ivf_changelog_fold,
+    )
+
+    base = _emb(spark, n=90)
+    rows = {r["vec_id"]: r["embedding"] for r in base.collect()}
+    path = str(tmp_path / "ivf")
+    centroids, assigned = ivf_build(base.filter(F.col("vec_id") < 60), n_centroids=4)
+    ivf_write(assigned, path)
+    fold = build_ivf_changelog_fold(path, centroids)
+    before = persisted_rdds()
+    for b in range(3):
+        keys = [60 + b * 10 + i for i in range(4)]
+        ops = [(b * 10 + i, "put", k, rows[k]) for i, k in enumerate(keys)]
+        ops += [(b * 10 + 5, "delete", b, None)]
+        fold(spark.createDataFrame(ops, CHANGELOG_SCHEMA), b)
+        assert persisted_rdds() - before == set()

@@ -9,6 +9,11 @@ max_iterations ceiling of ceil(log2(n)) + 4, and verifies every node
 landed on representative 0.
 
 Usage: python tools/chain_cc_smoke.py [n_nodes]   (default 100_000)
+
+Which dedup_clusters path a size takes: an n-node path has 2(n-1)
+canonical edges, so up to 500,000 nodes (the default included) it
+resolves in one task, where the round ceiling does not apply; pass
+n > 500_001 to time the distributed round loop.
 """
 
 from __future__ import annotations

@@ -23,6 +23,13 @@ steady state.
 
 Usage: python tools/giant_component_smoke.py [n] [giant]
        (defaults 1_000_000, 500_000)
+
+Which dedup_clusters path each measurement takes at the defaults
+(CC_ONE_TASK_MAX_EDGES = 1,000,000 canonical edges, two per pair):
+(1) resolves the 100 touched chains' stars plus the batch, ~2,000
+edges, in one task; (2) adds the giant's 499,999 star pairs, ~1,002,000
+edges, just over the bound, so it runs the round loop; (3) has ~1.9M
+edges and runs the round loop.
 """
 
 from __future__ import annotations
