@@ -26,18 +26,35 @@ file, with no Spark job. A single-record `put` on a 3,000 x 64-d store
 way. The file is written under a `.`-prefixed temp name and renamed
 into place, so a crash mid-write leaves only a hidden file that Spark's
 readers skip.
+
+`read_local_parquet` is the read twin: the rows of a few keys come back
+from one parquet directory through `pyarrow.dataset` on the driver, with
+no Spark job (a store `get` on a 3,000 x 64-d store, local[4]: a p50 of
+274 ms as a Spark collect, 12 ms this way). It reads only the row
+groups whose key min/max statistics bracket one of the keys, then
+filters with `isin`, which makes the answer exact. pyarrow's own pruning would not do: it
+prunes no row group on a bare `isin`, and a `key >= min(keys) & key <=
+max(keys)` range in front prunes only outside the range, so a few keys
+spread over the key space (an HNSW proposal) would read every row group
+between them — the whole snapshot, onto the driver. On a key-sorted
+directory, such as a snapshot `compact()` writes range-partitioned, a
+key reads one row group. It skips `.`/`_`-prefixed names exactly as
+Spark's reader does, so it reads the files a Spark read of that
+directory reads.
 """
 
 from __future__ import annotations
 
+import bisect
 import functools
 import logging
 import os
 import uuid
-from typing import Any, Sequence
+from typing import Any, Collection, Sequence
 
 import pandas as pd
 import pyarrow as pa
+import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -170,3 +187,66 @@ def write_local_parquet(
     path = os.path.join(directory, name)
     os.replace(tmp, path)
     return path
+
+
+def _holds_a_key(stats: dict | None, keys: Sequence[Any]) -> bool:
+    """Whether a row group whose key column has min/max `stats` can hold
+    one of the sorted `keys`; one without statistics may hold any."""
+    if not stats or "min" not in stats or "max" not in stats:
+        return True
+    i = bisect.bisect_left(keys, stats["min"])
+    return i < len(keys) and keys[i] <= stats["max"]
+
+
+def _row_groups_for_keys(
+    dataset: ds.FileSystemDataset, key_col: str, keys: Sequence[Any]
+) -> list[ds.ParquetFileFragment]:
+    """`dataset`'s files cut to the row groups that can hold one of the
+    sorted `keys`, judged by each row group's key min/max statistics
+    (read from the footers). Files with no such row group drop out."""
+    out = []
+    for frag in dataset.get_fragments():
+        ids = [rg.id for rg in frag.row_groups if _holds_a_key(rg.statistics.get(key_col), keys)]
+        if ids:
+            out.append(frag.subset(row_group_ids=ids))
+    return out
+
+
+def read_local_parquet(
+    directory: str,
+    schema: Any,
+    key_col: str | None = None,
+    keys: Collection[Any] | None = None,
+) -> list[dict]:
+    """The rows of `directory`'s parquet files whose `key_col` is in
+    `keys` (every row when `key_col` is None), read on the driver with
+    no Spark job, as dicts in the form a Spark collect gives: map
+    columns become dicts, nulls stay None.
+
+    Files are read with the Arrow schema derived from the Spark `schema`
+    (as `write_local_parquet` writes them), so Spark-written and
+    driver-written files read alike. Only the row groups that can hold
+    a key are read (`_row_groups_for_keys`). An unreadable file
+    raises."""
+    arrow_schema, _ = _arrow_schema_and_verifier(schema)
+    dataset = ds.dataset(
+        directory, schema=arrow_schema, format="parquet",
+        ignore_prefixes=[".", "_"],
+    )
+    flt = None
+    if key_col is not None:
+        keys = sorted(set(keys or ()))
+        if not keys:
+            return []
+        dataset = ds.FileSystemDataset(
+            _row_groups_for_keys(dataset, key_col, keys), arrow_schema,
+            dataset.format, dataset.filesystem,
+        )
+        flt = ds.field(key_col).isin(keys)
+    rows = dataset.to_table(filter=flt).to_pylist()
+    maps = [f.name for f in arrow_schema if pa.types.is_map(f.type)]
+    for r in rows:
+        for c in maps:
+            if r[c] is not None:
+                r[c] = dict(r[c])
+    return rows

@@ -5,9 +5,9 @@ The reference's ANN is a per-node HNSW graph (hnswlib, M=32,
 ef_construction=128, src/datanode/handler.py:46,86-88). The Spark-native
 ANN surface is:
 
-0. `hnsw_partition_ann` — the reference's algorithm itself, one HNSW
-   graph per partition, implemented in pure numpy (operators/hnsw.py) so
-   it needs no native hnswlib dependency.
+0. The reference's algorithm itself, one HNSW graph per partition,
+   lives in operators/hnsw.py (`hnsw_partition_topk`, pure numpy, so it
+   needs no native hnswlib dependency).
 1. `lsh_model` / `lsh_ann` — MLlib BucketedRandomProjectionLSH
    (random-hyperplane bucketing; approxNearestNeighbors for one query,
    approxSimilarityJoin for k-NN join). This is the "DataFrame-based
@@ -171,37 +171,6 @@ def lsh_similarity_join(
         F.col(f"datasetB.{key_b}").alias("id_b"),
         F.round(F.col("dist") * F.col("dist"), 6).alias("score"),
     ).filter(F.col("id_a") < F.col("id_b"))
-
-
-def hnsw_partition_ann(
-    df: DataFrame,
-    query_vec: Sequence[float],
-    k: int = 5,
-    key_col: str = "vec_id",
-    vec_col: str = "embedding",
-    m: int = 32,
-    ef_construction: int = 128,
-    ef: int | None = None,
-):
-    """Per-partition HNSW ANN — the reference's actual index algorithm
-    (hnswlib defaults M=32, ef_construction=128, ef=max(50, 2k),
-    src/datanode/handler.py:46,86-88,360-361), served by the pure-numpy
-    graph in operators/hnsw.py (no native dependency needed): each
-    partition builds/queries a local HNSW graph over its rows and emits
-    ≤ 2k candidates (the reference's over-fetch, handler.py:364); the
-    global orderBy(score).limit(k) merges."""
-    from distributed_vector_database_spark.operators.hnsw import hnsw_partition_topk
-
-    return hnsw_partition_topk(
-        df,
-        query_vec,
-        k=k,
-        key_col=key_col,
-        vec_col=vec_col,
-        m=m,
-        ef_construction=ef_construction,
-        ef=ef,
-    )
 
 
 def ivf_build(

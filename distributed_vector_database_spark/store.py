@@ -32,12 +32,13 @@ src/datanode/handler.py:156-219, as immutable Parquet):
 Reads resolve snapshot ∪ compacted-changelog-tail — exactly the
 reference's checkpoint + incremental WAL replay (SURVEY §3.4). Calls
 that touch a few keys (`get`, the `hnsw_search` re-score of up to
-KEY_SCOPED_MAX_KEYS proposals) resolve only those keys
-(`_rows_for_keys`: one Spark job, the key set pushed into both scans,
-the newest changelog row winning on the driver), the way the reference
-serves `get` as one LevelDB lookup; every other read (`search`, `scan`,
+KEY_SCOPED_MAX_KEYS proposals) resolve only those keys on the driver
+(`_rows_for_keys`: pyarrow reads the keys' rows from the snapshot and
+the changelog, row groups pruned by their key statistics, and the
+newest changelog row wins; no Spark job), the way the reference serves
+`get` as one LevelDB lookup; every other read (`search`, `scan`,
 `count`, `index_search`, `compact`, a wider `hnsw_search`) resolves all
-of `state()`. Every read names its schema, so no read runs a
+of `state()` with Spark. Every read names its schema, so no read runs a
 schema-inference job. At scale: the changelog is the only window-sorted
 data; `compact()` folds it into the next snapshot version (the 200k-put
 rebuild / 2k-put checkpoint cadence becomes an explicit batch job).
@@ -64,8 +65,11 @@ import shutil
 import time
 from collections.abc import Sequence
 
+import pyarrow.parquet as pq
+
 from distributed_vector_database_spark.functions.localrel import (
     local_df,
+    read_local_parquet,
     write_local_parquet,
 )
 from pyspark.sql import DataFrame, Row, SparkSession
@@ -93,11 +97,13 @@ LOG_SCHEMA = (
     "metadata map<string,string>, ts long, seq long"
 )
 BUILD_META_SCHEMA = "log_ops_at_build long, built_at_ms long"
-# widest key set resolved by _rows_for_keys: its keys travel as an IN
-# literal list, whose planning cost grows with the list. On a 3,000-key
-# store (4 cores) it beat a join against state() at 20 and 200 keys and
-# lost from 1,000 keys on (1.4 s vs 0.8 s; 9 s vs 0.8 s at 10,000)
-KEY_SCOPED_MAX_KEYS = 256
+# widest key set resolved by _rows_for_keys, whose rows are held on the
+# driver. On a 10,000 x 64-d store (4 cores) an hnsw_search re-score of
+# that many keys (driver resolve, then local_df) beat the join against
+# state() at 2,000 keys (0.44-0.52 s vs 0.73-0.88 s), was even with it
+# from 3,000 to 5,000 and lost at 10,000 (1.4 s vs 0.7 s); 2,000 keeps a
+# margin below the crossover and caps the rows a call holds on the driver
+KEY_SCOPED_MAX_KEYS = 2_000
 
 
 class DimensionMismatch(ValueError):
@@ -167,15 +173,27 @@ class VectorStore:
         write_local_parquet(rows, LOG_SCHEMA, self._log_dir)
         self._maybe_auto_compact()
 
-    def _log_file_count(self) -> int:
+    def _log_files(self) -> list[str]:
+        """The changelog's data files: every name a Spark read of the
+        directory reads (it skips `_`/`.` names)."""
         try:
-            return sum(
-                1
-                for f in os.listdir(self._log_dir)
-                if not f.startswith(("_", "."))
-            )
+            names = os.listdir(self._log_dir)
         except FileNotFoundError:
-            return 0
+            return []
+        return [
+            os.path.join(self._log_dir, f)
+            for f in names
+            if not f.startswith(("_", "."))
+        ]
+
+    def _log_file_count(self) -> int:
+        return len(self._log_files())
+
+    def _log_op_count(self) -> int:
+        """Changelog op count after a flush, summed from the parquet
+        footers on the driver: no Spark job."""
+        self.flush()
+        return sum(pq.read_metadata(f).num_rows for f in self._log_files())
 
     def _maybe_auto_compact(self) -> None:
         """Fold the log into a snapshot once it fragments past
@@ -412,27 +430,30 @@ class VectorStore:
 
     def _rows_for_keys(self, keys) -> dict:
         """{key: Row(key, vector, metadata, ts)} of the live keys among
-        `keys` — state() resolved for those keys only, in one Spark job:
-        the snapshot rows ∪ the changelog rows of the keys (the key set
-        pushed into both scans), then, per key, the newest changelog row
-        by (ts, seq) wins over the snapshot row and drops the key unless
-        it is a PUT — changelog.compact's rules, nulls lowest as in its
-        descending window. At most KEY_SCOPED_MAX_KEYS keys."""
-        keys = sorted({str(k) for k in keys})
+        `keys` — state() resolved for those keys only, on the driver
+        with no Spark job: the snapshot rows and the changelog rows of
+        the keys are read with pyarrow (localrel.read_local_parquet,
+        row groups pruned by their key statistics), then, per key, the
+        newest changelog row by (ts, seq) wins over the snapshot row and
+        drops the key unless it is a PUT — changelog.compact's rules,
+        nulls lowest as in its descending window. At most
+        KEY_SCOPED_MAX_KEYS keys."""
+        keys = {str(k) for k in keys}
         if not keys:
             return {}
-        assert len(keys) <= KEY_SCOPED_MAX_KEYS, len(keys)
-        log = self._log()
-        wanted = F.col("key").isin(keys)
-        rows = (
-            self._base()
-            .filter(wanted)
-            .select(F.lit(False).alias("from_log"),
-                    F.lit(None).cast("string").alias("op"), *STATE_COLS,
-                    F.lit(None).cast("long").alias("seq"))
-            .unionByName(log.filter(wanted).select(
-                F.lit(True).alias("from_log"), "op", *STATE_COLS, "seq"))
-            .collect()
+        if len(keys) > KEY_SCOPED_MAX_KEYS:
+            raise ValueError(f"{len(keys)} keys > KEY_SCOPED_MAX_KEYS")
+        # the flush first: it may auto-compact into a new snapshot
+        self.flush()
+        v = latest_version(self._snap_dir)
+        snap = (
+            read_local_parquet(f"{self._snap_dir}/v={v}", STATE_SCHEMA, "key", keys)
+            if v >= 0 else []
+        )
+        # as in _log(): only an absent (or emptied) log reads as empty
+        log = (
+            read_local_parquet(self._log_dir, LOG_SCHEMA, "key", keys)
+            if self._log_file_count() else []
         )
 
         def order(r):
@@ -440,13 +461,11 @@ class VectorStore:
             return (r["ts"] is not None, r["ts"] or 0,
                     r["seq"] is not None, r["seq"] or 0)
 
-        snap, newest = {}, {}
-        for r in rows:
-            if not r["from_log"]:
-                snap[r["key"]] = r
-            elif r["key"] not in newest or order(r) > order(newest[r["key"]]):
+        newest = {}
+        for r in log:
+            if r["key"] not in newest or order(r) > order(newest[r["key"]]):
                 newest[r["key"]] = r
-        out = {k: r for k, r in snap.items() if k not in newest}
+        out = {r["key"]: r for r in snap if r["key"] not in newest}
         # compact keeps op != DELETE, which is null (dropped) for a null op
         out.update((k, r) for k, r in newest.items() if r["op"] not in (None, OP_DELETE))
         return {k: Row(**{c: r[c] for c in STATE_COLS}) for k, r in out.items()}
@@ -489,8 +508,9 @@ class VectorStore:
     def get(self, key: str) -> dict | None:
         """Point lookup (O3); None after delete
         (src/datanode/handler.py:418-421). Resolves this one key
-        (_rows_for_keys): one Spark job whose scans read only the key's
-        row groups, not the corpus-wide state()."""
+        (_rows_for_keys) on the driver with no Spark job, reading only
+        the row groups whose key range holds it, not the corpus-wide
+        state()."""
         r = self._rows_for_keys([key]).get(str(key))
         if r is None:
             return None
@@ -591,7 +611,7 @@ class VectorStore:
         version, or None if under threshold. Call after large ingests;
         a scheduler owns the cadence in production."""
         t = self.REBUILD_EVERY if threshold is None else int(threshold)
-        total_ops = self._log().count()
+        total_ops = self._log_op_count()
         base = self._ops_at_last_build()
         # a compaction since the last build truncates the log, making the
         # recorded baseline stale — every surviving log op is then new
@@ -615,9 +635,7 @@ class VectorStore:
         v = latest_version(data_dir)
         if v < 0:
             return 0
-        row = self.spark.read.schema(BUILD_META_SCHEMA).parquet(
-            f"{meta_dir}/v={v}"
-        ).collect()[0]
+        row = read_local_parquet(f"{meta_dir}/v={v}", BUILD_META_SCHEMA)[0]
         return int(row["log_ops_at_build"])
 
     def rebuild_index(
@@ -638,7 +656,7 @@ class VectorStore:
         )
 
         data_dir, meta_dir = self._index_dirs()
-        log_ops = self._log().count()
+        log_ops = self._log_op_count()
         state = self.state().filter(F.col("vector").isNotNull())
         vectors = state.select("key", F.col("vector").alias("embedding"))
         if n_centroids == "auto":
@@ -793,10 +811,10 @@ class VectorStore:
         src/datanode/handler.py:364), live state DISPOSES — deleted keys
         drop out and re-scoring uses current vectors. A pool of up to
         KEY_SCOPED_MAX_KEYS keys is resolved alone against snapshot ∪
-        changelog (_rows_for_keys), without resolving the rest of the
-        corpus; a wider one is joined against state(). ef >= shard
-        rows makes the proposal exhaustive (exact modulo the live-state
-        resolution).
+        changelog on the driver (_rows_for_keys, no Spark job), without
+        resolving the rest of the corpus; a wider one is joined against
+        state(). ef >= shard rows makes the proposal exhaustive (exact
+        modulo the live-state resolution).
 
         `predicate` filters the live rows on live-state columns
         (metadata map / key); the proposal widens by `filter_overfetch`

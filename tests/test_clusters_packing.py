@@ -2,8 +2,8 @@
 
 import pytest
 
-from distributed_vector_database_spark.operators.ann import hnsw_partition_ann
 from distributed_vector_database_spark.operators.dedup import dedup_clusters
+from distributed_vector_database_spark.operators.hnsw import hnsw_partition_topk
 from distributed_vector_database_spark.operators.textops import pack_documents
 
 
@@ -133,10 +133,10 @@ def test_pack_documents_cumsum_consistency(spark):
     assert [rows[i]["bin_id"] for i in range(6)] == [0, 0, 0, 1, 1, 2]
 
 
-def test_hnsw_partition_ann_runs_without_native_library(tables):
-    """hnsw_partition_ann no longer gates on hnswlib — the numpy graph
+def test_hnsw_partition_topk_runs_without_native_library(tables):
+    """Per-partition HNSW needs no hnswlib — the numpy graph
     (operators/hnsw.py) serves it; results are (key, score) rows."""
-    out = hnsw_partition_ann(tables["embeddings"], [0.0] * 64, k=5).collect()
+    out = hnsw_partition_topk(tables["embeddings"], [0.0] * 64, k=5).collect()
     assert len(out) == 5
     assert [r["score"] for r in out] == sorted(r["score"] for r in out)
 

@@ -97,6 +97,55 @@ def test_write_local_parquet_keeps_type_strictness(spark, tmp_path):
     assert sorted((r["a"], r["b"]) for r in rows) == [(1, None), (2, 3.5)]
 
 
+def test_read_local_parquet_reads_only_row_groups_holding_a_key(spark, tmp_path):
+    """On a key-sorted directory (4 files x 4 row groups) one key reads
+    exactly one row group, and two keys at its ends read two (a min/max
+    range filter would keep the 15 between them); `.`/`_`-prefixed
+    files are never read, like Spark's reader; map columns come back as
+    dicts and nulls as None."""
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+
+    from distributed_vector_database_spark.functions.localrel import (
+        _row_groups_for_keys,
+        read_local_parquet,
+    )
+
+    schema = "key string, n long, metadata map<string,string>"
+    arrow = pa.schema([("key", pa.string()), ("n", pa.int64()),
+                       ("metadata", pa.map_(pa.string(), pa.string()))])
+    d = tmp_path / "sorted"
+    d.mkdir()
+    for f in range(4):
+        keys = [f"k{i:04d}" for i in range(f * 100, (f + 1) * 100)]
+        meta = [None if i % 2 else [("i", str(i))] for i in range(f * 100, (f + 1) * 100)]
+        pq.write_table(pa.table([keys, list(range(f * 100, (f + 1) * 100)), meta], schema=arrow),
+                       str(d / f"part-{f}.parquet"), row_group_size=25)
+    # a hidden temp file holding a stale copy of a key, and a non-parquet
+    # underscore file: reading either would change or fail the answer
+    pq.write_table(pa.table([["k0042"], [-1], [None]], schema=arrow), str(d / ".part-9.parquet"))
+    (d / "_SUCCESS").write_bytes(b"not a parquet file")
+
+    dataset = ds.dataset(str(d), format="parquet")
+    frags = list(dataset.get_fragments())
+    assert len(frags) == 4 and sum(f.num_row_groups for f in frags) == 16
+
+    def kept(keys):
+        return sum(f.num_row_groups for f in _row_groups_for_keys(dataset, "key", sorted(keys)))
+
+    assert kept(["k0042"]) == 1 and kept(["k0042", "k0043"]) == 1
+    assert kept(["k0042", "k0399"]) == 2 and kept(["k0024a", "zz"]) == 0
+    rows = read_local_parquet(str(d), schema, "key", ["k0043", "k0042", "k0399", "nope"])
+    assert sorted(rows, key=lambda r: r["key"]) == [
+        {"key": "k0042", "n": 42, "metadata": {"i": "42"}},
+        {"key": "k0043", "n": 43, "metadata": None},
+        {"key": "k0399", "n": 399, "metadata": None},
+    ]
+    assert read_local_parquet(str(d), schema, "key", []) == []
+    assert len(read_local_parquet(str(d), schema)) == 400
+
+
 def test_local_df_fast_path_fallback_logs_once(spark, monkeypatch, caplog):
     # a degraded fast path must show in the log (once per process, not
     # per call) and still return the rows through the plain path

@@ -756,7 +756,8 @@ def test_bad_batch_leaves_nothing_behind(spark, indexed):
 
 def test_store_verbs_run_only_the_jobs_their_answers_need(spark, indexed, spark_jobs, tmp_path):
     """Spark jobs per verb on a store with a snapshot, a changelog tail
-    and both indexes: a point lookup is one job (key-scoped resolution),
+    and both indexes: a point lookup and the rebuild cadence check run
+    no job (key-scoped resolution and footer counts on the driver),
     reads name their schemas (no inference or emptiness probes),
     put_batch evaluates its batch once, and put, delete and a buffered
     flush write from the driver without a Spark job."""
@@ -766,10 +767,11 @@ def test_store_verbs_run_only_the_jobs_their_answers_need(spark, indexed, spark_
         [("k5", [5.0, 5.0, 5.0, 5.0]), ("j1", [1.0, 1.0, 1.0, 1.0])],
         "key string, vector array<double>",
     )
-    assert spark_jobs(lambda: s.get("k1")) == 1
+    assert spark_jobs(lambda: s.get("k1")) == 0
+    assert spark_jobs(lambda: s.maybe_rebuild_index(threshold=10**9)) == 0
     assert spark_jobs(lambda: s.search(q, top_k=5).collect()) <= 4
     assert spark_jobs(lambda: s.index_search(q, top_k=5).collect()) <= 6
-    assert spark_jobs(lambda: s.hnsw_search(q, top_k=5).collect()) <= 5
+    assert spark_jobs(lambda: s.hnsw_search(q, top_k=5).collect()) <= 4
     assert spark_jobs(lambda: s.put_batch(batch)) <= 9
     assert s.get("j1")["vector"] == [1.0, 1.0, 1.0, 1.0]
     # single-record writes reach the changelog from the driver
