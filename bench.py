@@ -669,8 +669,9 @@ def main() -> None:
     for name in HEADLINE:
         try:
             qs[name](spark, warm_dir).count()
-        except Exception:
-            pass
+        except Exception as e:  # noqa: BLE001 - the timed run reports it
+            msg = (str(e).splitlines() or [""])[0]
+            print(f"# warm-up {name} FAILED: {type(e).__name__}: {msg}", file=sys.stderr)
     # several operators cache intermediates (LSH models, signatures,
     # postings) and queries never unpersist — after 35 warmups the
     # session carries ~100 cached RDDs whose storage-pool pressure

@@ -1301,9 +1301,21 @@ def ivf_probe(
 
 def predicate_selectivity(df: DataFrame, predicate) -> float:
     """Fraction of `df`'s rows `predicate` keeps (1.0 for an empty
-    frame): two counts, for the filtered-probe width of ivf_probe."""
-    total = df.count()
-    return df.filter(predicate).count() / total if total else 1.0
+    frame; a row it maps to null is not kept), for the filtered-probe
+    width of ivf_probe. Both counts are observed metrics of one scan of
+    the predicate's columns into the no-op sink: one Spark job and no
+    shuffle, where a global aggregate runs as two jobs under adaptive
+    execution."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    (
+        df.select(F.when(predicate, 1).alias("kept"))
+        .observe(obs, F.count(F.lit(1)).alias("n"), F.count("kept").alias("kept"))
+        .write.format("noop").mode("overwrite").save()
+    )
+    m = obs.get
+    return m["kept"] / m["n"] if m["n"] else 1.0
 
 
 def ivf_search(

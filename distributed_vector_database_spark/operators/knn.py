@@ -22,6 +22,12 @@ over-fetch, then the same global merge) — it exists to prove the custom
 per-partition-ANN harness produces hash-identical results to the
 declarative plan, so the same merge can later host an hnswlib/IVF kernel.
 
+`knn_exact_local` is knn_exact's driver twin for rows the driver
+already holds (a store's changelog tail, an ANN proposal resolved on
+the driver): numpy scores them with no Spark job, folded and rounded
+so that every score equals knn_exact's exactly, and `rank_local` orders
+them as Spark does.
+
 The declared-but-dead SearchRequest fields are implemented for real:
 `filter` (metadata equality, src/vector_db.thrift:26, dropped by the
 reference coordinator at src/coordinator/handler.py:186-189) becomes a
@@ -32,7 +38,9 @@ becomes a post-distance filter.
 
 from __future__ import annotations
 
-from collections.abc import Iterator, Sequence
+import decimal
+import math
+from collections.abc import Iterable, Iterator, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -79,6 +87,71 @@ def knn_exact(
         # threshold = max distance allowed (src/vector_db.thrift:27)
         scored = scored.filter(F.col("score") <= float(threshold))
     return scored.orderBy("score", key_col).limit(k)
+
+
+# Spark's round(double, d) rounds the double's shortest decimal string
+# (BigDecimal.valueOf) half-up, at any magnitude
+_ROUND_CTX = decimal.Context(prec=400, rounding=decimal.ROUND_HALF_UP)
+_ROUND_QUANTUM = decimal.Decimal(1).scaleb(-SCORE_DECIMALS)
+
+
+def _spark_round(x: float) -> float:
+    if not math.isfinite(x):
+        return x
+    return float(decimal.Decimal(repr(x)).quantize(_ROUND_QUANTUM, context=_ROUND_CTX))
+
+
+def _asc(v):
+    # Spark's ascending order: a null first, NaN after every number
+    if v is None:
+        return (0, 0)
+    return (2, 0) if v != v else (1, v)
+
+
+def rank_local(scored: Iterable[tuple], k: int) -> list[tuple]:
+    """The first k of `scored` — (key, score, ...) tuples — in
+    knn_exact's order: ascending (score, key) as Spark sorts them."""
+    return sorted(scored, key=lambda t: (_asc(t[1]), _asc(t[0])))[:k]
+
+
+def knn_exact_local(
+    rows: Iterable,
+    query_vec: Sequence[float],
+    k: int = DEFAULT_TOP_K,
+    key_col: str = "vec_id",
+    vec_col: str = "embedding",
+    threshold: float | None = None,
+) -> list[tuple]:
+    """knn_exact over driver-held rows (Rows or dicts), with no Spark
+    job: [(key, score)] ordered by (score, key), the first k.
+
+    The scores equal knn_exact's exactly: (x - q)^2 is folded left to
+    right in double as squared_l2's `aggregate` does (a column at a
+    time, vectorized over the rows), then rounded as Spark's `round`
+    rounds. A vector of another length or with a null element scores
+    null, as zip_with's null padding makes it; null vectors are dropped
+    and `threshold` applies to the rounded score, as in knn_exact."""
+    import numpy as np
+
+    k = _effective_k(k)
+    q = np.asarray([float(v) for v in query_vec], dtype=np.float64)
+    rows = [r for r in rows if r[vec_col] is not None]
+    regular = [
+        i for i, r in enumerate(rows)
+        if len(r[vec_col]) == len(q) and None not in r[vec_col]
+    ]
+    scores: list[float | None] = [None] * len(rows)
+    if regular:
+        d = np.asarray([rows[i][vec_col] for i in regular], dtype=np.float64) - q
+        acc = np.zeros(len(regular))
+        for j in range(len(q)):
+            acc += d[:, j] * d[:, j]
+        for i, s in zip(regular, acc.tolist()):
+            scores[i] = _spark_round(s)
+    scored = [(r[key_col], s) for r, s in zip(rows, scores)]
+    if threshold is not None:
+        scored = [t for t in scored if t[1] is not None and t[1] <= float(threshold)]
+    return rank_local(scored, k)
 
 
 def knn_sharded(

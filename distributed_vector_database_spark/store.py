@@ -31,17 +31,25 @@ src/datanode/handler.py:156-219, as immutable Parquet):
 
 Reads resolve snapshot ∪ compacted-changelog-tail — exactly the
 reference's checkpoint + incremental WAL replay (SURVEY §3.4). Calls
-that touch a few keys (`get`, the `hnsw_search` re-score of up to
+that touch a few keys (`get`, the ANN searches' re-score of up to
 KEY_SCOPED_MAX_KEYS proposals) resolve only those keys on the driver
 (`_rows_for_keys`: pyarrow reads the keys' rows from the snapshot and
 the changelog, row groups pruned by their key statistics, and the
 newest changelog row wins; no Spark job), the way the reference serves
-`get` as one LevelDB lookup; every other read (`search`, `scan`,
-`count`, `index_search`, `compact`, a wider `hnsw_search`) resolves all
-of `state()` with Spark. Every read names its schema, so no read runs a
-schema-inference job. At scale: the changelog is the only window-sorted
-data; `compact()` folds it into the next snapshot version (the 200k-put
-rebuild / 2k-put checkpoint cadence becomes an explicit batch job).
+`get` as one LevelDB lookup. The searches read the two parts apart, as
+the reference queries its index and then drops a small deleted-id set
+(src/datanode/handler.py:378-380): Spark reads only the immutable
+snapshot (exact `search`: one top-k job) or the index (`index_search`,
+`hnsw_search`: the proposal), and the driver merges the changelog tail
+and scores with numpy (`knn.knn_exact_local`); the answer is a local
+relation, which a collect reads with no Spark job. What still resolves
+all of `state()` in Spark: `scan`, `count`, `compact`, `export_wal`,
+the index rebuilds, a `search` over a changelog of more than
+KEY_SCOPED_MAX_KEYS ops, and an ANN proposal wider than that. Every
+read names its schema, so no read runs a schema-inference job. At
+scale: the changelog is the only window-sorted data; `compact()` folds
+it into the next snapshot version (the 200k-put rebuild / 2k-put
+checkpoint cadence becomes an explicit batch job).
 Writes append Parquet files to the changelog — single-writer, like the
 reference's per-node RLock discipline. `put_batch` and `import_wal`
 append with a Spark write; single-record `put` / `delete` (and the
@@ -60,6 +68,7 @@ scores are ascending squared-L2 (src/coordinator/handler.py:212).
 
 from __future__ import annotations
 
+import math
 import os
 import shutil
 import time
@@ -81,7 +90,12 @@ from distributed_vector_database_spark.operators.changelog import (
     OP_PUT,
     apply_changelog,
 )
-from distributed_vector_database_spark.operators.knn import knn_exact
+from distributed_vector_database_spark.operators.knn import (
+    _effective_k,
+    knn_exact,
+    knn_exact_local,
+    rank_local,
+)
 from distributed_vector_database_spark.plans.explain import plan_size_bytes
 from distributed_vector_database_spark import versioned
 
@@ -97,13 +111,44 @@ LOG_SCHEMA = (
     "metadata map<string,string>, ts long, seq long"
 )
 BUILD_META_SCHEMA = "log_ops_at_build long, built_at_ms long"
-# widest key set resolved by _rows_for_keys, whose rows are held on the
-# driver. On a 10,000 x 64-d store (4 cores) an hnsw_search re-score of
-# that many keys (driver resolve, then local_df) beat the join against
-# state() at 2,000 keys (0.44-0.52 s vs 0.73-0.88 s), was even with it
-# from 3,000 to 5,000 and lost at 10,000 (1.4 s vs 0.7 s); 2,000 keeps a
-# margin below the crossover and caps the rows a call holds on the driver
+# widest key set resolved by _rows_for_keys, and the most changelog ops
+# a search holds on the driver (_tail). On a 10,000 x 64-d store
+# (4 cores, median of 5, two runs) the ANN dispose of that many keys on
+# the driver beat the semi-join against state() at 20 keys (87-107 ms vs
+# 485-537 ms) and at 2,000 (260-276 vs 495-520) and lost at 10,000
+# (0.92-1.16 s vs 0.52-0.56 s); a search merging a tail of that many ops
+# on the driver beat knn_exact over state() at 500 (332-475 ms vs
+# 578-753 ms), was even at 2,000 (537-551 vs 607-669) and lost at 5,000
+# (512-717 vs 432-584) and 10,000 (1.0-1.3 s vs 0.5-0.6 s). One constant
+# at the lower crossover serves both, and caps the rows a call holds on
+# the driver
 KEY_SCOPED_MAX_KEYS = 2_000
+ANSWER_SCHEMA = "key string, score double"
+PAYLOAD_SCHEMA = ANSWER_SCHEMA + ", vector array<double>, metadata map<string,string>"
+
+
+def _state_row(r) -> Row:
+    return Row(**{c: r[c] for c in STATE_COLS})
+
+
+def _newest_ops(log_rows) -> dict:
+    """{key: state Row | None} from changelog rows: per key, the newest
+    row by (ts, seq) wins — nulls lowest, as in changelog.compact's
+    descending window — and is None unless it is live: compact keeps
+    op != DELETE, which drops a DELETE and a null op."""
+    def order(r):
+        # F.desc sorts nulls last, so a null ts or seq loses
+        return (r["ts"] is not None, r["ts"] or 0,
+                r["seq"] is not None, r["seq"] or 0)
+
+    newest = {}
+    for r in log_rows:
+        if r["key"] not in newest or order(r) > order(newest[r["key"]]):
+            newest[r["key"]] = r
+    return {
+        k: None if r["op"] in (None, OP_DELETE) else _state_row(r)
+        for k, r in newest.items()
+    }
 
 
 class DimensionMismatch(ValueError):
@@ -428,15 +473,23 @@ class VectorStore:
             base, log.select("op", *STATE_COLS, "seq"), seq_col="seq"
         ).select(*STATE_COLS)
 
+    def _tail(self) -> dict:
+        """{key: Row(key, vector, metadata, ts) | None}: the changelog's
+        newest op per key (`_newest_ops`), read whole on the driver with
+        pyarrow, no Spark job; None for a key the tail deletes. Callers
+        hold it only while the log has at most KEY_SCOPED_MAX_KEYS ops."""
+        self.flush()
+        # as in _log(): only an absent (or emptied) log reads as empty
+        log = read_local_parquet(self._log_dir, LOG_SCHEMA) if self._log_file_count() else []
+        return _newest_ops(log)
+
     def _rows_for_keys(self, keys) -> dict:
         """{key: Row(key, vector, metadata, ts)} of the live keys among
         `keys` — state() resolved for those keys only, on the driver
         with no Spark job: the snapshot rows and the changelog rows of
         the keys are read with pyarrow (localrel.read_local_parquet,
-        row groups pruned by their key statistics), then, per key, the
-        newest changelog row by (ts, seq) wins over the snapshot row and
-        drops the key unless it is a PUT — changelog.compact's rules,
-        nulls lowest as in its descending window. At most
+        row groups pruned by their key statistics), and a key's newest
+        changelog op (`_newest_ops`) wins over its snapshot row. At most
         KEY_SCOPED_MAX_KEYS keys."""
         keys = {str(k) for k in keys}
         if not keys:
@@ -451,24 +504,13 @@ class VectorStore:
             if v >= 0 else []
         )
         # as in _log(): only an absent (or emptied) log reads as empty
-        log = (
+        tail = _newest_ops(
             read_local_parquet(self._log_dir, LOG_SCHEMA, "key", keys)
             if self._log_file_count() else []
         )
-
-        def order(r):
-            # F.desc sorts nulls last, so a null ts or seq loses
-            return (r["ts"] is not None, r["ts"] or 0,
-                    r["seq"] is not None, r["seq"] or 0)
-
-        newest = {}
-        for r in log:
-            if r["key"] not in newest or order(r) > order(newest[r["key"]]):
-                newest[r["key"]] = r
-        out = {r["key"]: r for r in snap if r["key"] not in newest}
-        # compact keeps op != DELETE, which is null (dropped) for a null op
-        out.update((k, r) for k, r in newest.items() if r["op"] not in (None, OP_DELETE))
-        return {k: Row(**{c: r[c] for c in STATE_COLS}) for k, r in out.items()}
+        out = {r["key"]: _state_row(r) for r in snap if r["key"] not in tail}
+        out.update((k, r) for k, r in tail.items() if r is not None)
+        return out
 
     def state_as_of(self, ts: int) -> DataFrame:
         """Time-travel read — the store form of
@@ -526,36 +568,74 @@ class VectorStore:
     ) -> DataFrame:
         """k-NN over live state (O4-O7), with the declared-but-dead
         metadata filter and threshold implemented for real
-        (src/vector_db.thrift:26-27). Ascending squared-L2 scores.
+        (src/vector_db.thrift:26-27). Ascending squared-L2 scores,
+        ties broken by key; the answer is a local DataFrame (collecting
+        it runs no Spark job).
 
-        `include_payload=True` returns vector+metadata like the
+        The state is read in its two parts on disk, as the reference
+        searches its index and then drops a small deleted-id set
+        (src/datanode/handler.py:378-380): ONE Spark job takes the
+        snapshot's top k+T (T = the changelog's key count) with the
+        filter and threshold pushed into the scan, and the driver
+        merges the changelog tail (`_tail`): it drops the snapshot rows
+        the tail supersedes, scores the tail's live rows
+        (knn_exact_local) and keeps the first k. At most T of the k+T
+        rows are superseded, so this is exactly knn_exact over state().
+        A changelog of more than KEY_SCOPED_MAX_KEYS ops is not held on
+        the driver: knn_exact then runs over state().
+
+        `include_payload=True` also returns vector+metadata like the
         reference's SearchResult.vectors (src/datanode/handler.py:
-        382-399) — but hydrated by a join AFTER the top-k, so only k
-        rows ever carry the payload. The reference hydrates every
-        candidate before truncation (src/datanode/handler.py:399); at
-        512-d that difference is the scan's entire payload bandwidth."""
-        state = self.state()
+        382-399), carried through the k+T rows of the top-k: the
+        reference hydrates every candidate before truncation
+        (src/datanode/handler.py:399), which at 512-d is the scan's
+        entire payload bandwidth."""
         pred = None
         for k_, v_ in (filter or {}).items():
             clause = F.col("metadata")[k_] == v_
             pred = clause if pred is None else (pred & clause)
-        top = knn_exact(
-            state,
-            query_vector,
-            k=top_k,
-            key_col="key",
-            vec_col="vector",
-            predicate=pred,
-            threshold=threshold,
-            extra_cols=(),
+        if self._log_op_count() > KEY_SCOPED_MAX_KEYS:
+            base, tail = self.state(), {}
+        else:
+            # the tail first: its flush may auto-compact into a new snapshot
+            tail = self._tail()
+            base = self._base() if latest_version(self._snap_dir) >= 0 else None
+        k = _effective_k(top_k)
+        payload = ("vector", "metadata") if include_payload else ()
+        top = [] if base is None else knn_exact(
+            base, query_vector, k=k + len(tail), key_col="key", vec_col="vector",
+            predicate=pred, threshold=threshold, extra_cols=payload,
+        ).collect()
+        hits = [
+            (r["key"], r["score"], *(r[c] for c in payload))
+            for r in top if r["key"] not in tail
+        ]
+        live = {
+            key: r for key, r in tail.items()
+            if r is not None
+            # the Spark filter's null semantics: a None value keeps nothing
+            and all(
+                v_ is not None and (r["metadata"] or {}).get(k_) == v_
+                for k_, v_ in (filter or {}).items()
+            )
+        }
+        hits += [
+            (key, score, *(live[key][c] for c in payload))
+            for key, score in knn_exact_local(
+                live.values(), query_vector, k, "key", "vector", threshold
+            )
+        ]
+        return self._answer(
+            rank_local(hits, k), PAYLOAD_SCHEMA if include_payload else ANSWER_SCHEMA
         )
-        if not include_payload:
-            return top
-        return (
-            top.join(state.select("key", "vector", "metadata"), "key")
-            .select("key", "score", "vector", "metadata")
-            .orderBy("score", "key")
-        )
+
+    def _answer(self, rows: list[tuple], schema: str) -> DataFrame:
+        """Driver-held answer rows as a LocalTableScan, which a collect
+        reads with no Spark job. An empty local_df would be an RDD scan
+        (a job); its limit(0) plans an empty local relation instead."""
+        if rows:
+            return local_df(self.spark, rows, schema)
+        return self.spark.createDataFrame([], schema).limit(0)
 
     def scan(self) -> DataFrame:
         """Full scan (the declared get_all_vectors RPC,
@@ -593,11 +673,12 @@ class VectorStore:
     # index_append() assigns a new batch to the EXISTING centroids
     # with ann.ivf_assign (no retrain, cost O(batch) — the incremental
     # path, same contract as minhash_lsh_pairs_incremental);
-    # index_search() probes the pruned partitions and semi-joins live
-    # state so tombstoned keys never surface. A key re-put after
-    # indexing returns its indexed vector until the next
-    # index_append/rebuild — the same staleness window the reference's
-    # rebuild cadence accepts.
+    # index_search() probes the pruned partitions for a proposal ranked
+    # on the indexed vectors, and live state disposes (_dispose):
+    # tombstoned keys never surface and every key scores on its current
+    # vector. Only the routing is stale — a key re-put without an
+    # index_append sits in its old cell until the next rebuild, the
+    # staleness window the reference's rebuild cadence accepts.
 
     REBUILD_EVERY = 200_000  # reference cadence (src/datanode/handler.py:313)
 
@@ -666,13 +747,7 @@ class VectorStore:
                 vectors, n_centroids=n_centroids, seed=seed
             )
         v = latest_version(data_dir) + 1
-        # igen = index generation (epoch ms at write): lets index_search
-        # deterministically prefer the newest row when appends re-wrote a key
-        ivf_write(
-            assigned.withColumn("igen", F.lit(int(time.time() * 1000))),
-            f"{data_dir}/v={v}",
-            centroids=centroids,
-        )
+        ivf_write(assigned, f"{data_dir}/v={v}", centroids=centroids)
         # an uncommitted v=N left by a crashed rebuild may hold a meta
         # file already: replace it, as the layout write above does
         shutil.rmtree(f"{meta_dir}/v={v}", ignore_errors=True)
@@ -710,9 +785,7 @@ class VectorStore:
             F.col("key").cast("string").alias("key"),
             F.col("vector").cast("array<double>").alias("embedding"),
         ).filter(F.col("embedding").isNotNull())
-        assigned = ivf_assign(batch, centroids).withColumn(
-            "igen", F.lit(int(time.time() * 1000))
-        )
+        assigned = ivf_assign(batch, centroids)
         assigned.write.mode("append").partitionBy("centroid_id").parquet(path)
 
     def index_search(
@@ -723,47 +796,80 @@ class VectorStore:
         predicate=None,
         selectivity: float | None = None,
     ) -> DataFrame:
-        """ANN search over the persisted IVF layout: driver ranks the
-        (tiny) quantizer, the scan is partition-PRUNED to nprobe
-        directories, and candidates are semi-joined against live state
-        so deleted keys are excluded (src/datanode/handler.py:378-380)
-        — never a full-corpus scan.
+        """ANN search over the persisted IVF layout: the driver ranks
+        the (tiny) quantizer, the scan is partition-PRUNED to nprobe
+        directories — never a full-corpus scan — and the probed cells
+        PROPOSE the OVERFETCH·top_k rows nearest on their indexed
+        vectors (one Spark job); live state DISPOSES (_dispose): deleted
+        keys drop out (src/datanode/handler.py:378-380) and the rest
+        score on their current vectors. Like hnsw_search, it returns
+        fewer than top_k rows when proposed keys are dead.
 
         `predicate` (Column over state's key/metadata) = FILTERED ANN:
-        the live-state semi-join carries the filter, and the probe
-        widens with the filter's selectivity (ann.ivf_probe), so the
-        candidate depth survives while scanned-row cost stays ~ nprobe
-        x cell_size, because the filter prunes each probed cell by the
-        same factor. Pass `selectivity` when known; None estimates it
-        with two counts of the resolved state."""
+        the live rows carry the filter, and both the probe (ann.ivf_probe)
+        and the proposal widen with the filter's selectivity — the
+        proposal by ceil(1/selectivity) — so the candidate depth
+        survives the filter. Pass `selectivity` when known; None
+        estimates it in one Spark job (ann.predicate_selectivity) over
+        the snapshot and the changelog's PUT rows — an estimate: a key
+        written twice counts twice. A proposal wider than
+        KEY_SCOPED_MAX_KEYS takes every probed row."""
         from distributed_vector_database_spark.operators import ann
 
         path, centroids = self._index_layout()
-        if predicate is not None and selectivity is None:
-            selectivity = ann.predicate_selectivity(self.state(), predicate)
+        width = OVERFETCH * _effective_k(top_k)
+        if predicate is not None:
+            if selectivity is None:
+                written = self._log().filter(F.col("op") == OP_PUT).select(*STATE_COLS)
+                selectivity = ann.predicate_selectivity(
+                    self._base().unionByName(written), predicate
+                )
+            width *= math.ceil(1 / selectivity) if selectivity > 0 else math.inf
         probe_ids = ann.ivf_probe(
             centroids, query_vector, nprobe,
             selectivity=selectivity if predicate is not None else None,
         )
         cand = ann.ivf_read_probe(self.spark, path, probe_ids)
-        # a re-put key can sit in several index writes: keep the row from
-        # the newest index generation (igen); exact vector freshness for
-        # keys re-put WITHOUT an index_append is restored at rebuild
-        from pyspark.sql.window import Window as _W
+        if width <= KEY_SCOPED_MAX_KEYS:
+            cand = knn_exact(
+                cand, query_vector, k=width, key_col="key", vec_col="embedding",
+                extra_cols=(),
+            )
+        return self._dispose(cand, width, query_vector, top_k, predicate)
 
-        w = _W.partitionBy("key").orderBy(F.desc("igen"))
-        cand = (
-            cand.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn", "igen")
+    def _dispose(
+        self,
+        proposed: DataFrame,
+        width: int | float,
+        query_vector: Sequence[float],
+        top_k: int,
+        predicate,
+    ) -> DataFrame:
+        """The live half of an ANN search, shared by index_search and
+        hnsw_search: the index proposed `proposed`'s keys (at most
+        `width`), and live state disposes — deleted keys drop out,
+        `predicate` filters the live rows, and the exact top_k is taken
+        on current vectors. Up to KEY_SCOPED_MAX_KEYS keys resolve on
+        the driver (_rows_for_keys), the predicate runs over their local
+        relation (Spark folds it into the relation: no job) and
+        knn_exact_local scores them, so the proposal's collect is the
+        only Spark job here; a wider proposal is semi-joined against
+        state() in Spark."""
+        if width > KEY_SCOPED_MAX_KEYS:
+            fresh = self.state().join(proposed.select("key"), "key", "left_semi")
+            if predicate is not None:
+                fresh = fresh.filter(predicate)
+            return knn_exact(
+                fresh, query_vector, k=top_k, key_col="key", vec_col="vector",
+                extra_cols=(),
+            )
+        rows = list(
+            self._rows_for_keys(r["key"] for r in proposed.select("key").collect()).values()
         )
-        live = self.state()
-        if predicate is not None:
-            live = live.filter(predicate)
-        cand = cand.join(live.select("key"), "key", "left_semi")
-        return knn_exact(
-            cand, query_vector, k=top_k, key_col="key", vec_col="embedding",
-            extra_cols=(),
+        if predicate is not None and rows:
+            rows = local_df(self.spark, rows, STATE_SCHEMA).filter(predicate).collect()
+        return self._answer(
+            knn_exact_local(rows, query_vector, top_k, "key", "vector"), ANSWER_SCHEMA
         )
 
     # -- HNSW index (the reference's native index kind) ---------------------
@@ -808,13 +914,12 @@ class VectorStore:
     ) -> DataFrame:
         """ANN search over the persisted HNSW graph: the index PROPOSES
         an over-fetched candidate pool (2k per the reference,
-        src/datanode/handler.py:364), live state DISPOSES — deleted keys
-        drop out and re-scoring uses current vectors. A pool of up to
-        KEY_SCOPED_MAX_KEYS keys is resolved alone against snapshot ∪
-        changelog on the driver (_rows_for_keys, no Spark job), without
-        resolving the rest of the corpus; a wider one is joined against
-        state(). ef >= shard rows makes the proposal exhaustive (exact
-        modulo the live-state resolution).
+        src/datanode/handler.py:364), live state DISPOSES (_dispose) —
+        deleted keys drop out and re-scoring uses current vectors. A
+        pool of up to KEY_SCOPED_MAX_KEYS keys is resolved and scored on
+        the driver, without resolving the rest of the corpus; a wider
+        one is semi-joined against state(). ef >= shard rows makes the
+        proposal exhaustive (exact modulo the live-state resolution).
 
         `predicate` filters the live rows on live-state columns
         (metadata map / key); the proposal widens by `filter_overfetch`
@@ -831,7 +936,9 @@ class VectorStore:
         v = latest_version(hnsw_dir)
         if v < 0:
             raise ValueError("no HNSW index built; call rebuild_hnsw_index() first")
-        width = OVERFETCH * top_k * (filter_overfetch if predicate is not None else 1)
+        width = OVERFETCH * _effective_k(top_k) * (
+            filter_overfetch if predicate is not None else 1
+        )
         cand = hnsw_read_search(
             self.spark,
             f"{hnsw_dir}/v={v}",
@@ -841,17 +948,7 @@ class VectorStore:
             vec_col="vector",
             ef=ef,
         )
-        if width <= KEY_SCOPED_MAX_KEYS:
-            rows = self._rows_for_keys(r["key"] for r in cand.select("key").collect())
-            fresh = local_df(self.spark, list(rows.values()), STATE_SCHEMA)
-        else:
-            fresh = cand.select("key").join(self.state(), "key")
-        if predicate is not None:
-            fresh = fresh.filter(predicate)
-        return knn_exact(
-            fresh, query_vector, k=top_k, key_col="key", vec_col="vector",
-            extra_cols=(),
-        )
+        return self._dispose(cand, width, query_vector, top_k, predicate)
 
     # -- maintenance --------------------------------------------------------
 

@@ -121,3 +121,18 @@ def cc_path(request, monkeypatch):
         10**12 if request.param == "one_task" else -1,
     )
     return request.param
+
+
+@pytest.fixture(params=["tail_on_driver", "state"])
+def search_path(request, monkeypatch):
+    """Runs the test once per store.search path: the snapshot job merged
+    with the changelog tail on the driver (every changelog fits
+    KEY_SCOPED_MAX_KEYS) and knn_exact over state() (none does)."""
+    from distributed_vector_database_spark import store
+
+    monkeypatch.setattr(
+        store,
+        "KEY_SCOPED_MAX_KEYS",
+        10**9 if request.param == "tail_on_driver" else -1,
+    )
+    return request.param

@@ -184,6 +184,23 @@ def test_ivf_filtered_search_selectivity_aware_probe(spark, tables, qvec):
     assert narrow.count() <= 10
 
 
+def test_predicate_selectivity_is_one_aggregate_job(spark, spark_jobs):
+    """The selectivity estimate counts the rows and the kept rows in one
+    aggregate job; a row the predicate maps to null is not kept, and an
+    empty frame keeps everything."""
+    import pyspark.sql.functions as F
+
+    from distributed_vector_database_spark.operators.ann import predicate_selectivity
+
+    df = spark.createDataFrame(
+        [(i, None if i % 5 == 0 else str(i % 2)) for i in range(40)], "id int, g string"
+    )
+    got = []
+    assert spark_jobs(lambda: got.append(predicate_selectivity(df, F.col("g") == "1"))) == 1
+    assert got == [16 / 40]
+    assert predicate_selectivity(df.limit(0), F.col("g") == "1") == 1.0
+
+
 def test_store_index_search_filtered(spark, tmp_path):
     """store.index_search(predicate=...) excludes non-matching and
     deleted keys, widening probes by measured selectivity."""
@@ -203,7 +220,7 @@ def test_store_index_search_filtered(spark, tmp_path):
     ).collect()
     keys = [r["key"] for r in got]
     assert keys and all(int(k[1:]) % 3 == 0 for k in keys)
-    assert "k3" not in keys  # deleted key filtered by live-state semi-join
+    assert "k3" not in keys  # a deleted key is dropped by the live-state dispose
 
 
 def test_ivf_knn_join_full_probe_equals_exact(tables):

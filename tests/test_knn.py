@@ -4,6 +4,7 @@ from pyspark.sql import functions as F
 
 from distributed_vector_database_spark.operators.knn import (
     knn_exact,
+    knn_exact_local,
     knn_join,
     knn_sharded,
 )
@@ -165,6 +166,40 @@ def test_null_vectors_excluded_not_ranked(spark):
     )
     res = knn_join(qs, emb, k=3).collect()
     assert [r["vec_id"] for r in res] == [1, 2]
+
+
+def test_knn_exact_local_equals_knn_exact(spark):
+    """The driver scorer gives knn_exact's (key, score) list exactly on
+    1,200 random 64-d rows: duplicate vectors tie and break by key,
+    squared distances whose 7th decimal is a rounding tie round as
+    Spark's round does (numpy's round differs on some of them), and a
+    null vector, a short vector and one with a null element are
+    handled as in Spark (dropped; scored null, which sorts first)."""
+    import random
+
+    from distributed_vector_database_spark.functions.localrel import local_df
+
+    rng = random.Random(13)
+    rows = [(f"r{i:04d}", [rng.gauss(0, 1) for _ in range(64)]) for i in range(1000)]
+    rows += [(f"dup{i:03d}", rows[i][1]) for i in range(150)]
+    # 1-d rows at distance x**2 from the origin, x**2 ending in 5 at the 7th decimal
+    ties = [2.5e-06, 0.0005, 1.0000005, 3.0000005, 12.3456785]
+    rows += [(f"t{i}", [t ** 0.5] + [0.0] * 63) for i, t in enumerate(ties)]
+    rows += [(f"u{i:02d}", [rng.uniform(0, 3)] + [0.0] * 63) for i in range(45)]
+    odd = [("null_vec", None), ("short", [0.0] * 63), ("null_elem", [None] + [0.0] * 63)]
+    schema = "vec_id string, embedding array<double>"
+    df = local_df(spark, rows, schema).unionByName(spark.createDataFrame(odd, schema))
+    dicts = [{"vec_id": k, "embedding": v} for k, v in rows + odd]
+    for q in ([rng.gauss(0, 1) for _ in range(64)], [0.0] * 64):
+        for k, threshold in ((len(dicts), None), (0, None), (40, 70.0)):
+            want = [
+                (r["vec_id"], r["score"])
+                for r in knn_exact(df, q, k=k, threshold=threshold, extra_cols=()).collect()
+            ]
+            assert knn_exact_local(dicts, q, k=k, threshold=threshold) == want
+    full = dict(knn_exact_local(dicts, [0.0] * 64, k=len(dicts)))
+    assert full["short"] is None and "null_vec" not in full
+    assert full["r0000"] == full["dup000"]
 
 
 def test_maxsim_matches_numpy_and_stays_topk(spark):

@@ -654,19 +654,16 @@ def test_put_batch_in_batch_duplicates_serve_the_last_occurrence(spark, indexed)
         assert {k: got[k] for k in v2} == {k: _sq(v, q) for k, v in v2.items()}
 
 
-def test_rows_for_keys_equals_state_on_a_random_op_sequence(spark, tmp_path):
-    """The key-scoped resolver and the corpus-wide state() agree for
-    every key ever written, over a seeded random sequence of puts,
-    deletes, delete-then-re-put, batches with in-batch duplicates, a
-    compact() in the middle, a zero-row changelog file from an empty
-    batch, ops still buffered (buffer_rows > 1), and imported reference
-    WAL lines without a timestamp (a null ts, which loses to any
-    timestamped op on its key) or without an op type."""
-    import glob
+def _random_op_sequence(spark, tmp_path):
+    """A seeded random sequence of puts, deletes, delete-then-re-put,
+    batches with in-batch duplicates, a compact() in the middle, a
+    zero-row changelog file from an empty batch, ops still buffered
+    (buffer_rows > 1), and imported reference WAL lines without a
+    timestamp (a null ts, which loses to any timestamped op on its key)
+    or without an op type. Yields (store, keys written, op kinds) after
+    each of its 14 random steps and once at the end."""
     import json
     import random
-
-    import pyarrow.parquet as pq
 
     schema = "key string, vector array<double>, metadata map<string,string>"
     rng = random.Random(6)
@@ -703,6 +700,7 @@ def test_rows_for_keys_equals_state_on_a_random_op_sequence(spark, tmp_path):
         written.add(k)
         if step == 7:
             s.compact()
+        yield s, written, ops
     # after the compact, so the null-ts rows stay in the changelog
     assert s.import_wal(str(tmp_path / "wal")) == len(wal)
     written.update({"w0", "w1", "w2", "w3"})
@@ -710,6 +708,18 @@ def test_rows_for_keys_equals_state_on_a_random_op_sequence(spark, tmp_path):
     if not s._buf:  # end with ops still buffered
         s.delete(keys[0])
         written.add(keys[0])
+    yield s, written, ops
+
+
+def test_rows_for_keys_equals_state_on_a_random_op_sequence(spark, tmp_path):
+    """The key-scoped resolver and the corpus-wide state() agree for
+    every key ever written, at the end of _random_op_sequence."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    for s, written, ops in _random_op_sequence(spark, tmp_path):
+        pass
     assert ops == {"put", "delete", "reput", "batch"}, ops
     # the key-scoped reads first: the first one flushes the buffer
     got = {k: s._rows_for_keys([k]) for k in sorted(written)}
@@ -720,6 +730,88 @@ def test_rows_for_keys_equals_state_on_a_random_op_sequence(spark, tmp_path):
     for k, rows in got.items():
         want = {k: state[k]} if k in state else {}
         assert {kk: r.asDict() for kk, r in rows.items()} == want, k
+
+
+def test_search_equals_knn_exact_over_state_on_a_random_op_sequence(spark, tmp_path, search_path):
+    """search returns knn_exact over state() row for row, scores and
+    tie order included, after every step of _random_op_sequence — with
+    no snapshot yet, with one, with ops still buffered and with null-ts
+    WAL rows — and on both of its paths: the snapshot job merged with
+    the changelog tail on the driver, and knn_exact over state(). Every
+    step makes every call: no filter, a filter dict (WAL rows carry no
+    metadata), a threshold, top_k 0 (which means 5), 1, 5 and more
+    than the live count, and include_payload. The expected rows are
+    knn_exact over all of state(), cut by the filter, the threshold and
+    k: a subset of its ordered rows is how knn_exact ranks that subset."""
+    from distributed_vector_database_spark.operators.knn import knn_exact
+
+    q = [4.0] * DIM
+    calls = [
+        {"top_k": 5},
+        {"top_k": 0, "filter": True},
+        {"top_k": 1, "threshold": 30.0},
+        {"top_k": 50, "include_payload": True},
+        {"top_k": 5, "filter": True, "threshold": 40.0, "include_payload": True},
+        {"top_k": 50, "filter": True},
+        {"top_k": 1, "include_payload": True},
+    ]
+
+    def call_kw(kw, step):
+        # a filter on a metadata value this step or the one before wrote
+        return {**kw, "filter": {"s": str(step - step % 2)}} if kw.get("filter") else kw
+
+    for step, (s, _, _) in enumerate(_random_op_sequence(spark, tmp_path)):
+        # the searches first: the first one flushes the buffered ops
+        got = [[tuple(r) for r in s.search(q, **call_kw(kw, step)).collect()] for kw in calls]
+        ranked = knn_exact(
+            s.state(), q, k=10**6, key_col="key", vec_col="vector",
+            extra_cols=("vector", "metadata"),
+        ).collect()
+        for kw, rows in zip(calls, got):
+            kw = call_kw(kw, step)
+            want = [
+                (r["key"], r["score"], *((r["vector"], r["metadata"]) if kw.get("include_payload") else ()))
+                for r in ranked
+                if (not kw.get("filter") or (r["metadata"] or {}).get("s") == kw["filter"]["s"])
+                and (kw.get("threshold") is None or r["score"] <= kw["threshold"])
+            ][: kw["top_k"] or 5]
+            assert rows == want, (step, kw)
+
+
+def test_search_refills_the_top_k_the_tail_supersedes(spark, tmp_path):
+    """The snapshot's k nearest rows are all overwritten or deleted in
+    the changelog: search still returns the true top k, taken from
+    deeper in the snapshot and from the tail."""
+    s = VectorStore(spark, str(tmp_path / "vs"), dim=DIM)
+    s.put_batch(spark.createDataFrame(
+        [(f"s{i}", [float(i), 0.0, 0.0, 0.0]) for i in range(10)],
+        "key string, vector array<double>",
+    ))
+    s.compact()
+    s.put("s0", [9.5, 0.0, 0.0, 0.0])
+    s.delete("s1")
+    s.put("t0", [2.5, 0.0, 0.0, 0.0])
+    got = [(r["key"], r["score"]) for r in s.search([0.0] * DIM, top_k=3).collect()]
+    assert got == [("s2", 4.0), ("t0", 6.25), ("s3", 9.0)]
+
+
+def test_index_search_disposes_on_live_state(spark, indexed):
+    """index_search proposes from the indexed vectors and disposes on
+    live state, with no index append or rebuild in between: a key
+    re-put with put scores on its current vector, a key deleted after
+    the build is excluded, and a key deleted and then re-put is
+    included, scored on its new vector."""
+    s = indexed
+    q = [30.0, 0.0, 0.0, 1.0]  # k30's indexed vector
+    s.put("k30", [30.0, 0.0, 0.5, 1.0])
+    s.delete("k31")
+    s.delete("k32")
+    s.put("k32", [30.0, 0.0, 0.0, 2.0])
+    got = {r["key"]: r["score"] for r in s.index_search(q, top_k=5, nprobe=10**9).collect()}
+    assert got["k30"] == 0.25 and got["k32"] == 1.0
+    assert "k31" not in got
+    for k, score in got.items():
+        assert score == _sq(s.get(k)["vector"], q), k
 
 
 def test_bad_batch_leaves_nothing_behind(spark, indexed):
@@ -757,7 +849,10 @@ def test_bad_batch_leaves_nothing_behind(spark, indexed):
 def test_store_verbs_run_only_the_jobs_their_answers_need(spark, indexed, spark_jobs, tmp_path):
     """Spark jobs per verb on a store with a snapshot, a changelog tail
     and both indexes: a point lookup and the rebuild cadence check run
-    no job (key-scoped resolution and footer counts on the driver),
+    no job (key-scoped resolution and footer counts on the driver), an
+    exact search runs one (the snapshot's top k; the tail merges on the
+    driver), an IVF search one (its proposal) and an HNSW search scores
+    on the driver,
     reads name their schemas (no inference or emptiness probes),
     put_batch evaluates its batch once, and put, delete and a buffered
     flush write from the driver without a Spark job."""
@@ -769,9 +864,10 @@ def test_store_verbs_run_only_the_jobs_their_answers_need(spark, indexed, spark_
     )
     assert spark_jobs(lambda: s.get("k1")) == 0
     assert spark_jobs(lambda: s.maybe_rebuild_index(threshold=10**9)) == 0
-    assert spark_jobs(lambda: s.search(q, top_k=5).collect()) <= 4
-    assert spark_jobs(lambda: s.index_search(q, top_k=5).collect()) <= 6
-    assert spark_jobs(lambda: s.hnsw_search(q, top_k=5).collect()) <= 4
+    assert spark_jobs(lambda: s.search(q, top_k=5).collect()) <= 1
+    assert spark_jobs(lambda: s.search(q, top_k=5, filter={"p": "1"}).collect()) <= 1
+    assert spark_jobs(lambda: s.index_search(q, top_k=5).collect()) <= 1
+    assert spark_jobs(lambda: s.hnsw_search(q, top_k=5).collect()) <= 3
     assert spark_jobs(lambda: s.put_batch(batch)) <= 9
     assert s.get("j1")["vector"] == [1.0, 1.0, 1.0, 1.0]
     # single-record writes reach the changelog from the driver
