@@ -186,7 +186,7 @@ def test_ivf_filtered_search_selectivity_aware_probe(spark, tables, qvec):
 
 def test_predicate_selectivity_is_one_aggregate_job(spark, spark_jobs):
     """The selectivity estimate counts the rows and the kept rows in one
-    aggregate job; a row the predicate maps to null is not kept, and an
+    Spark job; a row the predicate maps to null is not kept, and an
     empty frame keeps everything."""
     import pyspark.sql.functions as F
 

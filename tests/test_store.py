@@ -851,9 +851,9 @@ def test_store_verbs_run_only_the_jobs_their_answers_need(spark, indexed, spark_
     and both indexes: a point lookup and the rebuild cadence check run
     no job (key-scoped resolution and footer counts on the driver), an
     exact search runs one (the snapshot's top k; the tail merges on the
-    driver), an IVF search one (its proposal) and an HNSW search scores
-    on the driver,
-    reads name their schemas (no inference or emptiness probes),
+    driver), an IVF search one (its proposal), an HNSW search scores its
+    proposal on the driver, reads name their schemas (no inference or
+    emptiness probes),
     put_batch evaluates its batch once, and put, delete and a buffered
     flush write from the driver without a Spark job."""
     s = indexed
